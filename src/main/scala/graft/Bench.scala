@@ -1,10 +1,6 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
-import scala.jdk.CollectionConverters._
+import scala.collection.immutable.{TreeMap, VectorMap}
 
 /** Benchmark main (driver contract): run every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
@@ -31,96 +27,15 @@ import scala.jdk.CollectionConverters._
   */
 object Bench {
 
-  /** Sums TaskMetrics across every task that ends between reset() and
-    * snapshot(). Queries run one at a time, so the window attribution
-    * is exact once the listener bus is drained.
-    */
-  private final class TaskMetricsAgg extends SparkListener {
-    private val m = new ConcurrentHashMap[String, AtomicLong]()
-    private def cell(k: String) = m.computeIfAbsent(k, _ => new AtomicLong())
-    def reset(): Unit = m.clear()
-    def snapshot(): Map[String, Long] =
-      m.asScala.map { case (k, v) => k -> v.get }.toMap
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val tm = t.taskMetrics
-      if (tm != null) {
-        cell("tasks").addAndGet(1L)
-        cell("shuffle_read_b").addAndGet(tm.shuffleReadMetrics.totalBytesRead)
-        cell("shuffle_write_b").addAndGet(tm.shuffleWriteMetrics.bytesWritten)
-        cell("shuffle_rows").addAndGet(tm.shuffleWriteMetrics.recordsWritten)
-        cell("spill_mem_b").addAndGet(tm.memoryBytesSpilled)
-        cell("spill_disk_b").addAndGet(tm.diskBytesSpilled)
-        cell("input_b").addAndGet(tm.inputMetrics.bytesRead)
-        cell("input_rows").addAndGet(tm.inputMetrics.recordsRead)
-        cell("cpu_ms").addAndGet(tm.executorCpuTime / 1000000L)
-        cell("run_ms").addAndGet(tm.executorRunTime)
-        cell("gc_ms").addAndGet(tm.jvmGCTime)
-        cell("peak_mem_b").updateAndGet(p => math.max(p, tm.peakExecutionMemory))
-      }
-    }
-  }
-
-  /** Listener events are delivered async; flush them so snapshot() sees
-    * every task of the query that just finished. `listenerBus` is
-    * private[spark] in source but public in bytecode — reflection keeps
-    * this a dev-metrics concern with zero library-API footprint.
-    */
-  private def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
-    try {
-      val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get.invoke(sc)
-      bus.getClass.getMethods
-        .find(x => x.getName == "waitUntilEmpty" && x.getParameterCount == 0)
-        .get.invoke(bus)
-    } catch { case _: Throwable => Thread.sleep(500) }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val agg = new TaskMetricsAgg
-    def newSession(): SparkSession = {
-      // Partition count decouples from thread count for the scale
-      // sweeps: at 30× data under a small heap, partitions=cpus(4)
-      // puts a quarter of the corpus in one task — the spill-merge
-      // fan-in (one read-ahead buffer per spill file) then OOMs the
-      // heap regardless of plan quality. Since r15 the default is
-      // POLICY, not a hand-set knob: max(cpus, data-sized count from
-      // measured input bytes — engine.Partitioning). At the official
-      // sf0.1 this is exactly the old partitions = cpus (17 MiB of
-      // input → the cpus floor wins, so official numbers are
-      // unaffected); at 30×/100× the count grows with the corpus and
-      // the r14 sweep's hand-set 64 falls out as ~57/~178. The env
-      // override remains for explicit experiments.
-      val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-        math.max(cpus.toInt,
-          graft.engine.Partitioning.partitionsFor(
-            graft.engine.Partitioning.dirBytes(sfDir))).toString)
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", shufflePartitions)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s.sparkContext.addSparkListener(agg)
-      s
-    }
-    var spark = newSession()
-    // An executor-thread OutOfMemoryError in local mode kills the
-    // SHARED SparkContext (SparkUncaughtExceptionHandler), and every
-    // later row would then fail on "stopped SparkContext" — one bad
-    // query poisoning the rest of the pass (observed in the r14 30×
-    // sweep: dedup_components OOMed the 1 GiB heap and 25 healthy
-    // rows lost their measurement). The OOM row itself must stay LOUD
-    // in the artifact (it does — its error is recorded); the recovery
-    // below rebuilds the session so the remaining rows still measure.
-    def ensureLive(): Unit =
-      if (spark.sparkContext.isStopped) {
-        System.err.println("[bench] SparkContext died — rebuilding session for remaining queries")
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        spark = newSession()
-      }
+    val cpus = obs.cpus
+    var spark = obs.session(cpus, sfDir)
+    // One OOM row must not cost the rest of the pass its measurement
+    // (the r14 30x sweep: dedup_components OOMed the 1 GiB heap and 25
+    // healthy rows failed on the stopped context). The OOM row itself
+    // stays LOUD in the artifact: its error is recorded.
+    def ensureLive(): Unit = spark = obs.revive(spark, cpus, sfDir)
     // Codegen/JIT warmup: every query has its own generated code, and a
     // cold first run is dominated by compiling it (measured 5.3 s cold
     // vs 0.9 s warm for the shingle pipeline alone) — noise that says
@@ -141,7 +56,8 @@ object Bench {
       catch { case e: Throwable => System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
     }
     // One serialized timed pass over every selected query.
-    def timedPass(pass: Int): Seq[(String, Double, Map[String, Long], Option[String])] =
+    type Row = (String, Double, Map[String, Long], Option[String])
+    def timedPass(pass: Int): Seq[Row] =
       selected.map { case (name, fn) =>
         // Self-contained timing: no cached relation (several queries
         // .cache() by convention — customer_rfm base, components labels,
@@ -149,24 +65,17 @@ object Bench {
         // measurement. clearCache sits OUTSIDE the timed window.
         ensureLive()
         spark.catalog.clearCache()
-        agg.reset()
-        val t0 = System.nanoTime()
         // A failed query must be LOUD in the artifact: round 9 had nine
         // analysis failures run as ~0.05 s no-ops, which IMPROVED the
         // headline total while silently dropping ~6 s of real work.
-        val err: Option[String] =
+        val obs.Span(err, dt, tm) = obs.span(name) {
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            val cut = Option(e.getMessage).getOrElse(e.getClass.getName)
-              .linesIterator.take(2).mkString(" ").take(300)
-            // a 300-char cut can split a UTF-16 surrogate pair; trim to
-            // a code-point boundary so the JSON stays encodable
-            Some(if (cut.nonEmpty && Character.isHighSurrogate(cut.last)) cut.dropRight(1) else cut)
+            Some(Option(e.getMessage).getOrElse(e.getClass.getName)
+              .linesIterator.take(2).mkString(" ").take(300))
           }
-        val dt = (System.nanoTime() - t0) / 1e9
-        drainListenerBus(spark.sparkContext)
-        val tm = agg.snapshot()
+        }(spark)
         System.err.println(f"[bench p$pass] $name%-28s $dt%8.2f s  cpu=${tm.getOrElse("cpu_ms", 0L) / 1000.0}%7.1f s" +
           f"  shuf=${tm.getOrElse("shuffle_write_b", 0L) / 1048576.0}%8.1f MiB" +
           f"  spill=${tm.getOrElse("spill_disk_b", 0L) / 1048576.0}%6.1f MiB" +
@@ -200,39 +109,11 @@ object Bench {
     // Single-pass mode emits ONLY queries_p1 — duplicating pass 1 into
     // a fabricated queries_p2 would show a reader two "passes" that
     // never both ran (ADVICE r14); the "timing" marker names the mode.
-    val passes = Seq("queries_p1" -> pass1) ++
-      (if (nPasses > 1) Seq("queries_p2" -> pass2) else Nil)
-    val passJson = passes.map { case (label, p) =>
-      "\"" + label + "\":" + p.map { case (k, v, _, _) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    }.mkString(",")
-    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val tmJson = results.map { case (k, _, tm, _) =>
-      "\"" + k + "\":" + tm.toSeq.sortBy(_._1)
-        .map { case (mk, mv) => "\"" + mk + "\":" + mv }.mkString("{", ",", "}")
-    }.mkString("{", ",", "}")
-    // full JSON string escaping: backslash, quote, AND control chars
-    // (< 0x20 as \u00XX) — exception messages carry tabs/CRs that would
-    // otherwise make the errors map technically invalid JSON
-    def jstr(s: String) = s.foldLeft(new StringBuilder("\"")) { (sb, c) =>
-      c match {
-        case '\\' => sb.append("\\\\")
-        case '"' => sb.append("\\\"")
-        case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
-      }
-    }.append('"').toString
-    val failed = results.collect { case (k, _, _, Some(m)) => (k, m) }
-    val errJson = failed.map { case (k, m) => jstr(k) + ":" + jstr(m) }.mkString("{", ",", "}")
-    // A query that fails in exactly ONE pass is healed by best-of-2
-    // (the success is chosen), but the flake must stay LOUD in the
-    // audited artifact, not just stderr (ADVICE r13): per-pass error
-    // maps ride beside the per-pass durations.
-    val errPasses = Seq("errors_p1" -> pass1) ++
-      (if (nPasses > 1) Seq("errors_p2" -> pass2) else Nil)
-    val passErrJson = errPasses.map { case (label, p) =>
-      "\"" + label + "\":" + p.collect { case (k, _, _, Some(m)) => (k, m) }
-        .map { case (k, m) => jstr(k) + ":" + jstr(m) }.mkString("{", ",", "}")
-    }.mkString(",")
+    val passes = Seq(1 -> pass1) ++ (if (nPasses > 1) Seq(2 -> pass2) else Nil)
+    def seconds(p: Seq[Row], round: Double => Double = identity) =
+      VectorMap.from(p.map { case (k, v, _, _) => k -> round(v) })
+    def errors(p: Seq[Row]) = VectorMap.from(p.collect { case (k, _, _, Some(m)) => k -> m })
+    val failed = errors(results)
     val total = results.map(_._2).sum
     // "timing" marks the methodology IN the artifact (ADVICE r13):
     // cross-round readers must not attribute the best-of-2 vs
@@ -255,21 +136,26 @@ object Bench {
     try {
       val out = java.nio.file.Paths.get("target", "bench.json")
       java.nio.file.Files.createDirectories(out.getParent)
-      val full = s"""{"metric":"total","value":$total,"unit":"sec","timing":"$timing","queries":$qs,$passJson,$passErrJson,"task_metrics":$tmJson,"n_failed":${failed.size},"errors":$errJson,"sf":"$sfDir"}"""
+      val full = obs.json(Seq("metric" -> "total", "value" -> total, "unit" -> "sec",
+        "timing" -> timing, "queries" -> seconds(results)) ++
+        passes.map { case (i, p) => s"queries_p$i" -> seconds(p) } ++
+        passes.map { case (i, p) => s"errors_p$i" -> errors(p) } ++
+        Seq("task_metrics" -> VectorMap.from(results.map { case (k, _, tm, _) => k -> TreeMap.from(tm) }),
+          "n_failed" -> failed.size, "errors" -> failed, "sf" -> sfDir): _*)
       java.nio.file.Files.write(out, (full + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable => System.err.println(s"[bench] file write failed: ${e.getMessage}") }
     // errors ride along only while they fit a ~3.5 KB tail window
     // beside the rest of the line; a mass-failure round points at the
     // detail file instead of truncating mid-JSON
-    val errField = if (failed.size <= 3) errJson else "\"see detail\""
+    val head = Seq("metric" -> "total", "value" -> total, "unit" -> "sec", "timing" -> timing,
+      "n_queries" -> results.size, "n_failed" -> failed.size,
+      "errors" -> (if (failed.size <= 3) failed else "see detail"))
+    val tail = Seq("detail" -> "target/bench.json", "sf" -> sfDir)
+    System.err.println(obs.json(head ++ tail: _*))
     // 0.1 ms-rounded per-query seconds for the contract line (additions
     // only: every registry name stays; target/bench.json keeps full
     // precision)
-    val qsRounded = results
-      .map { case (k, v, _, _) => "\"" + k + "\":" + (math.rint(v * 10000) / 10000) }
-      .mkString("{", ",", "}")
-    System.err.println(s"""{"metric":"total","value":$total,"unit":"sec","timing":"$timing","n_queries":${results.size},"n_failed":${failed.size},"errors":$errField,"detail":"target/bench.json","sf":"$sfDir"}""")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","timing":"$timing","n_queries":${results.size},"n_failed":${failed.size},"errors":$errField,"queries":$qsRounded,"detail":"target/bench.json","sf":"$sfDir"}""")
+    println(obs.json(head ++ Seq("queries" -> seconds(results, v => math.rint(v * 10000) / 10000)) ++ tail: _*))
     spark.stop()
   }
 }

@@ -83,7 +83,7 @@ object Windows {
     * exchange itself runs during DataFrame CONSTRUCTION when AQE
     * finalizes the plan for `.rdd`, which the bench's timed window
     * includes (fn builds inside it). Cost: one external-Row
-    * conversion per row at the boundary, priced by the SkewEval
+    * conversion per row at the boundary, priced by the Legs `skew` leg
     * aggregate arms and the touched-row bench (BENCHNOTES r20).
     */
   private def rangedPid(df: DataFrame, rangeCols: Seq[Column],
@@ -232,7 +232,7 @@ object Windows {
     * flag-producer over EVERY row of its partition, so Spark's
     * WindowGroupLimit rescue never applies to the window form — at
     * 100 TB the `en` partition of a per-lang ntile is most of the
-    * corpus in ONE sorted task (the straggler family SkewEval
+    * corpus in ONE sorted task (the straggler family the Legs `skew` leg
     * measures); here it range-splits like any other group.
     * `sortCols` must totally order rows within a group.
     */

@@ -234,7 +234,7 @@ object Clusters {
     * factor of per-round edge rewriting for convergence that does not
     * depend on diameter at all.
     *
-    * Measured honestly (tools/ComponentsEval, BENCHNOTES r17): on
+    * Measured honestly (the Legs `components` leg, BENCHNOTES r17): on
     * THIS engine the propagation loop with its gated pointer jump
     * wins both adversarial shapes — 28.4 vs 192.0 s on a 10⁶-vertex
     * chain, 6.3 vs 11.5 s on a 10⁶-edge hub forest — because a star

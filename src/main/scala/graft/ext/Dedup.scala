@@ -44,17 +44,12 @@ object Dedup {
     * 2⁻⁶⁰·n² are irrelevant for dedup candidate generation.
     */
   /** Native expression (zero hex round-trip — see
-    * [[graft.functions.Hash60]]); value-identical to
-    * [[hash60Composed]], which the parity spec pins.
+    * [[graft.functions.Hash60]]); value-identical to the composed
+    * formulation the oracle SQL mirrors, `conv(substring(md5(s), 1,
+    * 15), 16, 10)`, which Hash60Spec pins (`ParityForms.hash60Composed`
+    * in the test sources).
     */
   def hash60(s: Column): Column = graft.functions.Hash60(s)
-
-  /** The composed built-in formulation the oracle SQL mirrors
-    * (`('0x' || substr(md5(s), 1, 15))::BIGINT` in DuckDB). Kept as
-    * the spec reference for the native expression.
-    */
-  def hash60Composed(s: Column): Column =
-    conv(substring(md5(encode(s, "UTF-8")), 1, 15), 16, 10).cast("long")
 
   /** Distinct 3-token-shingle hashes per document: (doc_id, sz, hs)
     * with `sz` = |shingle set| on every row. posexplode + two window
@@ -285,7 +280,7 @@ object Dedup {
     * table twice (once by doc_a, once by (doc_b, hs)) regardless of
     * candidate count — the guide-§8 move: decide with one row per
     * doc, not sz rows. ArrayIntersect hash-builds over primitive
-    * longs, so each pair costs O(sz_a + sz_b). Measured (PairsEval,
+    * longs, so each pair costs O(sz_a + sz_b). Measured (the Legs `pairs` leg,
     * checkpointed postings): 39.2 → 20.1 s at the 30× PERIOD=3 corpus,
     * 185.7 → 85.1 s at 100× — candidate generation (6.6 s at 30×) was
     * only ~1/5 of the draft's wall, the verify re-join was the rest.
@@ -422,7 +417,7 @@ object Dedup {
     * (df = a shingle's document frequency), so Σdf²/|posts| is the
     * join's fan-out per input row — the exact quantity whose growth
     * made the r20 100× PERIOD=3 legs superlinear. The crossover is
-    * MEASURED (SCALING.md "direct-vs-prefix policy"; PairsEval over
+    * MEASURED (SCALING.md "direct-vs-prefix policy"; the Legs `pairs` leg over
     * the materialized checkpoint, r21): the flat-df harness corpus
     * probes at fan-out 10.7 and the direct join wins ~2× (2.4 vs
     * 5.4 s — prefix pays its df build + rank + array verify for
@@ -1009,7 +1004,7 @@ object Dedup {
     * (p = 1 − arccos τ/π). Measured at the policy values: recall
     * 1.000 on planted near-dups at 30× (B=9/L=16) and 100×
     * (B=11/L=24), candidates/row flat at ≈ occ·L/2
-    * (tools/RebandEval.scala; BENCHNOTES r14). The fixed B=4/L=16
+    * (the Legs `reband` leg; BENCHNOTES r14). The fixed B=4/L=16
     * registry configuration stays the DRIVER CONTRACT at harness
     * scale — this helper is what a production deployment calls
     * instead:
@@ -1191,7 +1186,7 @@ object Dedup {
   // standalone so the gauge is independently oracle-replayable.
   // ------------------------------------------------------------------
   /** Parameterized standalone gauge (the registry row fixes the
-    * contract planes; tools/FunnelEval measures it at policy planes).
+    * contract planes; the Legs `funnel` leg measures it at policy planes).
     */
   def lshOccupancyOf(e: DataFrame, planes: Array[Array[Array[Double]]],
       maxBucket: Int = EmbMaxBucket): DataFrame =

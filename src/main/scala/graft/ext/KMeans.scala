@@ -118,7 +118,7 @@ object KMeans {
     *   val k = KMeans.semdedupParams(corpusRows)
     *   KMeans.semdedupPairs(KMeans.assignKAuto(e, k))
     * }}}
-    * Measured (tools/SemdedupEval, BENCHNOTES r15): formula-k turns
+    * Measured (the Legs `semdedup` leg, BENCHNOTES r15): formula-k turns
     * the fixed-k superlinear wall into ~linear growth at 30× and
     * 100× with published pairs identical at 1× (k(2000) = 5 = K).
     * Recall position, stated honestly (planted-twin protocol):
@@ -258,7 +258,7 @@ object KMeans {
   // coarse-cell count the routing is complete and the result is
   // VALUE-IDENTICAL to assignK (ExtSpec pins it); planted-twin recall
   // at the default nProbe = 2 is measured at 30×/100× by
-  // tools/SemdedupEval (BENCHNOTES r16).
+  // the Legs `semdedup` leg (BENCHNOTES r16).
   // ------------------------------------------------------------------
 
   /** Coarse cells for a k-centroid codebook: ⌈√k⌉. */
@@ -430,7 +430,7 @@ object KMeans {
     * cells from one side re-co-locates the pair without paying a
     * second Lloyd round. Trade: within-cluster membership doubles, so
     * the pair grid's per-cluster mass grows ~(probes)² — the
-    * measurement (tools/SemdedupEval mode "planted", BENCHNOTES r16)
+    * measurement (the Legs `semdedup` leg, mode "planted", BENCHNOTES r16)
     * decides which dial wins. Output: one row per (vec, probed
     * cluster), probe_rank 0-based; rank 0 restricted ≡ [[assignWith]]
     * (ExtSpec pin).
@@ -460,7 +460,7 @@ object KMeans {
   /** [[semdedupPairsProbe]] with two-level routing end to end
     * (training round, assignment, and the top-P dial all n·√k) — the
     * formula-k production multi-probe; measured beside the flat forms
-    * by tools/SemdedupEval (tag `_2lmp2`).
+    * by the Legs `semdedup` leg (tag `_2lmp2`).
     */
   def semdedupPairsProbeTwoLevel(e: DataFrame, k: Int, probes: Int = 2,
       nProbe: Int = 2, shards: Int = SemDedupShards): DataFrame =
@@ -581,7 +581,7 @@ object KMeans {
   /** The sharded within-cluster pair scorer over any assignment
     * relation (cluster, vec_id, embedding, …) — shared by the fixed-k
     * registry row and the [[semdedupParams]] formula-k production
-    * path (tools/SemdedupEval measures both at 30×/100×).
+    * path (the Legs `semdedup` leg measures both at 30×/100×).
     */
   def semdedupPairs(a: DataFrame, shards: Int = SemDedupShards): DataFrame =
     pairGrid(a, shards).orderBy("cluster", "id_a", "id_b")

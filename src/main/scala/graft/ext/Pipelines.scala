@@ -179,7 +179,7 @@ object Pipelines {
   // Scale notes: ONE partial-aggregated shuffle, no window. The former
   // `row_number over lang` form needed every row of a group in one
   // sorted task — at 100 TB the `en` group is most of the corpus in
-  // ONE straggler (the r17 SkewEval family). Here the whole published
+  // ONE straggler (the r17 straggler family, Legs `skew`). Here the whole published
   // row derives from a single groupBy(lang) carrying count(*) plus the
   // bounded TopKPairs heap (functions/TopKAggregate.scala): each map
   // task reduces its slice to ≤ DomainCap pairs, the shuffle moves
@@ -254,7 +254,7 @@ object Pipelines {
   // totals collapse to a ≤|langs|+partitions row offset table, and the
   // local window only ever sees one partition's slice of a group. The
   // former per-lang window form needed the whole `en` corpus in one
-  // sorted task at 100 TB (the r17 SkewEval straggler family).
+  // sorted task at 100 TB (the r17 straggler family, Legs `skew`).
   // ------------------------------------------------------------------
   val PackBudget = 2048
 
@@ -498,7 +498,7 @@ object Pipelines {
   // `sum over (partition by qbin)` window would sort in ONE task (the
   // r18 VERDICT finding); groupedPrefixSum range-splits a mega-bin
   // across partitions exactly like corpus_packed's per-lang sum
-  // (SkewEval's `bin_waterline` arm measures the two forms on a
+  // (the Legs `skew` leg's `bin_waterline` arm measures the two forms on a
   // planted mega-bin). The gate thresholds the RAW score (the
   // CorpusPipeline lesson) before quantizing, and every arithmetic op
   // is exact IEEE (+,*,/,least), so both engines quantize
@@ -1034,7 +1034,7 @@ object Pipelines {
   // `ntile over (partition by lang)` window: ntile flags EVERY row of
   // its partition (no WindowGroupLimit rescue possible), so the
   // window form sorts each language in ONE task — at 100 TB the `en`
-  // partition is most of the corpus in a single straggler (SkewEval's
+  // partition is most of the corpus in a single straggler (the Legs `skew` leg's
   // `lang_ntile` arm measures the two forms on a planted mega-lang).
   // groupedNtile range-splits the hot lang across partitions and
   // broadcasts only |langs| counts + per-(partition, lang) offsets.

@@ -31,22 +31,12 @@ import graft.queries.Inventory.Q
 object Similarity {
 
   /** Cosine similarity of two float-array columns, in double — the
-    * native codegen'd expression (one fused loop per row).
+    * native codegen'd expression (one fused loop per row). The
+    * higher-order-function composition it is pinned against
+    * bit-for-bit lives in the test sources (`ParityForms.cosineHof`).
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSimilarity(a, b)
-
-  /** The same computation composed from built-in higher-order
-    * functions. Kept as the reference implementation the native
-    * expression is asserted against (identical accumulation order ⇒
-    * bit-identical doubles); interpreted, so NOT the hot path.
-    */
-  def cosineHof(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column): Column =
-      aggregate(zip_with(x, y, (p, q) => p.cast(DoubleType) * q.cast(DoubleType)),
-        lit(0.0), (acc, v) => acc + v)
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-  }
 
   private def emb(s: SparkSession, d: String): DataFrame =
     graft.queries.Inventory.rebalanced(s.read.parquet(s"$d/embeddings.parquet"), "vec_id")
@@ -61,7 +51,8 @@ object Similarity {
     * to ≤ k pairs before the shuffle, so the exchange carries
     * k·partitions rows regardless of candidate count. Ties break
     * toward the smaller neighbor_id in both formulations; a spec
-    * asserts they agree row-for-row.
+    * asserts they agree row-for-row with the window formulation
+    * (`ParityForms.rankTopKWindow` in the test sources).
     */
   private[graft] def rankTopK(scored: DataFrame): DataFrame =
     scored
@@ -71,22 +62,6 @@ object Similarity {
       .select(col("q_id"), col("p.id").as("neighbor_id"), col("p.score").as("sim"),
         (col("pos") + lit(1)).cast("int").as("rnk"))
       .orderBy("q_id", "rnk")
-
-  /** The window-based formulation, kept as the reference the aggregate
-    * path is asserted against. NaN AND NULL scores are filtered first:
-    * Spark's ORDER BY desc sorts NaN as LARGEST and still ranks NULLs
-    * (last), while [[graft.functions.TopKPairs]] drops both in
-    * `update()` — the shared filter keeps the two formulations
-    * agreeing by construction even when a query has fewer than k
-    * scoreable candidates.
-    */
-  private[graft] def rankTopKWindow(scored: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    scored.filter(col("sim").isNotNull && !isnan(col("sim")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= TopK)
-      .orderBy("q_id", "rnk")
-  }
 
   // ------------------------------------------------------------------
   // Brute-force cosine top-k, oracle-verified. Rounding to 6 dp before
@@ -405,8 +380,8 @@ object Similarity {
 
   /** Bucket key of `v` under one table's planes: sign bits packed into
     * a long — the native [[graft.functions.LshBucket]] expression
-    * (r22). The previous composed form (kept below as the spec
-    * reference, the hash60Composed pattern) inlined B fused cosine
+    * (r22). The previous composed form (kept as the spec reference
+    * `ParityForms.lshBucketOfComposed` in the test sources) inlined B fused cosine
     * loops per table into the grid projection's single generated
     * method; at L·B grids in the 64–150-plane range that method is too
     * big for the JVM JIT to compile (8 000-bytecode refusal) yet under
@@ -419,17 +394,6 @@ object Similarity {
     */
   def lshBucketOf(v: Column, tablePlanes: Array[Array[Double]]): Column =
     graft.functions.LshBucket(v, tablePlanes)
-
-  /** The composed built-in formulation [[lshBucketOf]] replaced — the
-    * spec reference ExtSpec pins the native expression against (and
-    * the shape the oracle SQL mirrors: sign of the dot, since cosine
-    * and dot share their sign under positive norms).
-    */
-  def lshBucketOfComposed(v: Column, tablePlanes: Array[Array[Double]]): Column =
-    tablePlanes.indices.map(b =>
-      when(graft.functions.CosineSimilarity(v, typedLit(tablePlanes(b).toSeq)) > 0,
-        lit(1L << b)).otherwise(lit(0L)))
-      .reduce(_.bitwiseOR(_))
 
   /** Bucket key of `v` in ANN table `t`. */
   def lshBucket(v: Column, t: Int): Column = lshBucketOf(v, hyperplanes(t))

@@ -47,6 +47,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
 case class LshBucket(child: Expression, planes: Array[Array[Double]])
     extends UnaryExpression {
 
+  // bucketOf's null collapse returns 0L at the first plane whose scored
+  // prefix holds a null, which equals the composed form only when every
+  // plane scores the same prefix: all planes must share one length
+  require(planes.forall(_.length == planes.head.length),
+    s"lsh_bucket planes must share one length, got ${planes.map(_.length).distinct.mkString(", ")}")
+
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(

@@ -960,7 +960,7 @@ object Inventory {
   // pin that Spark's own rewrite makes THIS shape scale-safe — the
   // GroupLimit fires only for rank-then-FILTER; a rank flag consumed
   // downstream (the pre-r18 pipeline_domain_cap) gets no rescue and
-  // must use Windows.topKPerGroup instead (SkewEval r18: 44.9 s
+  // must use Windows.topKPerGroup instead (Legs `skew`, r18: 44.9 s
   // window vs 0.86 s heap on a 4×10⁷-row planted lang). The two rows
   // together document exactly where the optimizer's safety net ends.
   // ------------------------------------------------------------------

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev helper: print the physical plan of the named registry queries
   * at sf0.001 (PLANS.md is assembled from this output).
   *
@@ -18,15 +16,8 @@ object DumpPlans {
       if (args.length > 1 && args(1) == "formatted")
         org.apache.spark.sql.execution.FormattedMode
       else org.apache.spark.sql.execution.SimpleMode
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
+    val spark = graft.obs.session(graft.obs.cpus, d)
     names.foreach { n =>
       println(s"===== $n =====")
       println(graft.SparkEntry.queries(n)(spark, d).queryExecution.explainString(mode))

@@ -17,7 +17,7 @@ class CosineSimilaritySpec extends SparkSpec {
     val pairs = a.crossJoin(b).filter(col("ia") < col("ib"))
     val diffs = pairs.select(
       Similarity.cosine(col("va"), col("vb")).as("native"),
-      Similarity.cosineHof(col("va"), col("vb")).as("hof"))
+      ParityForms.cosineHof(col("va"), col("vb")).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(diffs.isEmpty)
   }

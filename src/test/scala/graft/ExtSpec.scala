@@ -520,7 +520,7 @@ class ExtSpec extends SparkSpec {
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"), sim.as("sim"))
     val viaAgg = Similarity.rankTopK(scored).collect().map(_.toString).toSeq
-    val viaWindow = Similarity.rankTopKWindow(scored).collect().map(_.toString).toSeq
+    val viaWindow = ParityForms.rankTopKWindow(scored).collect().map(_.toString).toSeq
     assert(viaAgg === viaWindow)
     assert(viaAgg.nonEmpty)
   }
@@ -615,7 +615,7 @@ class ExtSpec extends SparkSpec {
       planes.indices.foreach { t =>
         val diff = e.select(
           Similarity.lshBucketOf(col("embedding"), planes(t)).as("native"),
-          Similarity.lshBucketOfComposed(col("embedding"), planes(t)).as("composed"))
+          ParityForms.lshBucketOfComposed(col("embedding"), planes(t)).as("composed"))
           .filter(col("native") =!= col("composed") ||
             col("native").isNull =!= col("composed").isNull)
           .collect()
@@ -633,7 +633,7 @@ class ExtSpec extends SparkSpec {
       (3L, None)).toDF("vec_id", "embedding")
     val got = edge.select(col("vec_id"),
       Similarity.lshBucketOf(col("embedding"), Dedup.embPlanes(0)).as("native"),
-      Similarity.lshBucketOfComposed(col("embedding"), Dedup.embPlanes(0)).as("composed"))
+      ParityForms.lshBucketOfComposed(col("embedding"), Dedup.embPlanes(0)).as("composed"))
       .orderBy("vec_id").collect()
     got.foreach { r =>
       assert(r.isNullAt(1) === r.isNullAt(2), s"null divergence: $r")
@@ -642,6 +642,13 @@ class ExtSpec extends SparkSpec {
     assert(got(0).getLong(1) === (1L << Dedup.EmbBits) - 1, "empty vector: NaN cosines set every bit")
     assert(got(1).getLong(1) === 0L, "null element: nulled cosines contribute 0")
     assert(got(2).getLong(1) === 0L, "null vector: when(null) falls to otherwise(0) -> bucket 0")
+  }
+
+  test("LshBucket rejects planes of differing lengths") {
+    // its null collapse assumes every plane scores the same prefix
+    val ragged = Array(Array(1.0, 0.0, 0.0), Array(1.0, 0.0))
+    intercept[IllegalArgumentException](Similarity.lshBucketOf(col("embedding"), ragged))
+    Similarity.lshBucketOf(col("embedding"), Array.empty[Array[Double]])
   }
 
   test("bucketed embedding LSH dedup is a subset of exact pairs with high recall") {
@@ -947,7 +954,7 @@ class ExtSpec extends SparkSpec {
     // must reproduce the oracle-contract output exactly when the
     // formula lands on k = K — the identity that licenses quoting the
     // fixed-k driver row as the 1x baseline of the k-policy sweep
-    // (tools/SemdedupEval). assignK's argmax-by-aggregation and
+    // (the Legs `semdedup` leg). assignK's argmax-by-aggregation and
     // assign's argmax-by-window must agree on every row, including
     // ties (6-dp csim grid, smaller-cluster tiebreak).
     val e = graft.queries.Inventory.rebalanced(

@@ -17,7 +17,7 @@ class Hash60Spec extends SparkSpec {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
     val diffs = docs.select(
       Dedup.hash60(col("text")).as("native"),
-      Dedup.hash60Composed(col("text")).as("composed"))
+      ParityForms.hash60Composed(col("text")).as("composed"))
       .filter(col("native") =!= col("composed"))
     assert(diffs.isEmpty)
   }
@@ -29,7 +29,7 @@ class Hash60Spec extends SparkSpec {
       "x" * 10000) ++ (0 until 500).map(i => s"probe-$i")
     val df = rows.toDF("s")
     val diffs = df.select(Dedup.hash60(col("s")).as("native"),
-      Dedup.hash60Composed(col("s")).as("composed"))
+      ParityForms.hash60Composed(col("s")).as("composed"))
       .filter(col("native") =!= col("composed"))
     assert(diffs.isEmpty)
     // and every value is in [0, 2^60) — the oracle's BIGINT parse range
