@@ -14,10 +14,18 @@ import scala.collection.immutable.{TreeMap, VectorMap}
   * on a shared box is contaminated by whatever else runs (the round-8
   * official bench inflated carried queries 13–23× while a concurrent
   * session compiled; round 12 repeated the episode with a ~30 s
-  * starvation window over five ann_* rows); bytes shuffled/read and
-  * rows produced by a fixed plan are invariant under contention, and
-  * task CPU time nearly so — so round-over-round plan regressions stay
-  * adjudicable from the artifact alone even when wall is poisoned.
+  * starvation window over five ann_* rows); task, byte and row counts
+  * are far steadier than wall, and task CPU time nearly so — so
+  * round-over-round plan regressions stay adjudicable from the
+  * artifact alone even when wall is poisoned. The counts are NOT
+  * fixed per plan on every row: adaptive query execution re-plans
+  * as stages finish, and which stage finishes first varies between
+  * runs, so some rows run a different set of stages from run to run
+  * of the same commit. Over sf0.01 at 4 cores, `events_cohort_retention`
+  * reads tasks 11 or 12 and shuffle_rows 1060 or 1809, and
+  * `dedup_components_star` input_rows 1575 or 2075; with
+  * `spark.sql.adaptive.enabled=false` both repeat exactly. A per-row
+  * counter diff on these rows is not by itself a plan change.
   *
   * Timing runs TWO serialized passes and reports the per-query MIN
   * (standard best-of-N steady-state practice): transient external

@@ -42,34 +42,8 @@ final class DagRunner(
     sink: TableSink = new TableSink.Cached,
     maxParallelism: Int = 1) {
 
-  /** Kahn topo-sort over model-to-model edges; deterministic order
-    * (insertion-ordered among ready nodes); throws on cycles and on
-    * names that are neither models nor catalog tables.
-    */
-  def topoSort(models: Seq[Model]): Seq[Model] = {
-    val byName = models.map(m => m.name -> m).toMap
-    val indeg = mutable.LinkedHashMap(models.map(m => m.name -> 0): _*)
-    val out = mutable.Map.empty[String, List[String]].withDefaultValue(Nil)
-    for (m <- models; d <- m.deps if byName.contains(d)) {
-      indeg(m.name) += 1
-      out(d) ::= m.name
-    }
-    val ready = mutable.Queue(indeg.collect { case (n, 0) => n }.toSeq: _*)
-    val order = mutable.ArrayBuffer.empty[Model]
-    while (ready.nonEmpty) {
-      val n = ready.dequeue()
-      order += byName(n)
-      for (c <- out(n).reverse) {
-        indeg(c) -= 1
-        if (indeg(c) == 0) ready += c
-      }
-    }
-    if (order.size != models.size) {
-      val stuck = indeg.collect { case (n, d) if d > 0 => n }
-      throw new IllegalArgumentException(s"model DAG has a cycle involving: ${stuck.mkString(", ")}")
-    }
-    order.toSeq
-  }
+  /** [[DagRunner.topoSort]]. */
+  def topoSort(models: Seq[Model]): Seq[Model] = DagRunner.topoSort(models)
 
   /** Run the DAG in dependency waves. Within a wave no model depends
     * on another, so with `maxParallelism > 1` the wave's builds +
@@ -82,19 +56,13 @@ final class DagRunner(
     * sequential path.
     */
   def run(models: Seq[Model]): RunResult = {
-    val order = topoSort(models)
     val modelNames = models.map(_.name).toSet
     val built = mutable.LinkedHashMap.empty[String, DataFrame]
     val results = mutable.ArrayBuffer.empty[TestResult]
     val failedOrSkipped = mutable.Set.empty[String]
     val skipped = mutable.ArrayBuffer.empty[String]
 
-    // longest-path depth per model = its wave index
-    val depth = mutable.Map.empty[String, Int]
-    for (m <- order)
-      depth(m.name) =
-        m.deps.filter(modelNames.contains).map(d => depth(d) + 1).maxOption.getOrElse(0)
-    val waves = order.groupBy(m => depth(m.name)).toSeq.sortBy(_._1).map(_._2)
+    val waves = DagRunner.waveIndex(models).groupBy(_._2).toSeq.sortBy(_._1).map(_._2.map(_._1))
 
     /** Build + materialize + test one model (its deps are complete). */
     def process(m: Model): (String, DataFrame, Seq[TestResult]) = {
@@ -141,5 +109,50 @@ final class DagRunner(
       outcomes.collectFirst { case util.Failure(e) => e }.foreach(throw _)
     }
     RunResult(built.toMap, results.toSeq, skipped.toSeq)
+  }
+}
+
+object DagRunner {
+
+  /** Kahn topo-sort over model-to-model edges; deterministic order
+    * (insertion-ordered among ready nodes); throws on cycles, naming
+    * the models left unsorted. Deps that are not models are sources.
+    */
+  def topoSort(models: Seq[Model]): Seq[Model] = {
+    val byName = models.map(m => m.name -> m).toMap
+    val indeg = mutable.LinkedHashMap(models.map(m => m.name -> 0): _*)
+    val out = mutable.Map.empty[String, List[String]].withDefaultValue(Nil)
+    for (m <- models; d <- m.deps if byName.contains(d)) {
+      indeg(m.name) += 1
+      out(d) ::= m.name
+    }
+    val ready = mutable.Queue(indeg.collect { case (n, 0) => n }.toSeq: _*)
+    val order = mutable.ArrayBuffer.empty[Model]
+    while (ready.nonEmpty) {
+      val n = ready.dequeue()
+      order += byName(n)
+      for (c <- out(n).reverse) {
+        indeg(c) -= 1
+        if (indeg(c) == 0) ready += c
+      }
+    }
+    if (order.size != models.size) {
+      val stuck = indeg.collect { case (n, d) if d > 0 => n }
+      throw new IllegalArgumentException(s"model DAG has a cycle involving: ${stuck.mkString(", ")}")
+    }
+    order.toSeq
+  }
+
+  /** The execution schedule: every model in topo order with its wave
+    * index, the longest model-to-model dependency path from a source.
+    * No model depends on another of its wave.
+    */
+  def waveIndex(models: Seq[Model]): Seq[(Model, Int)] = {
+    val names = models.map(_.name).toSet
+    val depth = mutable.Map.empty[String, Int]
+    topoSort(models).map { m =>
+      depth(m.name) = m.deps.filter(names.contains).map(depth(_) + 1).maxOption.getOrElse(0)
+      m -> depth(m.name)
+    }
   }
 }

@@ -25,23 +25,7 @@ object Manifest {
   def manifest(spark: SparkSession, models: Seq[Model]): DataFrame = {
     import spark.implicits._
     val names = models.map(_.name).toSet
-    val depth = scala.collection.mutable.Map.empty[String, Int]
-    // DagRunner validates cycles before running, but manifest() is
-    // callable on its own — guard the recursion so a cyclic deps
-    // declaration is a named error, not a StackOverflowError.
-    val visiting = scala.collection.mutable.LinkedHashSet.empty[String]
-    def depthOf(m: Model): Int =
-      depth.getOrElse(m.name, {
-        if (!visiting.add(m.name))
-          throw new IllegalArgumentException(
-            s"dependency cycle: ${(visiting.toSeq.dropWhile(_ != m.name) :+ m.name).mkString(" -> ")}")
-        val d = m.deps.filter(names.contains)
-          .map(dep => depthOf(models.find(_.name == dep).get) + 1)
-          .maxOption.getOrElse(0)
-        visiting.remove(m.name)
-        depth.update(m.name, d)
-        d
-      })
+    val depth = DagRunner.waveIndex(models).map { case (m, d) => m.name -> d }.toMap
     models.map { m =>
       ModelInfo(
         name = m.name,
@@ -49,7 +33,7 @@ object Manifest {
           case Materialization.View  => "view"
           case Materialization.Table => "table"
         },
-        depth = depthOf(m),
+        depth = depth(m.name),
         deps = m.deps.filter(names.contains),
         sources = m.deps.filterNot(names.contains),
         tests = m.tests.map(_.name))

@@ -3,35 +3,65 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
 
 import graft.engine.Functions.{avgExact, roundPortable}
 import graft.queries.Inventory
 import graft.queries.Inventory.Q
 
-/** As-of (point-in-time) join: for each left row, attach the LATEST
-  * right row with the same key and `right.ts <= left.ts` — the shape
-  * every event pipeline needs to join facts to the dimension snapshot
-  * that was current when the event happened.
+/** As-of (point-in-time) join: for each left row, attach the right
+  * row with the same key that was current at the left row's time —
+  * the shape every event pipeline needs to join facts to the
+  * dimension snapshot that held when the event happened.
   *
   * Spark has no native as-of join; per the build rules this is
   * preference order (a): COMPOSED from existing operators rather than
-  * a custom plan. Both inputs are unioned with a side marker, and one
-  * ordered window per key forward-fills the right side's payload onto
-  * left rows (`last(_, ignoreNulls = true)`). At equal timestamps the
-  * right row sorts FIRST, so the match is inclusive (>=), matching
-  * DuckDB's `ASOF JOIN` semantics — which is exactly what the oracle
-  * uses.
+  * a custom plan. ONE function, [[asofJoin]], covers all four
+  * configurations — [[Backward]]/[[Forward]] × plain/bucketed:
+  *
+  *  - Direction. [[Backward]] takes the LATEST right row with
+  *    `right.ts <= left.ts` (the feature join); [[Forward]] the
+  *    EARLIEST with `right.ts >= left.ts` (the label join). The
+  *    argument has no default, so every call site names its
+  *    direction: a label join built where a feature join was meant
+  *    is leakage, and grep tells the two apart.
+  *  - Shared side order. Both inputs are unioned with a side marker
+  *    (carry 0 < right 1 < left 2, sorted ascending in both
+  *    directions) and one ordered window per key forward-fills the
+  *    right side's payload onto left rows (`last(_, ignoreNulls =
+  *    true)` over the running frame). `_ts` and `_payload` sort
+  *    ascending for Backward and descending for Forward: reversing
+  *    the order turns "first non-null at-or-after" into "last
+  *    non-null at-or-before", which the running frame computes
+  *    incrementally — Spark evaluates the literal unbounded-FOLLOWING
+  *    frame by re-scanning to the partition end, O(n²) per key
+  *    (measured 172 s at sf0.1 against ~2 s). ASC NULLS FIRST
+  *    reversed is DESC NULLS LAST, so the reversal is exact, ties
+  *    included. At equal timestamps the right row precedes the left
+  *    one, so the match is inclusive in both directions, matching
+  *    DuckDB's `ASOF JOIN` — which is exactly what the oracle uses.
+  *  - Carry block. With `bucketWidth = Some(w)` the window is
+  *    sub-keyed by the time bucket ⌊ts/w⌋, and each (key, bucket)
+  *    gets a CARRY pseudo-row holding the nearest right row of any
+  *    bucket before it in fill order (see [[asofJoin]]).
   *
   * Scale notes: ONE shuffle (hash-partition on the key) and a local
   * per-key sort — same cost as any window aggregation; no range
   * explosion, no broadcast requirement, works at any right-side
   * cardinality. Parallelism is bounded by |keys|; when one key
-  * dominates (or there are few keys), [[asofJoinBucketed]] sub-keys
-  * the window by time bucket for |keys|·|buckets| parallelism.
+  * dominates (or there are few keys), a bucket width sub-keys the
+  * window for |keys|·|buckets| parallelism.
   */
 object AsOf {
 
-  /** Internal column names both join variants claim for themselves. */
+  /** Which way [[asofJoin]] fills; deliberately without a default. */
+  sealed trait Direction
+  /** Latest right row at-or-before the left row: the feature join. */
+  case object Backward extends Direction
+  /** Earliest right row at-or-after the left row: the label join. */
+  case object Forward extends Direction
+
+  /** Internal column names the join claims for itself. */
   private val Reserved = Seq("_ts", "_side", "_payload", "_bucket")
 
   private def requireSafeNames(left: DataFrame, rightPayload: Seq[String]): Unit = {
@@ -43,18 +73,38 @@ object AsOf {
       s"right payload column(s) ${clash.mkString(", ")} collide with left columns; alias them first")
   }
 
-  /** Generic as-of join. `rightPayload` columns are forward-filled
-    * onto left rows; rows with no prior right match keep NULLs (drop
-    * them for inner semantics).
+  /** As-of join in `direction`. `rightPayload` columns are filled onto
+    * left rows; rows with no match keep NULLs (drop them for inner
+    * semantics).
     *
     * The payload is filled as ONE struct, not column-by-column: the
     * struct is non-null on every right row even when its fields are
-    * null, so (a) a NULL field in the latest right row stays NULL
-    * instead of leaking an older row's value, and (b) multi-column
+    * null, so (a) a NULL field in the matched right row stays NULL
+    * instead of leaking another row's value, and (b) multi-column
     * payloads are row-atomic — the fill can never stitch together
     * fields from different right rows. Equal-(ts) right rows are
-    * tie-broken by the payload struct itself, keeping the result
-    * deterministic under any partitioning.
+    * tie-broken by the payload struct itself (the greatest wins
+    * Backward, the least Forward), keeping the result deterministic
+    * under any partitioning.
+    *
+    * `bucketWidth` (skew hardening, for few or skewed keys — 4 event
+    * types on a 1000-executor cluster would otherwise use 4 tasks):
+    * rows land in bucket ⌊ts/width⌋ and the fill window partitions by
+    * (key, bucket). Within a bucket a left row sees the in-bucket
+    * right rows before it in fill order, plus one carry row: the
+    * per-(key, bucket) `max` (Backward) or `min` (Forward) of the
+    * (ts, payload) struct — the in-bucket tiebreak order — filled
+    * across buckets in fill order (bucket ascending/descending, frame
+    * (unboundedPreceding, −1): strictly earlier/later buckets). That
+    * fill is per key but over one summary row per non-empty bucket,
+    * never the raw rows, so it cannot become the skew bottleneck. The
+    * carry sits at the bucket's start (Backward) or end (Forward)
+    * instant with side 0, so an in-bucket right row at that exact
+    * instant still overrides it. The width is in the ts column's
+    * native unit (microseconds for timestamps, raw units for
+    * numerics); pick it so a bucket holds roughly rows/desired-tasks
+    * rows — the result does not depend on it, which PropertySpec
+    * checks against a plain-Scala as-of.
     */
   def asofJoin(
       left: DataFrame,
@@ -62,270 +112,92 @@ object AsOf {
       key: String,
       leftTs: String,
       rightTs: String,
-      rightPayload: Seq[String]): DataFrame = {
-    requireSafeNames(left, rightPayload)
-    val lCols = left.columns
-    val payload = struct(rightPayload.map(col): _*)
-    val payloadType = right.select(payload).schema.head.dataType
-    // unified frame: left rows carry their columns, right rows only key+ts+payload
-    val l = left
-      .withColumn("_ts", col(leftTs)).withColumn("_side", lit(1))
-      .select(Seq(col(key), col("_ts"), col("_side"),
-        lit(null).cast(payloadType).as("_payload")) ++ lCols.filter(_ != key).map(col): _*)
-    val r = right
-      .withColumn("_ts", col(rightTs)).withColumn("_side", lit(0))
-      .select(Seq(col(key), col("_ts"), col("_side"), payload.as("_payload")) ++
-        lCols.filter(_ != key).map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
-    val w = Window.partitionBy(key).orderBy(col("_ts"), col("_side"), col("_payload"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    l.union(r)
-      .withColumn("_payload", last(col("_payload"), ignoreNulls = true).over(w))
-      .filter(col("_side") === 1)
-      .select(Seq(col(key)) ++ lCols.filter(_ != key).map(col) ++
-        rightPayload.map(c => col(s"_payload.$c").as(c)): _*)
-  }
-
-  /** FORWARD as-of join: each left row takes the EARLIEST right row
-    * with the same key and `right.ts >= left.ts` — the mirror of
-    * [[asofJoin]]'s backward fill. This is the labeling direction:
-    * "the next published rate / the first outcome at-or-after this
-    * event", the join a training pipeline runs to attach forward
-    * outcomes to features (and the one you audit for label leakage —
-    * leakage is exactly a backward feature join accidentally built
-    * this way round). Same unified-frame construction, run over the
-    * DESCENDING total order with the incremental running frame (see
-    * the inline note: Spark's unbounded-FOLLOWING frame is O(n²) per
-    * key); at equal timestamps the left row sorts BEFORE right rows
-    * in ascending terms (side 0 < 1), so an exact tie matches
-    * inclusively, mirroring the backward join's inclusive `<=`. Rows
-    * with no later right match keep NULLs.
-    */
-  def asofJoinForward(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      leftTs: String,
-      rightTs: String,
-      rightPayload: Seq[String]): DataFrame = {
-    requireSafeNames(left, rightPayload)
-    val lCols = left.columns
-    val payload = struct(rightPayload.map(col): _*)
-    val payloadType = right.select(payload).schema.head.dataType
-    val l = left
-      .withColumn("_ts", col(leftTs)).withColumn("_side", lit(0))
-      .select(Seq(col(key), col("_ts"), col("_side"),
-        lit(null).cast(payloadType).as("_payload")) ++ lCols.filter(_ != key).map(col): _*)
-    val r = right
-      .withColumn("_ts", col(rightTs)).withColumn("_side", lit(1))
-      .select(Seq(col(key), col("_ts"), col("_side"), payload.as("_payload")) ++
-        lCols.filter(_ != key).map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
-    // DESCENDING order + running frame, NOT the literal
-    // (currentRow, unboundedFollowing) + first(): Spark evaluates
-    // unbounded-FOLLOWING frames by re-scanning from each row to the
-    // partition end — O(n²) per key (measured: 172 s at sf0.1 where
-    // this mirror runs in ~2 s). Reversing the total order turns
-    // "first non-null at-or-after" into "last non-null at-or-before",
-    // which the UnboundedPreceding frame computes incrementally.
-    // ASC NULLS FIRST reversed is DESC NULLS LAST (Spark's defaults),
-    // so the reversal is exact, ties included.
-    val w = Window.partitionBy(key)
-      .orderBy(col("_ts").desc, col("_side").desc, col("_payload").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    l.union(r)
-      .withColumn("_payload", last(col("_payload"), ignoreNulls = true).over(w))
-      .filter(col("_side") === 0)
-      .select(Seq(col(key)) ++ lCols.filter(_ != key).map(col) ++
-        rightPayload.map(c => col(s"_payload.$c").as(c)): _*)
-  }
-
-  /** Skew-hardened as-of join: identical semantics to [[asofJoin]],
-    * but the window is sub-keyed by a TIME BUCKET so parallelism is
-    * |keys|·|buckets| instead of |keys| — the mitigation for few or
-    * skewed keys (an event stream with 4 event types on a
-    * 1000-executor cluster would otherwise use 4 tasks).
-    *
-    * Mechanics: rows land in bucket ⌊ts/width⌋. Within a (key, bucket)
-    * window a left row sees the in-bucket right rows before it, plus a
-    * CARRY-IN pseudo-row holding the latest right row of any earlier
-    * bucket. Carry-ins come from a per-(key, bucket) `max(struct(ts,
-    * payload))` aggregate forward-filled across buckets — that fill
-    * window is per key, but over one summary row per non-empty bucket,
-    * never over the raw rows, so it cannot become the skew bottleneck.
-    * The carry-in sorts at the bucket start with side 0 (< right 1 <
-    * left 2): an in-bucket right row at the exact bucket-start instant
-    * still overrides it, and ties keep [[asofJoin]]'s inclusive,
-    * payload-tiebroken order — a property test asserts row-for-row
-    * equality with the plain path.
-    *
-    * `bucketWidth` is in the ts column's native unit (microseconds for
-    * timestamps, raw units for numerics). Pick it so a bucket holds
-    * roughly rows/desired-tasks rows; carry-in correctness is
-    * width-independent.
-    */
-  def asofJoinBucketed(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      leftTs: String,
-      rightTs: String,
       rightPayload: Seq[String],
-      bucketWidth: Long): DataFrame = {
+      direction: Direction,
+      bucketWidth: Option[Long] = None): DataFrame = {
     requireSafeNames(left, rightPayload)
-    val lCols = left.columns
-    val tsType = left.schema(leftTs).dataType
-    def tsLong(c: Column): Column = tsType match {
-      case org.apache.spark.sql.types.TimestampType => unix_micros(c)
-      case _                                        => c.cast("long")
-    }
-    def tsBack(c: Column): Column = tsType match {
-      case org.apache.spark.sql.types.TimestampType => timestamp_micros(c)
-      case other                                    => c.cast(other)
-    }
-    def bucketOf(ts: Column): Column = floor(tsLong(ts) / bucketWidth).cast("long")
+    def inFillOrder(c: String): Column = if (direction == Forward) col(c).desc else col(c).asc
+    val others = left.columns.toSeq.filter(_ != key)
     val payload = struct(rightPayload.map(col): _*)
     val payloadType = right.select(payload).schema.head.dataType
+    val l = left.select(Seq(col(key), col(leftTs).as("_ts"),
+      lit(null).cast(payloadType).as("_payload")) ++ others.map(col): _*)
+    val r = right.select(col(key), col(rightTs).as("_ts"), payload.as("_payload"))
 
-    val r0 = right.select(col(key), col(rightTs).as("_ts"), payload.as("_payload"))
-      .withColumn("_bucket", bucketOf(col("_ts")))
+    // (left, right, carry rows) of the unified frame
+    val (lhs, rhs, carries) = bucketWidth match {
+      case None => (l, r, None)
+      case Some(width) =>
+        val tsType = left.schema(leftTs).dataType
+        val micros = tsType == TimestampType
+        def bucketOf(ts: Column): Column =
+          floor((if (micros) unix_micros(ts) else ts.cast("long")) / width).cast("long")
+        val lb = l.withColumn("_bucket", bucketOf(col("_ts")))
+        val rb = r.withColumn("_bucket", bucketOf(col("_ts")))
+        // the right row each bucket hands on: its last in fill order
+        val edge = struct(col("_ts"), col("_payload"))
+        val lastPerBucket = rb.groupBy(col(key), col("_bucket"))
+          .agg((if (direction == Forward) min(edge) else max(edge)).as("_last"))
+        // every bucket that needs a carry-in (left activity) or can
+        // supply one (right activity)
+        val allBuckets = lb.select(col(key), col("_bucket"))
+          .union(lastPerBucket.select(col(key), col("_bucket")))
+          .distinct()
+        val wCarry = Window.partitionBy(key).orderBy(inFillOrder("_bucket"))
+          .rowsBetween(Window.unboundedPreceding, -1)
+        // first instant (Backward) or last instant (Forward) of the bucket
+        val at =
+          if (direction == Forward) (col("_bucket") + 1) * width - 1 else col("_bucket") * width
+        val carry = allBuckets.join(lastPerBucket, Seq(key, "_bucket"), "left")
+          .withColumn("_carry", last(col("_last"), ignoreNulls = true).over(wCarry))
+          .filter(col("_carry").isNotNull)
+          .select(col(key), col("_bucket"),
+            (if (micros) timestamp_micros(at) else at.cast(tsType)).as("_ts"),
+            col("_carry._payload").as("_payload"))
+        (lb, rb, Some(carry))
+    }
 
-    // latest right row per (key, bucket): max of the (ts, payload)
-    // struct — the same tiebreak order the in-bucket window uses
-    val lastPerBucket = r0.groupBy(col(key), col("_bucket"))
-      .agg(max(struct(col("_ts"), col("_payload"))).as("_last"))
-
-    // every bucket that needs a carry-in (left activity) or can supply
-    // one (right activity)
-    val allBuckets = left.select(col(key), bucketOf(col(leftTs)).as("_bucket"))
-      .union(lastPerBucket.select(col(key), col("_bucket")))
-      .distinct()
-
-    val wCarry = Window.partitionBy(key).orderBy("_bucket")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carries = allBuckets.join(lastPerBucket, Seq(key, "_bucket"), "left")
-      .withColumn("_carry", last(col("_last"), ignoreNulls = true).over(wCarry))
-      .filter(col("_carry").isNotNull)
-      .select(col(key), col("_bucket"),
-        tsBack(col("_bucket") * bucketWidth).as("_ts"), // ≤ every in-bucket ts
-        col("_carry._payload").as("_payload"))
-
-    def nullLefts: Seq[Column] =
-      lCols.filter(_ != key).map(c => lit(null).cast(left.schema(c).dataType).as(c))
-    val lhs = left.select(Seq(col(key), bucketOf(col(leftTs)).as("_bucket"),
-      col(leftTs).as("_ts"), lit(2).as("_side"),
-      lit(null).cast(payloadType).as("_payload")) ++ lCols.filter(_ != key).map(col): _*)
-    val rhs = r0.select(Seq(col(key), col("_bucket"), col("_ts"), lit(1).as("_side"),
-      col("_payload")) ++ nullLefts: _*)
-    val chs = carries.select(Seq(col(key), col("_bucket"), col("_ts"), lit(0).as("_side"),
-      col("_payload")) ++ nullLefts: _*)
-
-    val w = Window.partitionBy(col(key), col("_bucket"))
-      .orderBy(col("_ts"), col("_side"), col("_payload"))
+    val keys = (Seq(key) ++ bucketWidth.map(_ => "_bucket")).map(col)
+    def side(df: DataFrame, n: Int, rest: Seq[Column]): DataFrame =
+      df.select(keys ++ Seq(col("_ts"), lit(n).as("_side"), col("_payload")) ++ rest: _*)
+    val nullLefts = others.map(c => lit(null).cast(left.schema(c).dataType).as(c))
+    val w = Window.partitionBy(keys: _*)
+      .orderBy(inFillOrder("_ts"), col("_side"), inFillOrder("_payload"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    lhs.union(rhs).union(chs)
+    (Seq(side(lhs, 2, others.map(col)), side(rhs, 1, nullLefts)) ++
+      carries.map(side(_, 0, nullLefts))).reduce(_ union _)
       .withColumn("_payload", last(col("_payload"), ignoreNulls = true).over(w))
       .filter(col("_side") === 2)
-      .select(Seq(col(key)) ++ lCols.filter(_ != key).map(col) ++
-        rightPayload.map(c => col(s"_payload.$c").as(c)): _*)
-  }
-
-  /** Skew-hardened FORWARD as-of join: [[asofJoinForward]] semantics
-    * with [[asofJoinBucketed]]'s |keys|·|buckets| parallelism. The
-    * mirror image of the backward carry: the per-(key, bucket)
-    * summary keeps the EARLIEST right (min of the (ts, payload)
-    * struct — the same tiebreak order the in-bucket window uses), the
-    * cross-bucket fill looks at STRICTLY LATER buckets (rows 1..∞
-    * following), and the carry pseudo-row sorts at the bucket's LAST
-    * instant with side 2 (left 0 < right 1 < carry 2): an in-bucket
-    * right row at that exact instant still wins — it is earlier than
-    * anything a later bucket can offer. A property test pins
-    * row-for-row equality with the plain forward join across widths.
-    */
-  def asofJoinForwardBucketed(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      leftTs: String,
-      rightTs: String,
-      rightPayload: Seq[String],
-      bucketWidth: Long): DataFrame = {
-    requireSafeNames(left, rightPayload)
-    val lCols = left.columns
-    val tsType = left.schema(leftTs).dataType
-    def tsLong(c: Column): Column = tsType match {
-      case org.apache.spark.sql.types.TimestampType => unix_micros(c)
-      case _                                        => c.cast("long")
-    }
-    def tsBack(c: Column): Column = tsType match {
-      case org.apache.spark.sql.types.TimestampType => timestamp_micros(c)
-      case other                                    => c.cast(other)
-    }
-    def bucketOf(ts: Column): Column = floor(tsLong(ts) / bucketWidth).cast("long")
-    val payload = struct(rightPayload.map(col): _*)
-    val payloadType = right.select(payload).schema.head.dataType
-
-    val r0 = right.select(col(key), col(rightTs).as("_ts"), payload.as("_payload"))
-      .withColumn("_bucket", bucketOf(col("_ts")))
-
-    val firstPerBucket = r0.groupBy(col(key), col("_bucket"))
-      .agg(min(struct(col("_ts"), col("_payload"))).as("_first"))
-
-    val allBuckets = left.select(col(key), bucketOf(col(leftTs)).as("_bucket"))
-      .union(firstPerBucket.select(col(key), col("_bucket")))
-      .distinct()
-
-    // desc + (unboundedPreceding, -1) ≡ asc + (1, unboundedFollowing):
-    // "earliest summary of any LATER bucket", via the incremental
-    // running frame instead of the quadratic following frame
-    val wCarry = Window.partitionBy(key).orderBy(col("_bucket").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carries = allBuckets.join(firstPerBucket, Seq(key, "_bucket"), "left")
-      .withColumn("_carry", last(col("_first"), ignoreNulls = true).over(wCarry))
-      .filter(col("_carry").isNotNull)
-      .select(col(key), col("_bucket"),
-        tsBack((col("_bucket") + 1) * bucketWidth - 1).as("_ts"), // ≥ every in-bucket ts
-        col("_carry._payload").as("_payload"))
-
-    def nullLefts: Seq[Column] =
-      lCols.filter(_ != key).map(c => lit(null).cast(left.schema(c).dataType).as(c))
-    val lhs = left.select(Seq(col(key), bucketOf(col(leftTs)).as("_bucket"),
-      col(leftTs).as("_ts"), lit(0).as("_side"),
-      lit(null).cast(payloadType).as("_payload")) ++ lCols.filter(_ != key).map(col): _*)
-    val rhs = r0.select(Seq(col(key), col("_bucket"), col("_ts"), lit(1).as("_side"),
-      col("_payload")) ++ nullLefts: _*)
-    val chs = carries.select(Seq(col(key), col("_bucket"), col("_ts"), lit(2).as("_side"),
-      col("_payload")) ++ nullLefts: _*)
-
-    // same descending mirror as [[asofJoinForward]] — within a bucket
-    // the quadratic following-frame cost is bounded but still wasted
-    val w = Window.partitionBy(col(key), col("_bucket"))
-      .orderBy(col("_ts").desc, col("_side").desc, col("_payload").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    lhs.union(rhs).union(chs)
-      .withColumn("_payload", last(col("_payload"), ignoreNulls = true).over(w))
-      .filter(col("_side") === 0)
-      .select(Seq(col(key)) ++ lCols.filter(_ != key).map(col) ++
+      .select(Seq(col(key)) ++ others.map(col) ++
         rightPayload.map(c => col(s"_payload.$c").as(c)): _*)
   }
 
   // ------------------------------------------------------------------
-  // Registry query: join every event to the hourly per-type average
-  // that was current at its timestamp (rts = hour start ≤ ts always,
-  // so inner semantics keep every event), then report the per-type
-  // deviation of each event from its as-of rate. DuckDB's native
-  // ASOF JOIN is the oracle.
+  // Registry queries: join every event to the hourly per-type average
+  // current at its timestamp, then report the per-type deviation of
+  // each event from that rate, in each of the four configurations.
+  // Backward: rts = hour start ≤ ts always, so inner semantics keep
+  // every event. Forward (the outcome/label join): the NEXT rate
+  // published at-or-after the event; events in the stream's final
+  // partial hour have no next rate and drop out — both engines agree
+  // because the filter is explicit. The bucketed rows use 1-day
+  // buckets (|event_types|·|days| window tasks instead of
+  // |event_types|) and share their direction's oracle: DuckDB's
+  // native ASOF JOIN, which each row hash-matches independently.
   // ------------------------------------------------------------------
-  val eventsAsofRates: Q = Q(
+  private val DayUs: Long = 24L * 3600 * 1000000
+
+  private def deviationReport(direction: Direction, bucketWidth: Option[Long]): Q = Q(
     (s, d) => {
       val ev = Inventory.events(s, d)
       val rates = ev
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("rts"))
         .agg(roundPortable(avgExact(col("value")), 2).as("hourly_avg"))
-      val joined = asofJoin(
+      asofJoin(
         ev.select("event_type", "ts", "event_id", "value"),
         rates, key = "event_type", leftTs = "ts", rightTs = "rts",
-        rightPayload = Seq("hourly_avg"))
+        rightPayload = Seq("hourly_avg"), direction, bucketWidth)
         .filter(col("hourly_avg").isNotNull)
-      joined
         .groupBy("event_type")
         .agg(
           count(lit(1)).as("n_events"),
@@ -333,7 +205,7 @@ object AsOf {
           roundPortable(max(abs(col("value") - col("hourly_avg"))), 2).as("max_deviation"))
         .orderBy("event_type")
     },
-    Some("""WITH rates AS (
+    Some(s"""WITH rates AS (
            |  SELECT event_type, date_trunc('hour', ts) AS rts,
            |    floor(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / count(*) * 100 + 0.5) / 100 AS hourly_avg
            |  FROM events GROUP BY 1, 2
@@ -342,116 +214,23 @@ object AsOf {
            |  floor(CAST(sum(CAST(e.value - r.hourly_avg AS DECIMAL(18,2))) AS DOUBLE) / count(*) * 10000 + 0.5) / 10000 AS avg_deviation,
            |  floor(max(abs(e.value - r.hourly_avg)) * 100 + 0.5) / 100 AS max_deviation
            |FROM events e ASOF JOIN rates r
-           |  ON e.event_type = r.event_type AND e.ts >= r.rts
+           |  ON e.event_type = r.event_type AND e.ts ${if (direction == Forward) "<=" else ">="} r.rts
            |GROUP BY 1 ORDER BY 1""".stripMargin)
   )
 
-  /** The same report through the SKEW-HARDENED path: 1-day sub-key
-    * buckets give |event_types|·|days| window tasks instead of
-    * |event_types|. Same oracle as [[eventsAsofRates]] — the variants
-    * are semantically identical by construction, and both hash-match
-    * DuckDB's native ASOF JOIN independently.
-    */
-  val eventsAsofRatesBucketed: Q = Q(
-    (s, d) => {
-      val ev = Inventory.events(s, d)
-      val rates = ev
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("rts"))
-        .agg(roundPortable(avgExact(col("value")), 2).as("hourly_avg"))
-      val joined = asofJoinBucketed(
-        ev.select("event_type", "ts", "event_id", "value"),
-        rates, key = "event_type", leftTs = "ts", rightTs = "rts",
-        rightPayload = Seq("hourly_avg"),
-        bucketWidth = 24L * 3600 * 1000000) // 1 day of microseconds
-        .filter(col("hourly_avg").isNotNull)
-      joined
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n_events"),
-          roundPortable(avgExact(col("value") - col("hourly_avg")), 4).as("avg_deviation"),
-          roundPortable(max(abs(col("value") - col("hourly_avg"))), 2).as("max_deviation"))
-        .orderBy("event_type")
-    },
-    eventsAsofRates.oracle
-  )
-
-
-  // ------------------------------------------------------------------
-  // The FORWARD direction as a gated query: every event joined to the
-  // NEXT hourly per-type average published at-or-after its timestamp
-  // (the outcome/label join), reporting per-type deviation from that
-  // future rate. Events in the stream's final partial hour have no
-  // next rate and drop out under inner semantics — both engines agree
-  // because the filter is explicit. DuckDB's native forward ASOF
-  // (`e.ts <= r.rts`) is the oracle.
-  // ------------------------------------------------------------------
-  val eventsAsofNext: Q = Q(
-    (s, d) => {
-      val ev = Inventory.events(s, d)
-      val rates = ev
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("rts"))
-        .agg(roundPortable(avgExact(col("value")), 2).as("hourly_avg"))
-      val joined = asofJoinForward(
-        ev.select("event_type", "ts", "event_id", "value"),
-        rates, key = "event_type", leftTs = "ts", rightTs = "rts",
-        rightPayload = Seq("hourly_avg"))
-        .filter(col("hourly_avg").isNotNull)
-      joined
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n_events"),
-          roundPortable(avgExact(col("value") - col("hourly_avg")), 4).as("avg_deviation"),
-          roundPortable(max(abs(col("value") - col("hourly_avg"))), 2).as("max_deviation"))
-        .orderBy("event_type")
-    },
-    Some("""WITH rates AS (
-           |  SELECT event_type, date_trunc('hour', ts) AS rts,
-           |    floor(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / count(*) * 100 + 0.5) / 100 AS hourly_avg
-           |  FROM events GROUP BY 1, 2
-           |)
-           |SELECT e.event_type, count(*) AS n_events,
-           |  floor(CAST(sum(CAST(e.value - r.hourly_avg AS DECIMAL(18,2))) AS DOUBLE) / count(*) * 10000 + 0.5) / 10000 AS avg_deviation,
-           |  floor(max(abs(e.value - r.hourly_avg)) * 100 + 0.5) / 100 AS max_deviation
-           |FROM events e ASOF JOIN rates r
-           |  ON e.event_type = r.event_type AND e.ts <= r.rts
-           |GROUP BY 1 ORDER BY 1""".stripMargin)
-  )
-
-  /** The forward report through the skew-hardened path — same oracle
-    * as [[eventsAsofNext]]; both independently hash-match DuckDB's
-    * forward ASOF JOIN.
-    */
-  val eventsAsofNextBucketed: Q = Q(
-    (s, d) => {
-      val ev = Inventory.events(s, d)
-      val rates = ev
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("rts"))
-        .agg(roundPortable(avgExact(col("value")), 2).as("hourly_avg"))
-      val joined = asofJoinForwardBucketed(
-        ev.select("event_type", "ts", "event_id", "value"),
-        rates, key = "event_type", leftTs = "ts", rightTs = "rts",
-        rightPayload = Seq("hourly_avg"),
-        bucketWidth = 24L * 3600 * 1000000) // 1 day of microseconds
-        .filter(col("hourly_avg").isNotNull)
-      joined
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n_events"),
-          roundPortable(avgExact(col("value") - col("hourly_avg")), 4).as("avg_deviation"),
-          roundPortable(max(abs(col("value") - col("hourly_avg"))), 2).as("max_deviation"))
-        .orderBy("event_type")
-    },
-    eventsAsofNext.oracle
-  )
+  val eventsAsofRates: Q = deviationReport(Backward, None)
+  val eventsAsofRatesBucketed: Q = deviationReport(Backward, Some(DayUs))
+  val eventsAsofNext: Q = deviationReport(Forward, None)
+  val eventsAsofNextBucketed: Q = deviationReport(Forward, Some(DayUs))
 
   // ------------------------------------------------------------------
   // NEAREST-in-time as-of: each click matched to the CLOSER of its
   // latest-preceding and earliest-following purchase by the same user
   // — the feature-joining / sensor-fusion staple ("the reading nearest
   // this event", direction unknown a priori). COMPOSED from the two
-  // directed primitives per the build rules: one backward pass
-  // ([[asofJoin]]) carries (prev_id, prev_ts), one forward pass
-  // ([[asofJoinForward]]) carries (next_id, next_ts), and a pure
+  // directed joins per the build rules: one backward pass
+  // ([[Backward]]) carries (prev_id, prev_ts), one forward pass
+  // ([[Forward]]) carries (next_id, next_ts), and a pure
   // projection picks the smaller |Δt| (tie → backward: no lookahead
   // unless strictly closer). delta_us is SIGNED — negative means the
   // match precedes the click. Harness (user_id, ts) purchase pairs are
@@ -461,9 +240,8 @@ object AsOf {
   // Scale: two key-partitioned window passes (the directed joins'
   // documented one-shuffle cost each; the forward pass reuses the
   // hash partitioning, adding only its reversed sort) plus a codegen
-  // projection — no range explosion, no broadcast requirement. The
-  // skew-hardened variants slot in identically if the key set is
-  // small.
+  // projection — no range explosion, no broadcast requirement. A
+  // bucket width slots in identically if the key set is small.
   // ------------------------------------------------------------------
   val eventsAsofNearest: Q = Q(
     (s, d) => {
@@ -474,11 +252,11 @@ object AsOf {
       val withPrev = asofJoin(clicks,
         purch.select(col("user_id"), col("event_id").as("prev_id"), col("ts").as("prev_ts")),
         key = "user_id", leftTs = "ts", rightTs = "prev_ts",
-        rightPayload = Seq("prev_id", "prev_ts"))
-      val both = asofJoinForward(withPrev,
+        rightPayload = Seq("prev_id", "prev_ts"), Backward)
+      val both = asofJoin(withPrev,
         purch.select(col("user_id"), col("event_id").as("next_id"), col("ts").as("next_ts")),
         key = "user_id", leftTs = "ts", rightTs = "next_ts",
-        rightPayload = Seq("next_id", "next_ts"))
+        rightPayload = Seq("next_id", "next_ts"), Forward)
       val dPrev = unix_micros(col("ts")) - unix_micros(col("prev_ts"))
       val dNext = unix_micros(col("next_ts")) - unix_micros(col("ts"))
       val usePrev = col("next_id").isNull || (col("prev_id").isNotNull && dPrev <= dNext)
@@ -535,7 +313,7 @@ object AsOf {
         purch.select(col("user_id"), col("event_id").as("prev_id"),
           col("ts").as("prev_ts"), col("value").as("prev_value")),
         key = "user_id", leftTs = "ts", rightTs = "prev_ts",
-        rightPayload = Seq("prev_id", "prev_ts", "prev_value"))
+        rightPayload = Seq("prev_id", "prev_ts", "prev_value"), Backward)
       val dPrev = unix_micros(col("ts")) - unix_micros(col("prev_ts"))
       val within = col("prev_id").isNotNull && dPrev <= TolUs
       joined.select(col("user_id"), col("event_id"),

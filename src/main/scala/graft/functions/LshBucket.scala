@@ -53,6 +53,22 @@ case class LshBucket(child: Expression, planes: Array[Array[Double]])
   require(planes.forall(_.length == planes.head.length),
     s"lsh_bucket planes must share one length, got ${planes.map(_.length).distinct.mkString(", ")}")
 
+  // case-class equality would compare the plane arrays by reference, so
+  // equal tables in distinct arrays never matched in canonicalization or
+  // subexpression elimination: compare and hash their contents
+  private def deepPlanes: Array[AnyRef] = planes.asInstanceOf[Array[AnyRef]]
+
+  override def equals(other: Any): Boolean = other match {
+    case that: LshBucket =>
+      child == that.child && java.util.Arrays.deepEquals(deepPlanes, that.deepPlanes)
+    case _ => false
+  }
+
+  private lazy val contentHash: Int =
+    31 * child.hashCode + java.util.Arrays.deepHashCode(deepPlanes)
+
+  override def hashCode(): Int = contentHash
+
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(

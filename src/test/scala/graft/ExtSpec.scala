@@ -651,6 +651,18 @@ class ExtSpec extends SparkSpec {
     Similarity.lshBucketOf(col("embedding"), Array.empty[Array[Double]])
   }
 
+  test("LshBucket compares planes by content: equal tables in distinct arrays are equal") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val v = AttributeReference("embedding", ArrayType(FloatType))()
+    def planes(last: Double) = Array(Array(1.0, -0.5, 0.25), Array(0.0, 2.0, last))
+    val (a, b) = (new graft.functions.LshBucket(v, planes(-1.0)),
+      new graft.functions.LshBucket(v, planes(-1.0)))
+    assert(a == b && a.hashCode == b.hashCode)
+    assert(a.semanticEquals(b))
+    assert(a != new graft.functions.LshBucket(v, planes(-2.0)))
+  }
+
   test("bucketed embedding LSH dedup is a subset of exact pairs with high recall") {
     val lsh = Dedup.embeddingLsh.build(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
@@ -1296,7 +1308,7 @@ class ExtSpec extends SparkSpec {
       .toDF("k", "t", "ev")
     val right = Seq((1L, 10L, "r@10"), (1L, 15L, "r@15"), (2L, 8L, "r@8"))
       .toDF("k", "rt", "snap")
-    val got = AsOf.asofJoin(left, right, "k", "t", "rt", Seq("snap"))
+    val got = AsOf.asofJoin(left, right, "k", "t", "rt", Seq("snap"), AsOf.Backward)
       .orderBy("k", "t").collect()
       .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(3)))).toSeq
     assert(got === Seq(
@@ -1311,7 +1323,7 @@ class ExtSpec extends SparkSpec {
     val left = Seq((1L, 30L, "e")).toDF("k", "t", "ev")
     val right = Seq((1L, 10L, Some(5.0), Some("x")), (1L, 20L, None, Some("y")))
       .toDF("k", "rt", "v", "tag")
-    val row = AsOf.asofJoin(left, right, "k", "t", "rt", Seq("v", "tag")).head()
+    val row = AsOf.asofJoin(left, right, "k", "t", "rt", Seq("v", "tag"), AsOf.Backward).head()
     // the t=20 row is the as-of match: its NULL v must win over t=10's 5.0,
     // and the payload must be row-atomic (v and tag from the same row)
     assert(row.isNullAt(row.fieldIndex("v")))
@@ -1326,11 +1338,11 @@ class ExtSpec extends SparkSpec {
     val rgt = (1 to 120).map(i =>
       (s"k${rnd.nextInt(3)}", rnd.nextInt(1000).toLong,
         if (rnd.nextInt(5) == 0) null else s"v$i")).toDF("k", "rts", "value")
-    val plain = AsOf.asofJoin(lft, rgt, "k", "ts", "rts", Seq("value"))
+    val plain = AsOf.asofJoin(lft, rgt, "k", "ts", "rts", Seq("value"), AsOf.Backward)
       .collect().map(_.toString).sorted.toSeq
     // width chosen so ties, empty buckets, and carry-in chains all occur
     Seq(7L, 100L, 5000L).foreach { width =>
-      val bucketed = AsOf.asofJoinBucketed(lft, rgt, "k", "ts", "rts", Seq("value"), width)
+      val bucketed = AsOf.asofJoin(lft, rgt, "k", "ts", "rts", Seq("value"), AsOf.Backward, Some(width))
         .collect().map(_.toString).sorted.toSeq
       assert(bucketed === plain, s"bucketWidth=$width diverges from the plain as-of join")
     }
@@ -1344,10 +1356,10 @@ class ExtSpec extends SparkSpec {
     val rgt = (1 to 120).map(i =>
       (s"k${rnd.nextInt(3)}", rnd.nextInt(1000).toLong,
         if (rnd.nextInt(5) == 0) null else s"v$i")).toDF("k", "rts", "value")
-    val plain = AsOf.asofJoinForward(lft, rgt, "k", "ts", "rts", Seq("value"))
+    val plain = AsOf.asofJoin(lft, rgt, "k", "ts", "rts", Seq("value"), AsOf.Forward)
       .collect().map(_.toString).sorted.toSeq
     Seq(7L, 100L, 5000L).foreach { width =>
-      val bucketed = AsOf.asofJoinForwardBucketed(lft, rgt, "k", "ts", "rts", Seq("value"), width)
+      val bucketed = AsOf.asofJoin(lft, rgt, "k", "ts", "rts", Seq("value"), AsOf.Forward, Some(width))
         .collect().map(_.toString).sorted.toSeq
       assert(bucketed === plain, s"bucketWidth=$width diverges from the plain forward as-of")
     }
@@ -1358,11 +1370,11 @@ class ExtSpec extends SparkSpec {
     val rgt = Seq(("a", 1L, "x")).toDF("k", "rts", "value")
     val reservedLeft = Seq(("a", 1L, 0L)).toDF("k", "ts", "_payload")
     intercept[IllegalArgumentException] {
-      AsOf.asofJoin(reservedLeft, rgt, "k", "ts", "rts", Seq("value"))
+      AsOf.asofJoin(reservedLeft, rgt, "k", "ts", "rts", Seq("value"), AsOf.Backward)
     }
     val clashingLeft = Seq(("a", 1L, "y")).toDF("k", "ts", "value")
     intercept[IllegalArgumentException] {
-      AsOf.asofJoinBucketed(clashingLeft, rgt, "k", "ts", "rts", Seq("value"), 10L)
+      AsOf.asofJoin(clashingLeft, rgt, "k", "ts", "rts", Seq("value"), AsOf.Backward, Some(10L))
     }
   }
 
@@ -1856,7 +1868,7 @@ class ExtSpec extends SparkSpec {
       .toDF("key", "ts", "ev")
     val right = Seq(("k", 5L, "exact"), ("k", 10L, "later"), ("k", 3L, "past"))
       .toDF("key", "rts", "label")
-    val got = AsOf.asofJoinForward(left, right, "key", "ts", "rts", Seq("label"))
+    val got = AsOf.asofJoin(left, right, "key", "ts", "rts", Seq("label"), AsOf.Forward)
       .orderBy("ts").collect()
       .map(r => (r.getLong(1), if (r.isNullAt(3)) null else r.getString(3)))
     // ts=5 matches the EQUAL rts=5 (inclusive); ts=7 skips past/exact

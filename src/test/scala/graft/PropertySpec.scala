@@ -362,6 +362,41 @@ class PropertySpec extends SparkSpec {
     assert(dense > 0, "dense graph must retain a 4-core")
   }
 
+  test("asofJoin equals a plain-Scala as-of in both directions, plain and bucketed") {
+    val spk = spark; import spk.implicits._
+    import graft.ext.AsOf
+    val r = new scala.util.Random(2718)
+    (0 until 3).foreach { round =>
+      // few keys and a narrow ts range (duplicate timestamps on both
+      // sides; negative ones exercise floor bucketing), NULL fields in a
+      // two-column payload
+      val lft = (0 until 150).map(i => (s"k${r.nextInt(3)}", r.nextInt(61) - 30L, i.toLong))
+      val rgt = (0 until 60).map { _ =>
+        (s"k${r.nextInt(3)}", r.nextInt(61) - 30L,
+          Option.when(r.nextInt(4) > 0)(s"p${r.nextInt(5)}"),
+          Option.when(r.nextInt(4) > 0)(r.nextInt(5).toLong))
+      }
+      val (lDf, rDf) = (lft.toDF("k", "ts", "event_id"), rgt.toDF("k", "rts", "tag", "amount"))
+      for (dir <- Seq(AsOf.Backward, AsOf.Forward); width <- Seq(None, Some(1L + r.nextInt(40)))) {
+        val got = AsOf.asofJoin(lDf, rDf, "k", "ts", "rts", Seq("tag", "amount"), dir, width)
+          .collect().map(x => x.getLong(2) ->
+            (Option(x.getString(3)), Option.when(!x.isNullAt(4))(x.getLong(4)))).toMap
+        // reference: the greatest (Backward) or least (Forward) right
+        // (ts, payload) on the matching side, NULL fields ordered first
+        val want = lft.map { case (k, t, id) =>
+          val cands = rgt.collect {
+            case (rk, rt, tag, amt) if rk == k && (if (dir == AsOf.Backward) rt <= t else rt >= t) =>
+              (rt, tag, amt)
+          }
+          val hit = if (cands.isEmpty) None
+            else Some(if (dir == AsOf.Backward) cands.max else cands.min)
+          id -> hit.fold((Option.empty[String], Option.empty[Long]))(h => (h._2, h._3))
+        }.toMap
+        assert(got === want, s"round $round, $dir, bucketWidth=$width")
+      }
+    }
+  }
+
   test("rebandedParams: occupancy-targeting B, recall-satisfying L, monotone in n") {
     import graft.ext.Dedup.rebandedParams
     // the measured anchor points (BENCHNOTES r14): harness 2k -> the

@@ -472,7 +472,8 @@ class StreamingSpec extends SparkSpec {
         col("event_id").as("purchase_id"), col("value").as("purchase_value"))
     val expected = graft.ext.AsOf.asofJoin(clicks, purchases,
         key = "user_id", leftTs = "ts", rightTs = "pts",
-        rightPayload = Seq("purchase_id", "pts", "purchase_value"))
+        rightPayload = Seq("purchase_id", "pts", "purchase_value"),
+        direction = graft.ext.AsOf.Backward)
       .select(col("click_id"), col("purchase_id"),
         unix_micros(col("pts")).as("pus"), col("purchase_value"))
       .collect()

@@ -7,11 +7,21 @@ Usage: python3 tools/oracle_check.py <verifyOutDir> <sfDir> [name ...]
 
 Optional trailing names restrict the check to those queries (matches
 Verify's optional third arg for fast single-query iteration).
+
+Each query runs under QUERY_TIMEOUT_S: a row whose oracle or compare
+does not finish in time prints TIMEOUT and counts as a failure, so a
+full check always ends and prints its total.
 """
 import json
 import sys
+import threading
 
 import duckdb
+
+# A fixed limit, not a flag: it only has to stop a row that would
+# otherwise hang the check, so it sits far above what a finishing
+# oracle takes at the scales the check runs on.
+QUERY_TIMEOUT_S = 300
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -42,6 +52,19 @@ def bad_type(t: str):
     return None
 
 
+def run_limited(con, fn, limit_s: float):
+    """Run fn() with con interrupted after limit_s seconds. Returns
+    (result, timed_out); a timed-out call's result is None."""
+    timer = threading.Timer(limit_s, con.interrupt)
+    timer.start()
+    try:
+        return fn(), False
+    except duckdb.InterruptException:
+        return None, True
+    finally:
+        timer.cancel()
+
+
 def selftest() -> int:
     """Negative-test the type guard (VERDICT r13 ask #7): every type
     the driver cannot canonicalize must FAIL, every canonical type must
@@ -56,6 +79,18 @@ def selftest() -> int:
         print(f"SELFTEST FAIL: bad_type({t!r}) = {bad_type(t)!r}")
     print(f"selftest: {len(must_fail + must_pass) - len(bad)}/"
           f"{len(must_fail + must_pass)} type classifications correct")
+    # the timeout must stop a query that cannot finish, and leave the
+    # connection usable for the next row
+    con = duckdb.connect()
+    endless = ("SELECT sum(a.range * b.range) "
+               "FROM range(1000000) a, range(1000000) b")
+    _, timed_out = run_limited(con, lambda: con.sql(endless).fetchall(), 0.5)
+    after, _ = run_limited(con, lambda: con.sql("SELECT 42").fetchall(), 5)
+    if not timed_out or after != [(42,)]:
+        print(f"SELFTEST FAIL: timeout timed_out={timed_out} next={after}")
+        bad.append("timeout")
+    else:
+        print("selftest: a query that cannot finish times out")
     return 1 if bad else 0
 
 
@@ -69,45 +104,56 @@ def main(sf_dir: str, out_dir: str, names=()) -> int:
         oracles = {k: v for k, v in oracles.items() if k in set(names)}
     failures = 0
     for name, sql in sorted(oracles.items()):
-        try:
-            rel = con.sql(sql)
-            bad_types = [(c, why) for c, t in zip(rel.columns, rel.types)
-                         if (why := bad_type(str(t)))]
-            if bad_types:
-                for c, why in bad_types:
-                    print(f"FAIL {name}: oracle column {c}: {why}")
-                failures += 1
-                continue
-            expected = rel.df()
-            actual = con.sql(
-                f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
-            # driver compare: sort columns by name, then compare values
-            expected = expected[sorted(expected.columns)]
-            actual = actual[sorted(actual.columns)]
-            if list(expected.columns) != list(actual.columns):
-                print(f"FAIL {name}: columns {list(actual.columns)} != "
-                      f"{list(expected.columns)}")
-                failures += 1
-                continue
-            if expected.shape != actual.shape:
-                print(f"FAIL {name}: shape {actual.shape} != {expected.shape}")
-                failures += 1
-                continue
-            import pandas as pd
-            try:
-                pd.testing.assert_frame_equal(
-                    actual.reset_index(drop=True),
-                    expected.reset_index(drop=True),
-                    check_dtype=False, check_exact=True)
-                print(f"OK   {name} ({expected.shape[0]} rows)")
-            except AssertionError as e:
-                print(f"FAIL {name}: {str(e)[:500]}")
-                failures += 1
-        except Exception as e:  # noqa: BLE001
-            print(f"ERROR {name}: {e}")
+        matched, timed_out = run_limited(
+            con, lambda: check(con, name, sql, out_dir), QUERY_TIMEOUT_S)
+        if timed_out:
+            print(f"TIMEOUT {name}: not finished in {QUERY_TIMEOUT_S} s")
+        if not matched:
             failures += 1
     print(f"\n{len(oracles) - failures}/{len(oracles)} oracle queries match")
     return 1 if failures else 0
+
+
+def check(con, name: str, sql: str, out_dir: str) -> bool:
+    """Compare one query's Verify output with its oracle; print the
+    verdict and return whether it matched."""
+    try:
+        rel = con.sql(sql)
+        bad_types = [(c, why) for c, t in zip(rel.columns, rel.types)
+                     if (why := bad_type(str(t)))]
+        if bad_types:
+            for c, why in bad_types:
+                print(f"FAIL {name}: oracle column {c}: {why}")
+            return False
+        expected = rel.df()
+        actual = con.sql(
+            f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
+        # compare as the correctness gate does: columns sorted by name, then values
+        expected = expected[sorted(expected.columns)]
+        actual = actual[sorted(actual.columns)]
+        if list(expected.columns) != list(actual.columns):
+            print(f"FAIL {name}: columns {list(actual.columns)} != "
+                  f"{list(expected.columns)}")
+            return False
+        if expected.shape != actual.shape:
+            print(f"FAIL {name}: shape {actual.shape} != {expected.shape}")
+            return False
+        import pandas as pd
+        try:
+            pd.testing.assert_frame_equal(
+                actual.reset_index(drop=True),
+                expected.reset_index(drop=True),
+                check_dtype=False, check_exact=True)
+            print(f"OK   {name} ({expected.shape[0]} rows)")
+            return True
+        except AssertionError as e:
+            print(f"FAIL {name}: {str(e)[:500]}")
+            return False
+    except duckdb.InterruptException:
+        raise  # the timeout's, reported by the caller
+    except Exception as e:  # noqa: BLE001
+        print(f"ERROR {name}: {e}")
+        return False
 
 
 if __name__ == "__main__":
