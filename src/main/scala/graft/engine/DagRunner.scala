@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.collection.mutable
 
@@ -141,6 +141,30 @@ object DagRunner {
       throw new IllegalArgumentException(s"model DAG has a cycle involving: ${stuck.mkString(", ")}")
     }
     order.toSeq
+  }
+
+  /** Run a DAG into a temp warehouse and return one of its tables,
+    * collected into a local relation — the registry rows that put a
+    * whole production DAG through the driver's hash gate. `run` gets
+    * the warehouse's [[TableSink.Parquet]]; the DAG must pass every
+    * model test and skip nothing, or the row fails naming `gate`.
+    * `pick` chooses the table, and must stay bounded by the row's
+    * contract, since it is collected to the driver. The run executes
+    * inside [[Caches.scoped]], which releases exactly the caches it
+    * retained on this thread (the component fixpoint's loop state,
+    * never a concurrent query's), and the warehouse is deleted
+    * afterwards, so repeated registry builds stay storage-neutral.
+    */
+  def collectTable(s: SparkSession, gate: String)(run: TableSink => RunResult)(
+      pick: RunResult => DataFrame): DataFrame = {
+    val wh = java.nio.file.Files.createTempDirectory("graft-dag-reg")
+    try Caches.scoped {
+      val r = run(new TableSink.Parquet(wh.toString))
+      require(r.allTestsPassed && r.skipped.isEmpty,
+        s"$gate gated: ${r.tests.filterNot(_.passed).mkString(", ")}")
+      val out = pick(r)
+      s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
+    } finally Scratch.deleteTree(wh)
   }
 
   /** The execution schedule: every model in topo order with its wave

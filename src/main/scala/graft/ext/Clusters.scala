@@ -564,30 +564,8 @@ object Clusters {
   // the temp warehouse deletes here instead of leaking per run.
   // ------------------------------------------------------------------
   val semdedupFunnelKeep: Q = Q(
-    (s, d) => {
-      val wh = java.nio.file.Files.createTempDirectory("graft-semfunnel-reg")
-      // the component fixpoint returns labels on a cached RDD (the
-      // loop-state truncation) that normally lives until the session
-      // ends — the documented retention every in-session consumer of
-      // connectedComponents carries. THIS row collects its bounded
-      // output, so nothing downstream reads the cache: the run executes
-      // inside a Caches scope, which releases exactly the caches the
-      // fixpoint explicitly retained on this thread — never a
-      // concurrent query's (the r18 persistent-RDD delta-diff freed
-      // ANY cache that appeared during the run; ADVICE r18) — keeping
-      // repeated registry builds storage-neutral.
-      try {
-        graft.engine.Caches.scoped {
-          val r = graft.models.SemanticDedupFunnel.run(s, d,
-            new graft.engine.TableSink.Parquet(wh.toString))
-          require(r.allTestsPassed && r.skipped.isEmpty,
-            s"funnel gated: ${r.tests.filterNot(_.passed).mkString(", ")}")
-          val out = r("sem_keep_list")
-          s.createDataFrame(
-            java.util.Arrays.asList(out.collect(): _*), out.schema)
-        }
-      } finally graft.engine.Scratch.deleteTree(wh)
-    },
+    (s, d) => graft.engine.DagRunner.collectTable(s, "funnel")(
+      graft.models.SemanticDedupFunnel.run(s, d, _))(_("sem_keep_list")),
     semdedupKeep.oracle)
 
   // ------------------------------------------------------------------
@@ -609,20 +587,8 @@ object Clusters {
   // caches release with the Caches scope; the temp warehouse deletes.
   // ------------------------------------------------------------------
   val dedupFunnelKeep: Q = Q(
-    (s, d) => {
-      val wh = java.nio.file.Files.createTempDirectory("graft-dedupfunnel-reg")
-      try {
-        graft.engine.Caches.scoped {
-          val r = graft.models.DedupFunnel.run(s, d,
-            new graft.engine.TableSink.Parquet(wh.toString))
-          require(r.allTestsPassed && r.skipped.isEmpty,
-            s"funnel gated: ${r.tests.filterNot(_.passed).mkString(", ")}")
-          val out = r("dedup_keep_list")
-          s.createDataFrame(
-            java.util.Arrays.asList(out.collect(): _*), out.schema)
-        }
-      } finally graft.engine.Scratch.deleteTree(wh)
-    },
+    (s, d) => graft.engine.DagRunner.collectTable(s, "funnel")(
+      graft.models.DedupFunnel.run(s, d, _))(_("dedup_keep_list")),
     dedupKeepBest.oracle)
 
   val queries: Seq[(String, Q)] = Seq(

@@ -128,90 +128,44 @@ object Dedup {
   // Exact n-gram Jaccard, all pairs ≥ 0.3 — EXACT but never O(n²):
   // an inverted-index set-similarity join. Any pair with J > 0 shares
   // at least one shingle, so the equi-join on shingle is a COMPLETE
-  // candidate set; |A∩B| falls out of the join as a group count, and
-  // |A∪B| = |A|+|B|−|A∩B|, so no array intersection ever runs.
-  //
-  // Scale notes: one shuffle hash-partitioned on shingle, one on the
-  // pair key. Join fan-out per shingle is c² for a c-doc posting
-  // list — fine while document frequencies are flat (this corpus:
-  // max df 25). Zipfian web corpora instead use
-  // [[jaccardPairsPrefix]] (same output, prefix-filtered candidates)
-  // or the probabilistic LSH path below.
+  // candidate set. [[jaccardPairsFrom]] is the one generator: a direct
+  // posting join or a prefix-filtered one, over the full graph or a
+  // batch delta, picked by a measured df-skew gate. Corpora where no
+  // exact route is affordable take the probabilistic LSH path below.
   // ------------------------------------------------------------------
   val JaccardTau = 0.3
 
   /** DataFrame-level Jaccard pair graph — the body of [[jaccardPairs]],
     * reusable by DAG models over an already-resolved documents relation.
     *
-    * r22: routes through the MEASURED direct-vs-prefix gate
-    * ([[pairsFromPostsAuto]]) over a locally persisted postings frame —
-    * the standalone registry rows that rebuild the pair graph per their
-    * contract (`dedup_jaccard_pairs`, `dedup_components*`,
-    * `dedup_keep_best`) previously stayed locked to the direct join
-    * whose Σdf² fan-out the r21 100× legs measured superlinear
-    * (428–557 s class on the boilerplate-heavy corpus) while the DAG
-    * models were already gated (VERDICT r21 #1). The persist is the
-    * in-query analogue of the DAG's postings Table checkpoint: the
-    * probe materializes it once and the chosen branch's 2 (direct) or
-    * 5 (prefix: df, rank, two set sides) postings references read the
+    * r22: the standalone registry rows that rebuild the pair graph per
+    * their contract (`dedup_jaccard_pairs`, `dedup_components*`,
+    * `dedup_keep_best`) take the measured route of [[jaccardPairsFrom]]
+    * over a locally persisted postings frame; locked to the direct
+    * join, the r21 100× legs measured them superlinear (428–557 s
+    * class on the boilerplate-heavy corpus) while the DAG models were
+    * already gated (VERDICT r21 #1). The persist is the in-query
+    * analogue of the DAG's postings Table checkpoint: the probe
+    * materializes it once and the chosen route's 2 (direct) or 5
+    * (prefix: df, rank, two set sides) postings references read the
     * cache instead of re-running the shingle window. MEMORY_AND_DISK
     * (the funnel-persist precedent) so a corpus-scale posting list
-    * degrades to disk, never OOM. [[graft.engine.Caches.retain]]
-    * registers it for scoped consumers (the funnel registry rows);
-    * bench/oracle runs clear caches between queries, so nothing is
-    * carried across runs. Both branches are exact and emit identical
-    * rows — the gate moves cost, never output.
+    * degrades to disk, never OOM.
+    *
+    * Cache lifetime: the postings stay cached for the rest of the
+    * session unless the caller runs inside
+    * [[graft.engine.Caches.scoped]] (the funnel registry rows do; the
+    * scope unpersists them on exit) or calls
+    * `spark.catalog.clearCache()` (Verify and Bench do after every
+    * row). A long-lived session calling this outside a scope keeps one
+    * cached posting list per call. [[minhashEstimate]] persists its
+    * postings the same way.
     */
   def jaccardPairsDf(docs: DataFrame): DataFrame = {
     val posts = graft.engine.Caches.retain(
       shinglePostsDf(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    pairsFromPostsAuto(posts)
-  }
-
-  /** The pair-join half of the set-similarity join, over an
-    * already-built posting list `(doc_id, hs, sz)` — split out so DAG
-    * models can MATERIALIZE the posting list once
-    * ([[graft.models.CorpusPipeline]] `corpus_postings`) and feed both
-    * pair generation and decontamination from the checkpoint instead
-    * of re-shingling the corpus per consumer.
-    *
-    * `probe`, when set, restricts the b-side to a (small) subset of
-    * postings and BROADCASTS it — the incremental-ingest shape: the
-    * standing corpus posting list streams map-side off its scan (no
-    * corpus shuffle), only candidate hits reach the pair aggregation.
-    * With batch doc_ids strictly greater than standing ones, the
-    * `doc_a < doc_b` guard makes the output exactly the edges incident
-    * to the batch — the delta that upserts onto the standing pair table.
-    */
-  def pairsFromPosts(posts: DataFrame, probe: Option[DataFrame] = None): DataFrame = {
-    val a = posts.select(col("hs"), col("doc_id").as("doc_a"), col("sz").as("sz_a"))
-    val b0 = probe.getOrElse(posts)
-      .select(col("hs"), col("doc_id").as("doc_b"), col("sz").as("sz_b"))
-    // Non-probe side: force the posting self-join OUT of the static
-    // broadcast path. Catalyst sizes the exploded posting list at its
-    // parquet ancestor's bytes, so the static planner happily
-    // broadcasts a corpus-scale relation (measured driver OOM at the
-    // 10× corpus under a 1 GiB driver). hint("merge") pins a
-    // sort-merge join at EVERY scale — on Spark 4.1.2 a strategy hint
-    // is honored through AQE re-planning, so no runtime demotion back
-    // to broadcast happens (r15 correction of the earlier claim).
-    // That is the right trade here: both sides are corpus-sized by
-    // contract, so a broadcast would be wrong even from real sizes.
-    val b = if (probe.isDefined) broadcast(b0) else b0.hint("merge")
-    val jac = col("overlap").cast(DoubleType) /
-      (col("sz_a") + col("sz_b") - col("overlap"))
-    // size-ratio prefilter: J(A,B) ≤ min/max of the set sizes, so
-    // J ≥ τ pairs must satisfy the ratio bound — prunes join output
-    // before the pair aggregation ever sees it
-    a.join(b, Seq("hs"))
-      .filter(col("doc_a") < col("doc_b") &&
-        col("sz_a") >= col("sz_b") * JaccardTau && col("sz_b") >= col("sz_a") * JaccardTau)
-      .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
-      .agg(count(lit(1)).as("overlap"))
-      .filter(jac >= JaccardTau) // unrounded, matching the oracle's filter
-      .select(col("doc_a"), col("doc_b"), roundPortable(jac, 6).as("jaccard"))
-      .orderBy("doc_a", "doc_b")
+    jaccardPairsFrom(posts)
   }
 
   val jaccardPairs: Q = Q(
@@ -230,186 +184,20 @@ object Dedup {
            |ORDER BY doc_a, doc_b""".stripMargin)
   )
 
-  /** PREFIX-FILTERED variant of [[jaccardPairs]] — identical output,
-    * different candidate generation (PPJoin-style; Bayardo et al.,
-    * "Scaling Up All Pairs Similarity Search", WWW'07; Xiao et al.,
-    * WWW'08). Under any global shingle order, two sets with J ≥ τ must
-    * share a shingle among each one's first |X| − ⌈τ·|X|⌉ + 1
-    * shingles (if A's prefix missed B entirely, overlap ≤ ⌈τ|A|⌉ − 1
-    * < τ|A| ≤ required overlap — contradiction; the smallest common
-    * element lies in both prefixes). Ordering by ASCENDING document
-    * frequency puts the RAREST shingles in the prefix, so boilerplate
-    * shingles shared by millions of docs never generate candidates.
-    *
-    * When to use which (measured at sf0.1, 32 threads): this corpus
-    * has FLAT document frequencies (max df 25), so the prefix pass
-    * only halves join fan-out while adding a df join + rank window +
-    * verify re-join — the direct join wins (4.4 s vs 13.5 s). On
-    * zipfian web corpora the direct join's Σdf² explodes while prefix
-    * fan-out stays near-linear — there this variant is the only exact
-    * option. Both are exact; `JaccardSpec` asserts equal output.
+  /** Which exact plan [[jaccardPairsFrom]] runs. Every route emits the
+    * same rows; the route moves cost, never output.
     */
-  def jaccardPairsPrefix(s: SparkSession, d: String, tau: Double = JaccardTau): DataFrame =
-    pairsFromPostsPrefix(shinglePosts(s, d), tau)
-
-  /** The prefix-filtered pair join over an already-built posting list
-    * `(doc_id, hs, sz)` — the postings-relation-level twin of
-    * [[pairsFromPosts]], factored out of [[jaccardPairsPrefix]] so DAG
-    * models can route their pair stage through it when the postings
-    * checkpoint measures df-skewed (r20 scale legs: the direct join's
-    * Σdf² candidate mass priced at 428–473 s with 65–74 GB of spill on
-    * the boilerplate-heavy 100× corpus, while prefix candidates stay
-    * near-linear because ascending-df prefixes never emit the
-    * boilerplate shingles). Output identical to [[pairsFromPosts]]
-    * (both exact; JaccardSpec asserts equality).
-    *
-    * Scale notes: the per-doc rank window partitions by doc_id
-    * (ENTITY-bounded — a partition is one document's shingle set); the
-    * candidate join carries merge hints for the same
-    * explode-size-underestimate reason as [[pairsFromPosts]]. `posts`
-    * is referenced four times (df counts, rank, verify sets) — callers
-    * with a non-materialized postings pipeline should checkpoint it
-    * first (the [[graft.models.CorpusPipeline]] shape) or accept the
-    * recomputation.
-    *
-    * The VERIFY stage ships each doc's shingle set ONCE as an array
-    * row (a `collect_set` per doc_id — ENTITY-bounded by document
-    * length, the same collapse [[shinglePostsDf]] itself performs) and
-    * intersects arrays per candidate pair, instead of the r21-draft
-    * posting re-join that re-shuffled and re-sorted the WHOLE posting
-    * table twice (once by doc_a, once by (doc_b, hs)) regardless of
-    * candidate count — the guide-§8 move: decide with one row per
-    * doc, not sz rows. ArrayIntersect hash-builds over primitive
-    * longs, so each pair costs O(sz_a + sz_b). Measured (the Legs `pairs` leg,
-    * checkpointed postings): 39.2 → 20.1 s at the 30× PERIOD=3 corpus,
-    * 185.7 → 85.1 s at 100× — candidate generation (6.6 s at 30×) was
-    * only ~1/5 of the draft's wall, the verify re-join was the rest.
-    * The sets joins hint shuffle_hash (array rows are wide — sorting
-    * them through an SMJ is the regression the embeddingLshPairs
-    * vector-attach already measured; the hint also keeps the
-    * corpus-sized, estimate-underpriced relation out of the static
-    * broadcast path, the r12 class).
-    */
-  def pairsFromPostsPrefix(posts: DataFrame, tau: Double = JaccardTau): DataFrame =
-    pairsFromPostsPrefixImpl(posts, tau, bOnly = None)
-
-  /** Shared body of [[pairsFromPostsPrefix]] and its DELTA twin
-    * ([[pairsFromPostsPrefixDelta]]). `bOnly`, when set, restricts the
-    * b SIDE ONLY — candidate prefixes and verify sets — to the rows
-    * matching the predicate (the incremental batch). Completeness is
-    * unchanged by the restriction: document frequencies, the global
-    * (df, hs) order, and the a side stay corpus-wide, so for any pair
-    * (A, B) with J ≥ τ and B in the batch, the prefix theorem still
-    * guarantees a shared shingle between A's corpus-ordered prefix (a
-    * side, unrestricted) and B's (b side, batch row).
-    */
-  private def pairsFromPostsPrefixImpl(posts: DataFrame, tau: Double,
-      bOnly: Option[Column]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val df = posts.groupBy("hs").agg(count(lit(1)).as("df"))
-    val ranked = posts.join(df, Seq("hs"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("doc_id").orderBy("df", "hs")))
-    val prefix = ranked
-      .filter(col("rnk") <= col("sz") - ceil(col("sz") * tau) + 1)
-      .select(col("hs"), col("doc_id"), col("sz"))
-    val restrict = (d: DataFrame) => bOnly.fold(d)(d.filter)
-    val a = prefix.select(col("hs"), col("doc_id").as("doc_a"), col("sz").as("sz_a"))
-    val b = restrict(prefix)
-      .select(col("hs"), col("doc_id").as("doc_b"), col("sz").as("sz_b"))
-    // merge hints: prefix table and postings are corpus-derived and
-    // explode-size-underestimated (see pairsFromPosts) - never let the
-    // static planner broadcast them. The hint pins SMJ through AQE
-    // too (hints are honored during re-planning on Spark 4.1.2) —
-    // intended: both sides are corpus-sized, broadcast is never right
-    val cand = a.join(b.hint("merge"), Seq("hs"))
-      .filter(col("doc_a") < col("doc_b") &&
-        col("sz_a") >= col("sz_b") * tau && col("sz_b") >= col("sz_a") * tau)
-      .select("doc_a", "doc_b").distinct()
-    // one array row per doc; size(hss) == sz by construction (posts
-    // carries per-doc DISTINCT shingles), so sz need not be re-joined
-    val sets = posts.groupBy("doc_id").agg(collect_set(col("hs")).as("hss"))
-    val jac = col("overlap").cast(DoubleType) /
-      (col("sz_a") + col("sz_b") - col("overlap"))
-    cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("hss").as("hs_a"))
-        .hint("shuffle_hash"), Seq("doc_a"))
-      .join(restrict(sets).select(col("doc_id").as("doc_b"), col("hss").as("hs_b"))
-        .hint("shuffle_hash"), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        size(col("hs_a")).cast("long").as("sz_a"),
-        size(col("hs_b")).cast("long").as("sz_b"),
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast("long").as("overlap"))
-      .filter(jac >= tau)
-      .select(col("doc_a"), col("doc_b"), roundPortable(jac, 6).as("jaccard"))
-      .orderBy("doc_a", "doc_b")
-  }
-
-  /** Prefix-filtered DELTA pair generation — the candidate half of the
-    * incremental refresh when the STANDING corpus is df-skewed: emits
-    * exactly the pairs incident to the batch (doc_ids ≥ `batchFrom`,
-    * the append-only contract: every batch id exceeds every standing
-    * id, so `doc_b` of any delta pair is a batch doc). Output identical
-    * to `pairsFromPosts(posts, probe = Some(batch))` — both exact; the
-    * direct probe form explodes as Σ(df_all·df_batch) when a hot
-    * boilerplate shingle has standing df = c (c candidate rows per
-    * batch posting row, unbounded in corpus skew — VERDICT r21 #3),
-    * while ascending-df prefixes never emit the hot shingles.
-    */
-  def pairsFromPostsPrefixDelta(posts: DataFrame, batchFrom: Long,
-      tau: Double = JaccardTau): DataFrame =
-    pairsFromPostsPrefixImpl(posts, tau, bOnly = Some(col("doc_id") >= batchFrom))
-
-  /** The delta twin of [[postingSkewProbe]]: one aggregate over the
-    * merged posting list returning (Σ df_all·df_batch, |ALL posts|).
-    * Σ df_all·df_batch is EXACTLY the direct probe join's output row
-    * count (each shingle with df_all standing+batch postings and
-    * df_batch batch postings emits df_all·df_batch candidate rows).
-    * It is normalized by the WHOLE posting count — not the batch's —
-    * because that is what the alternative costs: the prefix-delta's
-    * fixed price is a df + rank pass over the ENTIRE posting list
-    * regardless of batch size, so the direct route is the right pick
-    * while its candidate mass stays within a small multiple of that
-    * corpus pass. (Measured at the 30× PERIOD=3 corpus with a 1/30
-    * batch: candidate mass 11.9M on 10.4M postings — 1.15 per corpus
-    * posting row — and direct wins 3.7 vs 10.9 s even though per-BATCH
-    * fan-out is 34; a per-batch normalization would have mis-routed
-    * it. The same budget constant applies: both gates compare the
-    * direct join's output rows against the rows a corpus-wide pass
-    * must touch anyway.)
-    */
-  def deltaSkewProbe(posts: DataFrame, batchFrom: Long): (Double, Long) = {
-    val r = posts.groupBy("hs")
-      .agg(count(lit(1)).as("dfa"),
-        sum(when(col("doc_id") >= batchFrom, 1L).otherwise(0L)).as("dfb"))
-      .agg(coalesce(sum(col("dfa").cast(DoubleType) * col("dfb")), lit(0.0)).as("sq"),
-        coalesce(sum(col("dfa")), lit(0L)).as("n"))
-      .head()
-    (r.getDouble(0), r.getLong(1))
-  }
-
-  /** MEASURED delta pair generation (VERDICT r21 #3 — the incremental
-    * DAG's pair stage was ungated): probe the merged posting list's
-    * cross-df mass, then route. A flat standing corpus keeps the
-    * broadcast-probe join (batch broadcasts, the standing posting list
-    * streams map-side off its scan — zero corpus shuffle, the
-    * EngineSpec-pinned in-contract shape); a boilerplate-heavy one —
-    * Σ df_all·df_batch beyond [[DirectPairFanoutMax]] × |posts| (see
-    * [[deltaSkewProbe]] for why the normalizer is the whole posting
-    * list) — routes through the batch-restricted prefix filter, whose
-    * candidate mass excludes the hot shingles at the cost of one
-    * corpus-side df/rank pass (reads the postings CHECKPOINT, never
-    * re-shingles). Both branches exact and row-identical — the gate
-    * moves cost, never output (ExtSpec pins it on a synthetic skewed
-    * relation; EngineSpec pins the merged table against a full
-    * rebuild).
-    */
-  def pairsFromPostsDeltaAuto(posts: DataFrame, batchFrom: Long,
-      tau: Double = JaccardTau): DataFrame = {
-    val (sq, n) = deltaSkewProbe(posts, batchFrom)
-    if (sq <= DirectPairFanoutMax * n)
-      pairsFromPosts(posts, probe = Some(posts.filter(col("doc_id") >= batchFrom)))
-    else pairsFromPostsPrefixDelta(posts, batchFrom, tau)
+  sealed trait PairRoute
+  object PairRoute {
+    /** The posting equi-join: Σ df_all·df_b candidate rows, no df machinery. */
+    case object Direct extends PairRoute
+    /** Ascending-df prefix filter plus array verify: the hot shingles
+      * never generate candidates, at the price of a corpus-wide df +
+      * rank pass.
+      */
+    case object Prefix extends PairRoute
+    /** [[pairSkewProbe]], then [[measuredRoute]] picks Direct or Prefix. */
+    case object Measured extends PairRoute
   }
 
   /** Candidate-mass budget for the DIRECT posting join, in emitted
@@ -433,39 +221,178 @@ object Dedup {
     */
   val DirectPairFanoutMax = 16.0
 
-  /** The df-skew probe: one column-pruned aggregate over the posting
-    * list returning (Σdf², |posts|) — Σdf² in DOUBLE because a web
-    * corpus's hot boilerplate shingle alone can put it past int64.
-    * Σdf² is exactly the direct join's output row count, so the probe
-    * measures the quantity the gate budgets, not a proxy (same
-    * engine-measures-itself pattern as the incremental-ingest char/
-    * token gate above).
+  /** The one direct-vs-prefix gate over a [[pairSkewProbe]] reading:
+    * the direct route while its candidate mass `sq` stays within
+    * [[DirectPairFanoutMax]] rows per posting row.
     */
-  def postingSkewProbe(posts: DataFrame): (Double, Long) = {
-    val r = posts.groupBy("hs").agg(count(lit(1)).as("df"))
-      .agg(coalesce(sum(col("df").cast(DoubleType) * col("df")), lit(0.0)).as("sq"),
+  def measuredRoute(sq: Double, n: Long): PairRoute =
+    if (sq <= DirectPairFanoutMax * n) PairRoute.Direct else PairRoute.Prefix
+
+  /** The df-skew probe: one column-pruned aggregate over the posting
+    * list returning (Σ df_all·df_batch, |posts|), where df_batch
+    * counts a shingle's postings with doc_id ≥ `batchFrom`. With no
+    * batch it is (Σdf², |posts|) from a count-only aggregate. The sum
+    * is EXACTLY the direct route's join output row count (a shingle
+    * with df_all postings, df_batch of them on the b side, emits
+    * df_all·df_batch rows), so the probe measures the quantity the gate
+    * budgets, not a proxy; DOUBLE because a web corpus's hot
+    * boilerplate shingle alone can put it past int64.
+    *
+    * A delta is normalized by the WHOLE posting count, not the batch's,
+    * because that is what the alternative costs: the prefix route pays
+    * a df + rank pass over the entire posting list whatever the batch
+    * size. (Measured at the 30× PERIOD=3 corpus with a 1/30 batch:
+    * candidate mass 11.9M on 10.4M postings — 1.15 per corpus posting
+    * row — and direct wins 3.7 vs 10.9 s even though per-BATCH fan-out
+    * is 34; a per-batch normalization would have mis-routed it.)
+    */
+  def pairSkewProbe(posts: DataFrame, batchFrom: Option[Long] = None): (Double, Long) = {
+    val perShingle = posts.groupBy("hs").agg(count(lit(1)).as("df"),
+      batchFrom.map(f => sum(when(col("doc_id") >= f, 1L).otherwise(0L)).as("dfb")).toSeq: _*)
+    val dfb = if (batchFrom.isDefined) col("dfb") else col("df")
+    val r = perShingle.agg(coalesce(sum(col("df").cast(DoubleType) * dfb), lit(0.0)).as("sq"),
         coalesce(sum(col("df")), lit(0L)).as("n"))
       .head()
     (r.getDouble(0), r.getLong(1))
   }
 
-  /** MEASURED direct-vs-prefix pair generation (VERDICT r20 #1/#2):
-    * probe the posting list's df skew, then route — flat document
-    * frequencies take [[pairsFromPosts]] (one join, no df machinery),
-    * zipfian/boilerplate frequencies take [[pairsFromPostsPrefix]]
-    * (ascending-df prefixes drop the hot shingles whose c² fan-out is
-    * the direct join's failure mode). Both branches are exact and
-    * emit identical rows, so the gate changes COST only, never
-    * output; the production DAG pair stages
-    * ([[graft.models.CorpusPipeline]] `corpus_pairs`,
-    * [[graft.models.DedupFunnel]] `dedup_pairs`) call this over their
-    * materialized postings checkpoint, where the probe is one
-    * column-pruned parquet scan.
+  /** The exact Jaccard pair graph — pairs (doc_a < doc_b) with
+    * J ≥ [[JaccardTau]] (unrounded, as the oracle filters), scored at
+    * 6 dp — over a posting list `(doc_id, hs, sz)` of per-doc DISTINCT
+    * shingles, `sz` = the doc's set size. `posts` is referenced up to
+    * five times: pass a materialized checkpoint
+    * ([[graft.models.CorpusPipeline]] `corpus_postings`) or a persisted
+    * frame ([[jaccardPairsDf]]), or accept the recomputation.
+    *
+    * `batchFrom = Some(f)` emits only the pairs incident to the batch
+    * (doc_id ≥ f) under the append-only contract: every batch id
+    * exceeds every standing id, so `doc_b` of any delta pair is a batch
+    * doc and the output is exactly the full graph's pairs with
+    * doc_b ≥ f — the delta that upserts onto the standing pair table.
+    * `None` is the full graph.
+    *
+    * Routes ([[PairRoute]]):
+    *  - Direct: |A∩B| falls out of the posting equi-join as a group
+    *    count and |A∪B| = |A|+|B|−|A∩B|, so no array intersection runs.
+    *    Fan-out per shingle is df_all·df_b — fine while document
+    *    frequencies are flat (the harness corpus: max df 25). A delta
+    *    BROADCASTS the batch postings, so the standing posting list
+    *    streams map-side off its scan with no corpus shuffle (EngineSpec
+    *    pins the BroadcastHashJoin).
+    *  - Prefix (PPJoin-style; Bayardo et al., "Scaling Up All Pairs
+    *    Similarity Search", WWW'07; Xiao et al., WWW'08): under any
+    *    global shingle order, two sets with J ≥ τ share a shingle among
+    *    each one's first |X| − ⌈τ·|X|⌉ + 1 shingles (if A's prefix
+    *    missed B entirely, overlap ≤ ⌈τ|A|⌉ − 1 < τ|A| ≤ the required
+    *    overlap). Ordering by ASCENDING df puts the rarest shingles in
+    *    the prefix, so boilerplate shingles shared by millions of docs
+    *    never generate candidates; [[verifyJaccard]] scores them. The
+    *    per-doc rank window partitions by doc_id (entity-bounded). A
+    *    delta restricts the b SIDE ONLY — prefixes and verify sets — to
+    *    the batch; df, the global (df, hs) order and the a side stay
+    *    corpus-wide, so the prefix theorem still covers every (A, batch
+    *    B) pair.
+    *  - Measured: [[pairSkewProbe]] (a Spark job, run while the
+    *    DataFrame is built) and [[measuredRoute]]. Flat corpora keep the
+    *    direct join; df-skewed ones, the 100 TB web-corpus case, take
+    *    the prefix route (see [[DirectPairFanoutMax]] for the measured
+    *    crossover).
+    *
+    * ExtSpec pins the gate on synthetic flat and skewed relations for
+    * both the full graph and a delta; PropertySpec pins every route ×
+    * {full, delta} against a plain-Scala all-pairs reference on random
+    * corpora; EngineSpec pins the merged incremental table against a
+    * full rebuild.
     */
-  def pairsFromPostsAuto(posts: DataFrame, tau: Double = JaccardTau): DataFrame = {
-    val (sq, n) = postingSkewProbe(posts)
-    if (sq <= DirectPairFanoutMax * n) pairsFromPosts(posts)
-    else pairsFromPostsPrefix(posts, tau)
+  def jaccardPairsFrom(posts: DataFrame, batchFrom: Option[Long] = None,
+      route: PairRoute = PairRoute.Measured): DataFrame = {
+    val bOnly = batchFrom.map(col("doc_id") >= _)
+    def sides(d: DataFrame) = (
+      d.select(col("hs"), col("doc_id").as("doc_a"), col("sz").as("sz_a")),
+      bOnly.fold(d)(d.filter).select(col("hs"), col("doc_id").as("doc_b"), col("sz").as("sz_b")))
+    // size-ratio prefilter: J(A,B) ≤ min/max of the set sizes, so J ≥ τ
+    // pairs must satisfy the ratio bound — prunes candidates before
+    // any aggregation or verify sees them
+    val candidate = col("doc_a") < col("doc_b") &&
+      col("sz_a") >= col("sz_b") * JaccardTau && col("sz_b") >= col("sz_a") * JaccardTau
+    route match {
+      case PairRoute.Measured =>
+        val (sq, n) = pairSkewProbe(posts, batchFrom)
+        jaccardPairsFrom(posts, batchFrom, measuredRoute(sq, n))
+      case PairRoute.Direct =>
+        val (a, b) = sides(posts)
+        // A full graph's b side is corpus-sized: force the self-join OUT
+        // of the static broadcast path. Catalyst sizes the exploded
+        // posting list at its parquet ancestor's bytes, so the static
+        // planner happily broadcasts a corpus-scale relation (measured
+        // driver OOM at the 10× corpus under a 1 GiB driver). hint("merge")
+        // pins a sort-merge join at EVERY scale — on Spark 4.1.2 a
+        // strategy hint is honored through AQE re-planning, so no
+        // runtime demotion back to broadcast happens (r15 correction).
+        a.join(if (batchFrom.isDefined) broadcast(b) else b.hint("merge"), Seq("hs"))
+          .filter(candidate)
+          .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
+          .agg(count(lit(1)).as("overlap"))
+          .transform(scoredPairs)
+      case PairRoute.Prefix =>
+        import org.apache.spark.sql.expressions.Window
+        val df = posts.groupBy("hs").agg(count(lit(1)).as("df"))
+        val prefix = posts.join(df, Seq("hs"))
+          .withColumn("rnk", row_number().over(
+            Window.partitionBy("doc_id").orderBy("df", "hs")))
+          .filter(col("rnk") <= col("sz") - ceil(col("sz") * JaccardTau) + 1)
+          .select(col("hs"), col("doc_id"), col("sz"))
+        val (a, b) = sides(prefix)
+        // merge hint: the prefix table is corpus-derived and
+        // explode-size-underestimated like the postings — never let the
+        // static planner (or AQE re-planning) broadcast it
+        verifyJaccard(a.join(b.hint("merge"), Seq("hs")).filter(candidate)
+          .select("doc_a", "doc_b").distinct(), posts, bOnly)
+    }
+  }
+
+  /** Exact-Jaccard verify of a candidate set `(doc_a, doc_b)` — the
+    * prefix route's and [[minhashLsh]]'s — via ONE array row per doc:
+    * a `collect_set` per doc_id (entity-bounded by document length, the
+    * same collapse [[shinglePostsDf]] performs), intersected per
+    * candidate pair. ArrayIntersect hash-builds over primitive longs,
+    * so each pair costs O(sz_a + sz_b), and the shuffle moves one row
+    * per doc plus two skinny candidate streams. The r21-draft verify
+    * re-joined the WHOLE posting table twice (by doc_a, then by
+    * (doc_b, hs)) whatever the candidate count; measured on the Legs
+    * `pairs` leg (checkpointed postings), the prefix route went
+    * 39.2 → 20.1 s at the 30× PERIOD=3 corpus and 185.7 → 85.1 s at
+    * 100×. The sets joins hint shuffle_hash: array rows are wide
+    * (sorting them through an SMJ is the regression the
+    * embeddingLshPairs vector-attach measured) and the hint keeps the
+    * corpus-sized, estimate-underpriced relation out of the static
+    * broadcast path. `bOnly` restricts the b-side sets to a batch.
+    */
+  private def verifyJaccard(cand: DataFrame, posts: DataFrame,
+      bOnly: Option[Column]): DataFrame = {
+    // size(hss) == sz by construction (posts carries per-doc DISTINCT
+    // shingles), so sz need not be re-joined
+    val sets = posts.groupBy("doc_id").agg(collect_set(col("hs")).as("hss"))
+    cand
+      .join(sets.select(col("doc_id").as("doc_a"), col("hss").as("hs_a"))
+        .hint("shuffle_hash"), Seq("doc_a"))
+      .join(bOnly.fold(sets)(sets.filter).select(col("doc_id").as("doc_b"), col("hss").as("hs_b"))
+        .hint("shuffle_hash"), Seq("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        size(col("hs_a")).cast("long").as("sz_a"),
+        size(col("hs_b")).cast("long").as("sz_b"),
+        size(array_intersect(col("hs_a"), col("hs_b"))).cast("long").as("overlap"))
+      .transform(scoredPairs)
+  }
+
+  /** `(doc_a, doc_b, sz_a, sz_b, overlap)` → the pairs with unrounded
+    * J ≥ [[JaccardTau]], J rounded to 6 dp, in pair order.
+    */
+  private def scoredPairs(overlaps: DataFrame): DataFrame = {
+    val jac = col("overlap").cast(DoubleType) / (col("sz_a") + col("sz_b") - col("overlap"))
+    overlaps.filter(jac >= JaccardTau)
+      .select(col("doc_a"), col("doc_b"), roundPortable(jac, 6).as("jaccard"))
+      .orderBy("doc_a", "doc_b")
   }
 
   // ------------------------------------------------------------------
@@ -589,35 +516,7 @@ object Dedup {
         Seq("band", "key"))
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
-    // exact-Jaccard verify via ONE array row per doc (r22 — the same
-    // guide-§8 verify the r21 prefix path shipped): the draft verify
-    // re-joined the WHOLE posting table twice (re-shuffled by doc_a,
-    // then by (doc_b, hs)) regardless of candidate count — 2·|posts|
-    // shuffled rows to verify a banding-bounded candidate set. A
-    // collect_set row per doc is ENTITY-bounded (the same collapse
-    // shinglePostsDf performs), the shuffle moves one row per doc +
-    // two skinny candidate streams, and ArrayIntersect hash-builds
-    // over primitive longs — O(sz_a + sz_b) per pair. size(hss) == sz
-    // by construction (posts carries per-doc DISTINCT shingles).
-    // shuffle_hash for the same two reasons as pairsFromPostsPrefix:
-    // array rows are wide (sorting them through an SMJ is the measured
-    // vector-attach regression) and the corpus-sized relation must
-    // stay out of the static broadcast path.
-    val sets = posts.groupBy("doc_id").agg(collect_set(col("hs")).as("hss"))
-    val jac = col("overlap").cast(DoubleType) /
-      (col("sz_a") + col("sz_b") - col("overlap"))
-    cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("hss").as("hs_a"))
-        .hint("shuffle_hash"), Seq("doc_a"))
-      .join(sets.select(col("doc_id").as("doc_b"), col("hss").as("hs_b"))
-        .hint("shuffle_hash"), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        size(col("hs_a")).cast("long").as("sz_a"),
-        size(col("hs_b")).cast("long").as("sz_b"),
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast("long").as("overlap"))
-      .filter(jac >= JaccardTau) // unrounded, same threshold semantics as jaccardPairs
-      .select(col("doc_a"), col("doc_b"), roundPortable(jac, 6).as("jaccard"))
-      .orderBy("doc_a", "doc_b")
+    verifyJaccard(cand, posts, bOnly = None)
   }
 
   val minhashLsh: Q = Q(
@@ -773,22 +672,13 @@ object Dedup {
   // shift (the ann_recall_eval posture, ported to dedup).
   //
   // Scale: both branches are the already-audited production shapes
-  // (posting join; banded candidates) — the eval adds one left-semi
-  // pair join and three 1-row aggregates. Exact integer counts; one
-  // 6dp ratio.
+  // (the direct route of jaccardPairsFrom; banded candidates) — the
+  // eval adds one left-semi pair join and three 1-row aggregates.
+  // Exact integer counts; one 6dp ratio.
   // ------------------------------------------------------------------
   val recallEval: Q = Q(
     (s, d) => {
-      val posts = shinglePosts(s, d, hash60)
-      val pa = posts.select(col("doc_id").as("doc_a"), col("hs"), col("sz").as("sz_a"))
-      val pb = posts.select(col("doc_id").as("doc_b"), col("hs"), col("sz").as("sz_b"))
-      val jac = col("overlap").cast(DoubleType) /
-        (col("sz_a") + col("sz_b") - col("overlap"))
-      val truth = pa.join(pb.hint("merge"), Seq("hs"))
-        .filter(col("doc_a") < col("doc_b"))
-        .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
-        .agg(count(lit(1)).as("overlap"))
-        .filter(jac >= JaccardTau)
+      val truth = jaccardPairsFrom(shinglePosts(s, d, hash60), route = PairRoute.Direct)
         .select("doc_a", "doc_b")
       val lsh = minhashLsh.build(s, d).select("doc_a", "doc_b")
       val nT = truth.agg(count(lit(1)).as("n_truth"))
@@ -1536,12 +1426,15 @@ object Dedup {
   // ------------------------------------------------------------------
   val minhashEstimate: Q = Q(
     (s, d) => {
-      // persisted postings + measured pair-gen gate (r22, same class as
-      // jaccardPairsDf: this row's pair side was the one remaining
-      // UNgated pairsFromPosts over full postings — identical Σdf²
-      // failure mode on boilerplate-heavy corpora, identical output
-      // under either branch). The persist also feeds the signature
-      // aggregate from the cache instead of a second shingle pass.
+      // persisted postings + the measured route of jaccardPairsFrom
+      // (r22, same class as jaccardPairsDf: this row's pair side was
+      // the one remaining ungated direct join over full postings —
+      // identical Σdf² failure mode on boilerplate-heavy corpora,
+      // identical output under either route). The persist also feeds
+      // the signature aggregate from the cache instead of a second
+      // shingle pass. Like jaccardPairsDf's, the postings stay cached
+      // for the session unless the caller runs inside Caches.scoped or
+      // calls spark.catalog.clearCache().
       val posts = graft.engine.Caches.retain(
         shinglePosts(s, d, hash60)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -1557,7 +1450,7 @@ object Dedup {
       val est = matches.cast(DoubleType) / NumHashes
       val bound = lit(3.0) * sqrt(col("jaccard") * (lit(1.0) - col("jaccard")) / NumHashes) +
         lit(1.0 / NumHashes)
-      pairsFromPostsAuto(posts)
+      jaccardPairsFrom(posts)
         .join(sigA, Seq("doc_a"))
         .join(sigB, Seq("doc_b"))
         .select(col("doc_a"), col("doc_b"), col("jaccard"),

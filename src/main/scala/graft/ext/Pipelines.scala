@@ -1818,20 +1818,8 @@ object Pipelines {
   // them.
   // ------------------------------------------------------------------
   val packedDocs: Q = Q(
-    (s, d) => {
-      val wh = java.nio.file.Files.createTempDirectory("graft-corpus-reg")
-      try {
-        graft.engine.Caches.scoped {
-          val r = graft.models.CorpusPipeline.run(s, d,
-            new graft.engine.TableSink.Parquet(wh.toString))
-          require(r.allTestsPassed && r.skipped.isEmpty,
-            s"corpus DAG gated: ${r.tests.filterNot(_.passed).mkString(", ")}")
-          val out = r("corpus_packed").orderBy("doc_id")
-          s.createDataFrame(
-            java.util.Arrays.asList(out.collect(): _*), out.schema)
-        }
-      } finally graft.engine.Scratch.deleteTree(wh)
-    },
+    (s, d) => graft.engine.DagRunner.collectTable(s, "corpus DAG")(
+      graft.models.CorpusPipeline.run(s, d, _))(_("corpus_packed").orderBy("doc_id")),
     // the full-chain replay: clean gate + md5 keep-first, shingle-set
     // Jaccard pairs (string sets — hash collisions are the accepted
     // xxhash64-vs-string convention every dedup oracle shares),

@@ -27,7 +27,7 @@ import graft.ext.{Clusters, Dedup, Pipelines, TextAnalysis}
   *
   * Stage semantics reuse the SAME shared building blocks as the
   * registry queries — `TextAnalysis.qualityCols` for the gate,
-  * `Dedup.shinglePostsDf`/`pairsFromPosts` for shingles and the pair
+  * `Dedup.shinglePostsDf`/`jaccardPairsFrom` for shingles and the pair
   * join, `Clusters.connectedComponents`/`keepBest` for the funnel, the
   * `Pipelines.DomainCap`/`PackBudget` constants — so the pipeline
   * cannot silently fork from the published per-stage metrics.
@@ -42,7 +42,9 @@ import graft.ext.{Clusters, Dedup, Pipelines, TextAnalysis}
   * gates the descendants instead of shipping a corrupt training set.
   * At 100 TB each stage is one bounded pass: clean is a scan + one
   * partial-aggregated keep-first (min_by per content hash),
-  * postings one shingle pass, pairs a posting-list equi-join, labels
+  * postings one shingle pass, pairs one `Dedup.jaccardPairsFrom` call
+  * (a posting-list equi-join, or its prefix filter when the postings
+  * probe df-skewed), labels
   * vertex-set-only propagation, keep/near-dup one argmax aggregate + semi-join,
   * decontaminate broadcasts the benchmark shingles, resample trains
   * the bigram LM on the surviving checkpoint and gates on per-lang
@@ -113,14 +115,14 @@ object CorpusPipeline {
   val pairs: Model =
     Model("corpus_pairs", Seq("corpus_postings"), Materialization.Table,
       tests = Seq(NotNull("doc_a"), NotNull("doc_b"))) { in =>
-      // measured direct-vs-prefix routing (VERDICT r20 #1): the probe
-      // is one column-pruned scan of the postings CHECKPOINT; a
-      // flat-df corpus keeps the direct posting join, a boilerplate-
-      // heavy one (the 100 TB web-corpus case — the r20 100× legs
-      // priced the direct join at 428–473 s / 65–74 GB spill there)
-      // routes through ascending-df prefix filtering. Both exact,
-      // identical rows — the gate moves cost, never output.
-      Dedup.pairsFromPostsAuto(in("corpus_postings"))
+      // the measured route (VERDICT r20 #1): the probe is one
+      // column-pruned scan of the postings CHECKPOINT; a flat-df corpus
+      // keeps the direct posting join, a boilerplate-heavy one (the
+      // 100 TB web-corpus case — the r20 100× legs priced the direct
+      // join at 428–473 s / 65–74 GB spill there) takes ascending-df
+      // prefix filtering. Both exact, identical rows — the gate moves
+      // cost, never output.
+      Dedup.jaccardPairsFrom(in("corpus_postings"))
     }
 
   val labels: Model =
@@ -255,8 +257,11 @@ object CorpusPipeline {
   //
   // Only the batch shuffles: the clean delta scans batch documents
   // only; the postings delta shingles the batch's new docs only; the
-  // pair delta BROADCASTS the batch postings so the standing posting
-  // list streams map-side off its parquet scan. Labels then re-run
+  // pair delta is `jaccardPairsFrom(postings, Some(batchFrom))`, whose
+  // direct route BROADCASTS the batch postings so the standing posting
+  // list streams map-side off its parquet scan (a df-skewed standing
+  // corpus takes the batch-restricted prefix route instead; both emit
+  // the same delta edges). Labels then re-run
   // global propagation over the merged edge set — which is what makes
   // the refresh EXACT: a batch doc that bridges two standing clusters
   // merges them, same as a full rebuild (`EngineSpec` pins
@@ -313,16 +318,16 @@ object CorpusPipeline {
     val pairsDelta =
       Model("corpus_pairs", Seq("corpus_postings"), Materialization.Table,
         tests = Seq(NotNull("doc_a"), NotNull("doc_b"))) { in =>
-        // measured delta routing (VERDICT r21 #3): the broadcast-probe
-        // join bounds the BATCH side, but a hot standing shingle with
-        // df = c still fans out c candidate rows per batch posting —
-        // Σ(df_all·df_batch) is unbounded in corpus skew. The probe
-        // (one column-pruned scan of the post-merge postings
+        // the measured route over the batch (VERDICT r21 #3): the
+        // direct route broadcasts the BATCH postings, but a hot standing
+        // shingle with df = c still fans out c candidate rows per batch
+        // posting — Σ(df_all·df_batch) is unbounded in corpus skew. The
+        // probe (one column-pruned scan of the post-merge postings
         // checkpoint) measures exactly that mass and keeps the
         // in-contract broadcast shape on flat corpora; a skewed
-        // standing corpus routes through the batch-restricted prefix
-        // filter. Both branches exact and row-identical.
-        Dedup.pairsFromPostsDeltaAuto(in("corpus_postings"), batchFrom)
+        // standing corpus takes the batch-restricted prefix route. Both
+        // exact and row-identical.
+        Dedup.jaccardPairsFrom(in("corpus_postings"), Some(batchFrom))
       }
 
     Seq(cleanedDelta, postingsDelta, pairsDelta, labels, keepList,

@@ -47,15 +47,15 @@ object DedupFunnel {
   val pairs: Model =
     Model("dedup_pairs", Seq("dedup_postings"), Materialization.Table,
       tests = Seq(NotNull("doc_a"), NotNull("doc_b"))) { in =>
-      // measured direct-vs-prefix routing over the MATERIALIZED
-      // postings checkpoint (VERDICT r20 #1 — the funnel previously
-      // re-shingled inside jaccardPairsDf and was locked to the
-      // direct posting join whose Σdf² fan-out the r20 100× legs
-      // measured superlinear on boilerplate-heavy corpora). The
-      // checkpoint makes the df-skew probe one column-pruned parquet
-      // scan and lets the prefix branch's four postings references
-      // read parquet instead of re-running the shingle window.
-      Dedup.pairsFromPostsAuto(in("dedup_postings"))
+      // the measured route over the MATERIALIZED postings checkpoint
+      // (VERDICT r20 #1 — the funnel previously re-shingled inside
+      // jaccardPairsDf and was locked to the direct posting join whose
+      // Σdf² fan-out the r20 100× legs measured superlinear on
+      // boilerplate-heavy corpora). The checkpoint makes the df-skew
+      // probe one column-pruned parquet scan and lets the prefix
+      // route's postings references read parquet instead of re-running
+      // the shingle window.
+      Dedup.jaccardPairsFrom(in("dedup_postings"))
     }
 
   val labels: Model =

@@ -27,9 +27,9 @@ import graft.obs
   *    degenerate key (default 10⁷ hot over 10⁷ cold rows).
   *  - `pairs <dir> [legs] [batchFrom]`: direct vs prefix pair
   *    generation over a materialized postings checkpoint; `legs` is a
-  *    comma-set of probe,direct,prefix (default), delta_probe,
-  *    delta_direct, delta_prefix (batch = doc_id >= batchFrom), plans,
-  *    delta_plans.
+  *    comma-set of probe,direct,prefix (default), plans, and the delta
+  *    legs delta_probe, delta_direct, delta_prefix, delta_plans (batch
+  *    = doc_id >= batchFrom, required by the delta legs).
   *  - `reband <dir> <B,L[:B,L…]>`: embedding-LSH candidates and
   *    planted-twin recall per banding (":" separates configs — sbt
   *    -batch treats ";" as a command break).
@@ -310,23 +310,26 @@ object Legs {
         Windows.groupedPrefixSum(d, Seq("lang"), Seq(col("doc_id")), col("n_tokens"), "cum", parts))): _*)
   }
 
-  /** Direct-vs-prefix pair generation (VERDICT r20 asks #1/#2):
-    * [[Dedup.pairsFromPosts]] against [[Dedup.pairsFromPostsPrefix]]
-    * over a MATERIALIZED postings checkpoint (the production DAG shape
-    * — `corpus_postings` / `dedup_postings`), plus the df-skew probe
-    * ([[Dedup.postingSkewProbe]]) whose fan-out reading
-    * `Dedup.pairsFromPostsAuto` gates on. The numbers set — and
-    * re-justify — `Dedup.DirectPairFanoutMax` (SCALING.md
-    * "direct-vs-prefix policy"). The delta legs (VERDICT r21 #3) run
-    * the incremental pair stage over the same checkpoint: delta_direct
-    * is the broadcast-probe join shipped before r22, delta_prefix the
-    * batch-restricted prefix route, delta_probe the Σ(df_all·df_batch)
-    * fan-out that gate reads.
+  /** Direct-vs-prefix pair generation (VERDICT r20 asks #1/#2): the
+    * Direct and Prefix routes of [[Dedup.jaccardPairsFrom]] over a
+    * MATERIALIZED postings checkpoint (the production DAG shape —
+    * `corpus_postings` / `dedup_postings`), plus the df-skew probe
+    * ([[Dedup.pairSkewProbe]]) and the route [[Dedup.measuredRoute]]
+    * picks from its reading. The numbers set — and re-justify —
+    * `Dedup.DirectPairFanoutMax` (SCALING.md "direct-vs-prefix
+    * policy"). The delta legs (VERDICT r21 #3) run the same routes
+    * over the batch doc_id >= `batchFrom`, which they require (without
+    * it the batch would be the whole corpus, and delta_direct would
+    * broadcast all of it): delta_direct is the broadcast-probe join
+    * shipped before r22, delta_prefix the batch-restricted prefix
+    * route, delta_probe the Σ(df_all·df_batch) fan-out the gate reads.
     */
   def pairs(args: Seq[String])(implicit spark: SparkSession): Unit = {
     val dir = args(0)
     val legs = args.lift(1).fold(Set("probe", "direct", "prefix"))(_.split(",").toSet)
-    val batchFrom = args.lift(2).fold(Long.MinValue)(_.toLong)
+    val batch = args.lift(2).map(_.toLong)
+    require(batch.isDefined || !legs.exists(_.startsWith("delta_")),
+      "usage: Legs pairs <dir> <legs> <batchFrom> — the delta_* legs need batchFrom")
     // the postings checkpoint is built once — the DAG's corpus_postings
     // write — and is NOT part of the compared legs
     val scratch = java.nio.file.Files.createTempDirectory("graft-pairs")
@@ -338,9 +341,9 @@ object Legs {
       emit("pairs", "postings_build", b, "dir" -> dir,
         "shuffle_partitions" -> spark.conf.get("spark.sql.shuffle.partitions").toInt)
       val posts = spark.read.parquet(s"$scratch/posts")
-      def pick(sq: Double, n: Long) = if (sq <= Dedup.DirectPairFanoutMax * n) "direct" else "prefix"
+      def pick(sq: Double, n: Long) = Dedup.measuredRoute(sq, n).toString.toLowerCase
       if (legs("probe")) {
-        val p = obs.span("pairs probe")(Dedup.postingSkewProbe(posts))
+        val p = obs.span("pairs probe")(Dedup.pairSkewProbe(posts))
         val (sq, n) = p.value
         emit("pairs", "probe", p, "sum_df_sq" -> sq, "posts" -> n,
           "fanout" -> (if (n > 0) sq / n else 0.0), "budget" -> Dedup.DirectPairFanoutMax,
@@ -348,33 +351,29 @@ object Legs {
       }
       def timed(tag: String)(df: => DataFrame): Unit =
         if (legs(tag)) emit("pairs", tag, obs.span(s"pairs $tag")(noop(df)), "dir" -> dir)
-      timed("direct")(Dedup.pairsFromPosts(posts))
-      timed("prefix")(Dedup.pairsFromPostsPrefix(posts))
+      import Dedup.PairRoute.{Direct, Prefix}
+      timed("direct")(Dedup.jaccardPairsFrom(posts, route = Direct))
+      timed("prefix")(Dedup.jaccardPairsFrom(posts, route = Prefix))
       if (legs("delta_probe")) {
-        val p = obs.span("pairs delta_probe")(Dedup.deltaSkewProbe(posts, batchFrom))
+        val p = obs.span("pairs delta_probe")(Dedup.pairSkewProbe(posts, batch))
         val (sq, n) = p.value
         emit("pairs", "delta_probe", p, "sum_dfa_dfb" -> sq, "all_posts" -> n,
           "fanout_per_corpus_row" -> (if (n > 0) sq / n else 0.0),
           "budget" -> Dedup.DirectPairFanoutMax, "pick" -> pick(sq, n),
-          "batch_from" -> batchFrom, "dir" -> dir)
+          "batch_from" -> batch.get, "dir" -> dir)
       }
-      val batchProbe = Some(posts.filter(col("doc_id") >= batchFrom))
-      timed("delta_direct")(Dedup.pairsFromPosts(posts, probe = batchProbe))
-      timed("delta_prefix")(Dedup.pairsFromPostsPrefixDelta(posts, batchFrom))
+      timed("delta_direct")(Dedup.jaccardPairsFrom(posts, batch, Direct))
+      timed("delta_prefix")(Dedup.jaccardPairsFrom(posts, batch, Prefix))
       // .explain("formatted") artifacts — the pair stage's plan over the
       // postings checkpoint
       def plan(title: String, df: DataFrame): Unit = {
         println(s"==== PLAN $title ====")
         println(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
       }
-      if (legs("plans")) {
-        plan("direct (pairsFromPosts)", Dedup.pairsFromPosts(posts))
-        plan("prefix (pairsFromPostsPrefix)", Dedup.pairsFromPostsPrefix(posts))
-      }
-      if (legs("delta_plans")) {
-        plan("delta direct (pairsFromPosts probe)", Dedup.pairsFromPosts(posts, probe = batchProbe))
-        plan("delta prefix (pairsFromPostsPrefixDelta)", Dedup.pairsFromPostsPrefixDelta(posts, batchFrom))
-      }
+      if (legs("plans"))
+        Seq(Direct, Prefix).foreach(r => plan(s"$r", Dedup.jaccardPairsFrom(posts, route = r)))
+      if (legs("delta_plans"))
+        Seq(Direct, Prefix).foreach(r => plan(s"delta $r", Dedup.jaccardPairsFrom(posts, batch, r)))
     } finally Scratch.deleteTree(scratch)
   }
 

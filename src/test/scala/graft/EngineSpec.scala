@@ -724,8 +724,8 @@ class EngineSpec extends SparkSpec {
     // broadcasts the batch postings so the standing posting list is
     // never shuffled — the join must be broadcast, probe side batch
     val posts = spark.read.parquet(s"$wh/corpus_postings")
-    val deltaPlan = graft.ext.Dedup.pairsFromPosts(posts,
-      probe = Some(posts.filter(col("doc_id") >= batchFrom)))
+    val deltaPlan = graft.ext.Dedup.jaccardPairsFrom(posts, Some(batchFrom),
+      graft.ext.Dedup.PairRoute.Direct)
       .queryExecution.executedPlan.toString
     assert(deltaPlan.contains("BroadcastHashJoin"),
       s"pair delta shuffles the standing posting list:\n$deltaPlan")

@@ -395,7 +395,8 @@ class ExtSpec extends SparkSpec {
 
   test("prefix-filtered jaccard join produces identical output to the direct join") {
     val direct = Dedup.jaccardPairs.build(spark, d).collect().map(_.toString).sorted
-    val prefixed = Dedup.jaccardPairsPrefix(spark, d).collect().map(_.toString).sorted
+    val prefixed = Dedup.jaccardPairsFrom(Dedup.shinglePosts(spark, d), route = Dedup.PairRoute.Prefix)
+      .collect().map(_.toString).sorted
     assert(direct.nonEmpty)
     assert(prefixed.toSeq === direct.toSeq)
   }
@@ -418,9 +419,9 @@ class ExtSpec extends SparkSpec {
       val unique = (0 until 3).map(u => 5000L + doc * 100 + u)
       (shared ++ unique).map(hs => (doc.toLong, hs, 6L))
     }.toDF("doc_id", "hs", "sz")
-    val (fsq, fn) = Dedup.postingSkewProbe(flat)
+    val (fsq, fn) = Dedup.pairSkewProbe(flat)
     assert(fsq <= Dedup.DirectPairFanoutMax * fn, s"flat probe must be under budget: $fsq / $fn")
-    assert(!hasWindow(Dedup.pairsFromPostsAuto(flat)), "flat df must route to the direct join")
+    assert(!hasWindow(Dedup.jaccardPairsFrom(flat)), "flat df must route to the direct join")
     // SKEWED regime: 100 docs sharing ONE boilerplate shingle (df=100,
     // the c² hot key); doc pairs (2k, 2k+1) additionally share a rare
     // shingle (overlap 2 of 3 → J = 0.5, real emitted pairs) —
@@ -428,18 +429,19 @@ class ExtSpec extends SparkSpec {
     val skewed = (0 until 100).flatMap { doc =>
       Seq(9999L, (doc / 2) * 10L + 1, doc * 10L + 2).map(hs => (doc.toLong, hs, 3L))
     }.toDF("doc_id", "hs", "sz")
-    val (ssq, sn) = Dedup.postingSkewProbe(skewed)
+    val (ssq, sn) = Dedup.pairSkewProbe(skewed)
     assert(ssq > Dedup.DirectPairFanoutMax * sn, s"skewed probe must exceed budget: $ssq / $sn")
-    val auto = Dedup.pairsFromPostsAuto(skewed)
+    val auto = Dedup.jaccardPairsFrom(skewed)
     assert(hasWindow(auto), "skewed df must route to the prefix join")
     // the gate moves cost, never output: all three generators agree
     // on the skewed relation (and the flat one)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
-    val skewDirect = rows(Dedup.pairsFromPosts(skewed))
+    val skewDirect = rows(Dedup.jaccardPairsFrom(skewed, route = Dedup.PairRoute.Direct))
     assert(skewDirect.nonEmpty, "skewed fixture should contain near-dup pairs")
-    assert(rows(Dedup.pairsFromPostsPrefix(skewed)) === skewDirect)
+    assert(rows(Dedup.jaccardPairsFrom(skewed, route = Dedup.PairRoute.Prefix)) === skewDirect)
     assert(rows(auto) === skewDirect)
-    assert(rows(Dedup.pairsFromPostsAuto(flat)) === rows(Dedup.pairsFromPosts(flat)))
+    assert(rows(Dedup.jaccardPairsFrom(flat)) ===
+      rows(Dedup.jaccardPairsFrom(flat, route = Dedup.PairRoute.Direct)))
   }
 
   test("measured DELTA pair-gen gate: flat standing corpus keeps the broadcast probe, skewed routes prefix, outputs identical") {
@@ -463,10 +465,10 @@ class ExtSpec extends SparkSpec {
       (shared ++ unique).map(hs => (doc.toLong, hs, 6L))
     }.toDF("doc_id", "hs", "sz")
     val flatFrom = 8L
-    val (fsq, fn) = Dedup.deltaSkewProbe(flat, flatFrom)
+    val (fsq, fn) = Dedup.pairSkewProbe(flat, Some(flatFrom))
     assert(fn === 12 * 6, "probe normalizer is ALL posting rows (the prefix route's fixed cost)")
     assert(fsq <= Dedup.DirectPairFanoutMax * fn, s"flat delta probe must be under budget: $fsq / $fn")
-    val flatAuto = Dedup.pairsFromPostsDeltaAuto(flat, flatFrom)
+    val flatAuto = Dedup.jaccardPairsFrom(flat, Some(flatFrom))
     assert(!hasWindow(flatAuto), "flat standing corpus must keep the direct broadcast-probe join")
     // SKEWED standing corpus: most of every doc is boilerplate (3 hot
     // shingles with df = 300 out of sz = 4) and the batch is a 10%
@@ -476,23 +478,25 @@ class ExtSpec extends SparkSpec {
       Seq(7770L, 7771L, 7772L, 10000L + doc * 10L).map(hs => (doc.toLong, hs, 4L))
     }.toDF("doc_id", "hs", "sz")
     val skewFrom = 270L
-    val (ssq, sn) = Dedup.deltaSkewProbe(skewed, skewFrom)
+    val (ssq, sn) = Dedup.pairSkewProbe(skewed, Some(skewFrom))
     assert(sn === 300 * 4)
     assert(ssq > Dedup.DirectPairFanoutMax * sn, s"skewed delta probe must exceed budget: $ssq / $sn")
-    val skewAuto = Dedup.pairsFromPostsDeltaAuto(skewed, skewFrom)
+    val skewAuto = Dedup.jaccardPairsFrom(skewed, Some(skewFrom))
     assert(hasWindow(skewAuto), "skewed standing corpus must route to the prefix delta")
     // the gate moves cost, never output: both routes equal the direct
     // probe form on both relations, and the delta is exactly the
     // full-graph pairs incident to the batch
     def directDelta(posts: org.apache.spark.sql.DataFrame, from: Long) =
-      Dedup.pairsFromPosts(posts, probe = Some(posts.filter(col("doc_id") >= from)))
+      Dedup.jaccardPairsFrom(posts, Some(from), Dedup.PairRoute.Direct)
     val skewDirect = rows(directDelta(skewed, skewFrom))
     assert(skewDirect.nonEmpty, "skewed fixture should contain delta pairs")
-    assert(rows(Dedup.pairsFromPostsPrefixDelta(skewed, skewFrom)) === skewDirect)
+    assert(rows(Dedup.jaccardPairsFrom(skewed, Some(skewFrom), Dedup.PairRoute.Prefix)) ===
+      skewDirect)
     assert(rows(skewAuto) === skewDirect)
     assert(rows(flatAuto) === rows(directDelta(flat, flatFrom)))
     assert(rows(flatAuto) ===
-      rows(Dedup.pairsFromPosts(flat).filter(col("doc_b") >= flatFrom)))
+      rows(Dedup.jaccardPairsFrom(flat, route = Dedup.PairRoute.Direct)
+        .filter(col("doc_b") >= flatFrom)))
   }
 
   test("simhash: near-dup pairs have small Hamming distance, random pairs large") {

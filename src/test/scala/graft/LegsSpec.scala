@@ -37,4 +37,14 @@ class LegsSpec extends SparkSpec {
       }
     }
   }
+
+  test("pairs: delta legs without batchFrom fail with a usage error") {
+    // with no batch the "batch" would be the whole posting list, and
+    // delta_direct would broadcast all of it
+    implicit val s: SparkSession = spark
+    Seq("delta_probe", "delta_direct", "delta_prefix", "delta_plans").foreach { leg =>
+      val e = intercept[IllegalArgumentException](Legs.run("pairs", Seq(sf(), s"probe,$leg")))
+      assert(e.getMessage.contains("usage"), leg)
+    }
+  }
 }

@@ -55,7 +55,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("PPJoin prefix lemma: J >= tau implies intersecting prefixes (random sets)") {
-    // the completeness guarantee jaccardPairsPrefix relies on, checked
+    // the completeness guarantee jaccardPairsFrom's prefix route relies on, checked
     // over random set pairs for every tau the engine might use
     def prefix(s: Seq[Int], tau: Double): Set[Int] =
       s.sorted.take(s.size - math.ceil(tau * s.size).toInt + 1).toSet
@@ -395,6 +395,62 @@ class PropertySpec extends SparkSpec {
         assert(got === want, s"round $round, $dir, bucketWidth=$width")
       }
     }
+  }
+
+  test("jaccardPairsFrom: every route, full and delta, equals a plain-Scala all-pairs Jaccard") {
+    val spk = spark; import spk.implicits._
+    import graft.ext.Dedup
+    import Dedup.PairRoute.{Direct, Measured, Prefix}
+    def hasWindow(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Window])
+    val r = new scala.util.Random(1618)
+    val n = 40
+    val overBudget = (0 until 4).map { round =>
+      // 1-5 own shingles per doc; about a third of the odd docs copy
+      // ~70% of their even neighbour's (planted near-dups, J around τ);
+      // 9 boilerplate shingles whose df is drawn per round, so the
+      // rounds land on both sides of the fan-out budget
+      val own = (0 until n).map(i => (0 to r.nextInt(5)).map(j => 1000L * i + j).toSet)
+      val planted = (0 until n).map(i =>
+        if (i % 2 == 1 && r.nextInt(3) == 0) own(i - 1).filter(_ => r.nextDouble() < 0.7)
+        else Set.empty[Long])
+      val hot = (0 until 9).map(b =>
+        b.toLong -> r.shuffle((0 until n).toList).take(r.nextInt(n + 1)).toSet)
+      val sets = (0 until n).map(i => i.toLong ->
+        (own(i) ++ planted(i) ++ hot.collect { case (h, docs) if docs(i) => h })).toMap
+      val postRows = sets.toSeq.flatMap { case (d, hs) =>
+        hs.toSeq.map(h => (d, h, hs.size.toLong)) }
+      val posts = postRows.toDF("doc_id", "hs", "sz")
+      val all = (for {
+        (a, sa) <- sets.toSeq; (b, sb) <- sets.toSeq if a < b
+        ov = (sa & sb).size if ov > 0
+        j = ov.toDouble / (sa.size + sb.size - ov) if j >= Dedup.JaccardTau
+      } yield (a, b) -> math.round(j * 1e6)).toMap
+      val dfAll = postRows.groupBy(_._2).view.mapValues(_.size.toLong).toMap
+      val over = for (batch <- Seq(None, Some(r.nextInt(n).toLong))) yield {
+        val want = batch.fold(all)(f => all.filter(_._1._2 >= f))
+        val dfBatch = postRows.filter(p => batch.forall(p._1 >= _)).groupBy(_._2)
+          .view.mapValues(_.size.toLong).toMap
+        val (sq, np) = (dfAll.map { case (h, c) => c.toDouble * dfBatch.getOrElse(h, 0L) }.sum,
+          postRows.size.toLong)
+        assert(Dedup.pairSkewProbe(posts, batch) === ((sq, np)), s"round $round, batchFrom=$batch")
+        for (route <- Seq(Direct, Prefix, Measured)) {
+          val out = Dedup.jaccardPairsFrom(posts, batch, route)
+          val got = out.collect()
+            .map(x => (x.getLong(0), x.getLong(1)) -> math.round(x.getDouble(2) * 1e6))
+          assert(got.length === got.toMap.size,
+            s"round $round, $route, batchFrom=$batch: duplicate pairs")
+          assert(got.toMap === want, s"round $round, $route, batchFrom=$batch")
+          if (route == Measured)
+            assert(hasWindow(out) === sq > Dedup.DirectPairFanoutMax * np,
+              s"round $round, batchFrom=$batch: fan-out ${sq / np} took the wrong route")
+        }
+        sq > Dedup.DirectPairFanoutMax * np
+      }
+      over.head // the full graph's reading
+    }
+    assert(overBudget.toSet === Set(true, false), "rounds must probe both over and under budget")
   }
 
   test("rebandedParams: occupancy-targeting B, recall-satisfying L, monotone in n") {
