@@ -556,7 +556,7 @@ object Clusters {
   // temp warehouse, gates on its model tests, and returns the
   // sem_keep_list TABLE AS WRITTEN — so the DAG form, not just the
   // standalone chain, is driver-verified against the identical oracle
-  // (assignKAuto lands on the contract k at the 500-vector harness
+  // (assignK lands on the contract k at the 500-vector harness
   // corpus, so the fixed-k recursive-CTE replay applies verbatim;
   // EngineSpec pins that equality too, this promotes it to the hash
   // gate). Bounded collect by construction: one row per keep cluster,

@@ -484,16 +484,25 @@ object Dedup {
     */
   def lshBands(posts: DataFrame): DataFrame = {
     require(RowsPerBand == 2, "band key packing assumes 2 rows per band")
-    val x = col("hs") % P
-    val mins = (0 until NumHashes).map(i =>
-      min((lit(coefA(i)) * x + lit(coefB(i))) % P).as(s"m$i"))
-    val sig = posts.groupBy("doc_id").agg(mins.head, mins.tail: _*)
+    val sig = minhashSignature(posts)
     val bandCols = (0 until Bands).map { j =>
       struct(lit(j).as("band"),
         (col(s"m${2 * j}") * P + col(s"m${2 * j + 1}")).as("key"))
     }
     sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
+  }
+
+  /** The MinHash signature: (doc_id, m0 … m{NumHashes−1}), each m_i the
+    * min over the doc's shingles of (a_i·(hs mod p) + b_i) mod p — one
+    * HashAggregate of k `min()` columns. [[lshBands]] packs it into
+    * band keys; `dedup_minhash_estimate` compares it slot by slot.
+    */
+  private def minhashSignature(posts: DataFrame): DataFrame = {
+    val x = col("hs") % P
+    val mins = (0 until NumHashes).map(i =>
+      min((lit(coefA(i)) * x + lit(coefB(i))) % P).as(s"m$i"))
+    posts.groupBy("doc_id").agg(mins.head, mins.tail: _*)
   }
 
   /** The sized (band, key) relation — the minhash analogue of the
@@ -1438,10 +1447,7 @@ object Dedup {
       val posts = graft.engine.Caches.retain(
         shinglePosts(s, d, hash60)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val x = col("hs") % P
-      val mins = (0 until NumHashes).map(i =>
-        min((lit(coefA(i)) * x + lit(coefB(i))) % P).as(s"m$i"))
-      val sig = posts.groupBy("doc_id").agg(mins.head, mins.tail: _*)
+      val sig = minhashSignature(posts)
       val sigA = sig.toDF("doc_a" +: (0 until NumHashes).map(i => s"a$i"): _*)
       val sigB = sig.toDF("doc_b" +: (0 until NumHashes).map(i => s"b$i"): _*)
       val matches = (0 until NumHashes)

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -14,18 +14,25 @@ import graft.queries.Inventory.Q
   * never crosses cluster boundaries) and the trainer of IVF coarse
   * quantizers.
   *
-  * Assignment maximizes cosine against the centroid (spherical
-  * variant — the right metric for embedding spaces), scored by the
-  * native codegen'd [[graft.functions.CosineSimilarity]]; centroids
-  * are per-dimension means recomputed per Lloyd iteration. The
-  * iterations are UNROLLED INTO THE PLAN (assign → recompute →
-  * assign): no driver-side collect, no mutable state — the whole
-  * refinement is one lazy Catalyst plan whose centroid sides broadcast.
+  * One recipe, three functions:
+  *  - [[assign]]`(e, cents, probes, route)` scores each vector against
+  *    its candidate centroids with the native codegen'd
+  *    [[graft.functions.CosineSimilarity]] (spherical variant — the
+  *    right metric for embedding spaces) and keeps the best one
+  *    (`probes = 1`) or the best `probes`. [[Route]] picks the
+  *    candidates: every centroid (`Flat`) or the fine centroids of a
+  *    vector's probed coarse cells (`TwoLevel`, the IVF shape).
+  *  - [[lloyd]]`(e, seeds, route)` is one Lloyd round: assign, then
+  *    per-dimension means ([[recompute]]). Rounds are UNROLLED INTO THE
+  *    PLAN: no collect, no mutable state — the refinement
+  *    is one lazy Catalyst plan whose centroid sides broadcast.
+  *  - Seeds stay an argument: the `vec_id < K` contract seeds
+  *    ([[trained]]) or a ranked id slice ([[seedSlice]], the policy-k
+  *    paths: [[assignK]], [[semdedupPairsFrom]]).
   *
-  * Determinism/oracle: init centroids are the first K vectors;
-  * assignment keys are 6-dp-rounded csim with cluster-id tiebreak
-  * (same recipe as `ann_ivf_topk`, whose centroid averages this
-  * mirrors), so DuckDB replays both iterations exactly.
+  * Determinism/oracle: assignment keys are 6-dp-rounded csim with
+  * cluster-id tiebreak (same recipe as `ann_ivf_topk`, whose centroid
+  * averages this mirrors), so DuckDB replays both iterations exactly.
   *
   * Scale notes: each iteration is one broadcast join + one (cluster,
   * dim) aggregate with map-side partials; the corpus shuffles only
@@ -35,14 +42,13 @@ import graft.queries.Inventory.Q
   * and assignment is n·k cosines — linear in the corpus. Under the
   * [[semdedupParams]] k ∝ n policy both bounds break (k = n/400 ⇒
   * n²/400 cosines and a broadcast that grows with the corpus —
-  * ~1.3 GB of centroids at 10⁹ docs); the formula-k production path
-  * therefore routes through [[assignTwoLevel]], the IVF two-level
-  * shape: ⌈√k⌉ coarse centroids broadcast (bounded again), each
-  * vector refines only against the ~√k fine centroids of its probed
-  * coarse cells — n·√k cosines, no k-sized broadcast anywhere. k and
-  * iteration count are compile-size knobs; a production run
-  * materializes the assignment between iterations instead of
-  * unrolling past a handful.
+  * ~1.3 GB of centroids at 10⁹ docs); [[Route.forK]] therefore sends
+  * k ≥ [[TwoLevelMinK]] through the IVF two-level shape: ⌈√k⌉ coarse
+  * centroids broadcast (bounded again), each vector refines only
+  * against the ~√k fine centroids of its probed coarse cells — n·√k
+  * cosines, no k-sized broadcast anywhere. k and iteration count are
+  * compile-size knobs; a production run materializes the assignment
+  * between iterations instead of unrolling past a handful.
   */
 object KMeans {
 
@@ -52,15 +58,91 @@ object KMeans {
   private def emb(s: SparkSession, d: String): DataFrame =
     graft.queries.Inventory.rebalanced(s.read.parquet(s"$d/embeddings.parquet"), "vec_id")
 
-  /** Nearest-centroid assignment: (vec_id, embedding, cluster, csim). */
-  def assign(e: DataFrame, cents: DataFrame): DataFrame = {
-    val w = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cluster"))
-    e.crossJoin(broadcast(cents))
-      .withColumn("csim",
-        roundPortable(graft.functions.CosineSimilarity(col("embedding"), col("centroid")), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("embedding"), col("cluster"), col("csim"))
+  /** The 6-dp rounded cosine every score in this module is keyed on. */
+  private def csim(a: Column, b: Column): Column =
+    roundPortable(graft.functions.CosineSimilarity(a, b), 6)
+
+  /** Executable assignment-strategy threshold (the incremental-gate
+    * pattern applied to the codebook): FLAT argmax while k is small
+    * enough that the codebook broadcast is cheap and the n·k grid
+    * undercuts two-level's stage constant; IVF two-level beyond. The
+    * threshold sits between the measured crossover points
+    * (BENCHNOTES r16: flat wins at k=154 — 4.5 vs 12.2 s; two-level
+    * wins at k=513 — 11.0 vs 27.7 s); k is a compile-visible input,
+    * so unlike the incremental batch gate no runtime measurement is
+    * needed.
+    */
+  val TwoLevelMinK = 300
+
+  /** Which centroids [[assign]] scores each vector against. */
+  sealed trait Route
+  object Route {
+    /** Every centroid: the scored grid is e × broadcast(cents). */
+    case object Flat extends Route
+    /** IVF routing over a k-row codebook (see the two-level section):
+      * ⌈√k⌉ coarse cells, each vector refines within its top `nProbe`.
+      */
+    final case class TwoLevel(k: Int, nProbe: Int) extends Route
+    /** The policy-k route: flat below [[TwoLevelMinK]], two-level with
+      * two probed cells from there up.
+      */
+    def forK(k: Int): Route = if (k < TwoLevelMinK) Flat else TwoLevel(k, 2)
+  }
+
+  /** Nearest-centroid assignment: (vec_id, embedding, cluster, csim),
+    * plus a 0-based `probe_rank` when `probes > 1` (one row per
+    * (vector, kept cluster)).
+    *
+    * The argmax is by AGGREGATION, not by window: a window would push
+    * all n·k scored rows through a hashpartitioning(vec_id) exchange
+    * into the rank sort — ~n²/400 rows on the wire under the k policy.
+    * max_by with map-side partials collapses the scored grid back to
+    * n rows BEFORE any exchange (the broadcast join leaves it
+    * corpus-partitioned, so every vec_id's candidates co-reside in one
+    * partition and the partial agg finishes the argmax locally). The
+    * tiebreak is the max of (csim, −cluster) in lex order: equal 6-dp
+    * csim goes to the smaller cluster, exactly the oracle's
+    * `ORDER BY csim DESC, cluster` (PropertySpec pins it against the
+    * window form kept in the test sources).
+    *
+    * Top-P (the multi-probe recall dial) keeps the `probes` best
+    * (−csim, cluster) structs per vector in the same map-side bounded
+    * way; two-level takes it in two stages so no wire row carries more
+    * than `probes` structs — a per-(vector, coarse cell) top-P (all of
+    * a vector's in-cell candidates co-reside after the refine join),
+    * then the ≤ nProbe small lists merge per vector. With every coarse
+    * cell probed, two-level equals flat row for row (ExtSpec pins it,
+    * probe_rank included).
+    */
+  def assign(e: DataFrame, cents: DataFrame, probes: Int = 1,
+      route: Route = Route.Flat): DataFrame = {
+    require(probes >= 1, s"probes must be >= 1, got $probes")
+    val scored = route match {
+      case Route.Flat =>
+        e.crossJoin(broadcast(cents)).withColumn("csim", csim(col("embedding"), col("centroid")))
+      case Route.TwoLevel(k, nProbe) => twoLevelCandidates(e, cents, k, nProbe)
+    }
+    if (probes == 1)
+      scored.groupBy("vec_id")
+        .agg(max_by(struct(col("cluster"), col("csim"), col("embedding")),
+          struct(col("csim"), (-col("cluster")).as("nc"))).as("best"))
+        .select(col("vec_id"), col("best.embedding").as("embedding"),
+          col("best.cluster").as("cluster"), col("best.csim").as("csim"))
+    else {
+      val cands = collect_list(struct((-col("csim")).as("nc"), col("cluster")))
+      def topP(df: DataFrame, keys: Seq[String], of: Column): DataFrame =
+        df.groupBy(keys.head, keys.tail: _*)
+          .agg(first(col("embedding")).as("embedding"), slice(array_sort(of), 1, probes).as("top"))
+      val top = route match {
+        case Route.Flat => topP(scored, Seq("vec_id"), cands)
+        case _: Route.TwoLevel =>
+          topP(topP(scored, Seq("vec_id", "coarse"), cands), Seq("vec_id"),
+            flatten(collect_list(col("top"))))
+      }
+      top.select(col("vec_id"), col("embedding"), posexplode(col("top")).as(Seq("probe_rank", "t")))
+        .select(col("vec_id"), col("embedding"), col("t.cluster").as("cluster"),
+          (-col("t.nc")).as("csim"), col("probe_rank"))
+    }
   }
 
   /** Per-cluster mean centroid of the assigned vectors. */
@@ -71,18 +153,21 @@ object KMeans {
       .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
       .select(col("cluster"), transform(col("pc"), p => p.getField("c")).as("centroid"))
 
+  /** One Lloyd round from `seeds` (cluster, centroid): the centroids
+    * after assigning `e` to them along `route`.
+    */
+  def lloyd(e: DataFrame, seeds: DataFrame, route: Route = Route.Flat): DataFrame =
+    recompute(assign(e, seeds, route = route))
+
   /** The TRAINED coarse quantizer: centroids after one Lloyd round
     * from first-K-vector seeds (the oracle's `c1`). Exposed separately
     * so the IVF index (`ann_ivf_kmeans_topk`) can use the exact
     * centroids the final assignment used — quantizer and partitioner
     * cannot drift apart.
     */
-  def trained(e: DataFrame): DataFrame = {
-    val init = e.filter(col("vec_id") < K)
-      .select(col("vec_id").cast("int").as("cluster"),
-        transform(col("embedding"), x => x.cast(DoubleType)).as("centroid"))
-    recompute(assign(e, init))
-  }
+  def trained(e: DataFrame): DataFrame =
+    lloyd(e, e.filter(col("vec_id") < K).select(col("vec_id").cast("int").as("cluster"),
+      transform(col("embedding"), x => x.cast(DoubleType)).as("centroid")))
 
   /** Two unrolled Lloyd iterations from first-K-vector seeds. */
   def assignments(s: SparkSession, d: String): DataFrame = {
@@ -103,20 +188,19 @@ object KMeans {
 
   /** SemDeDup k for a corpus of n vectors — the EXECUTABLE form of
     * the "k grows with the corpus" production knob (VERDICT r14 ask
-    * #1; prose-only until r15). k = ⌈n / targetCluster⌉, floored at
-    * the oracle-contract [[K]] so tiny corpora keep the harness
-    * clustering. Work model: per-cluster pair enumeration is
-    * |c|²/2, so expected total pairs ≈ n·targetCluster/2 and the
-    * sharded pair grid ([[semdedupPairs]]) holds parallelism at k·S
-    * regardless of core count. The fixed k = 5 registry row stays the
-    * DRIVER CONTRACT at harness scale — a production deployment calls
-    * this instead (via the TWO-LEVEL assignment: at k ∝ n the flat
-    * [[assignK]] grid is n²/400 cosines under a corpus-growing
-    * centroid broadcast, while [[assignKTwoLevel]] caps assignment at
-    * ~n·√k with a √k-bounded broadcast):
+    * #1; prose-only until r15). k = ⌈n / [[SemDedupTargetCluster]]⌉,
+    * floored at the oracle-contract [[K]] so tiny corpora keep the
+    * harness clustering. Work model: per-cluster pair enumeration is
+    * |c|²/2, so expected total pairs ≈ n·target/2 and the sharded pair
+    * grid ([[semdedupPairs]]) holds parallelism at k·S regardless of
+    * core count. The fixed k = 5 registry row stays the ORACLE
+    * CONTRACT at harness scale — a production deployment calls this
+    * instead, and [[assignK]]'s default route ([[Route.forK]]) goes
+    * two-level once the flat n·k grid and its corpus-growing centroid
+    * broadcast would dominate:
     * {{{
     *   val k = KMeans.semdedupParams(corpusRows)
-    *   KMeans.semdedupPairs(KMeans.assignKAuto(e, k))
+    *   KMeans.semdedupPairs(KMeans.assignK(e, k))
     * }}}
     * Measured (the Legs `semdedup` leg, BENCHNOTES r15): formula-k turns
     * the fixed-k superlinear wall into ~linear growth at 30× and
@@ -128,95 +212,67 @@ object KMeans {
     * tables), and ~0.65–0.71 at formula k. The recall-guaranteed
     * near-dup operator is [[Dedup.rebandedParams]]' LSH path
     * (measured 1.000); SemDeDup is the candidate-tightness
-    * complement — raise its recall with multi-probe assignment or a
-    * second independent clustering when needed.
+    * complement — raise its recall with [[semdedupPairsFrom]]'s
+    * `probes` (multi-probe) or `tables` (independent clusterings).
     */
-  def semdedupParams(n: Long, targetCluster: Int = SemDedupTargetCluster): Int = {
-    require(n > 0 && targetCluster > 0)
-    math.max(K, math.ceil(n.toDouble / targetCluster).toInt)
+  def semdedupParams(n: Long): Int = {
+    require(n > 0)
+    math.max(K, math.ceil(n.toDouble / SemDedupTargetCluster).toInt)
   }
 
   /** Seed centroids from the ids ranked [t·k, (t+1)·k) by vec_id,
-    * numbered 0..k−1 in rank order — slice 0 is the [[trainedK]]
+    * numbered 0..k−1 in rank order — slice 0 is the [[assignK]]
     * seeding (on dense harness ids, exactly the `vec_id < K` oracle
-    * seeds), further slices feed [[trainedSeededK]]. Scale shape: the
-    * rank window runs over SKINNY (vec_id) rows only — at formula-k
-    * that single task carries k·8 B of longs, not k wide embedding
-    * arrays — and the vectors attach afterwards by a broadcast id
-    * join (k ids ≈ 12 B each ≪ the k×dim centroid relation itself,
-    * so if this broadcast doesn't fit nothing about k-means at that k
-    * does). The closing groupBy(cluster) is value-neutral (cluster is
-    * unique by construction — one rank per id, vec_id unique in e, so
-    * `first` sees exactly one row) but makes the k-row bound VISIBLE
-    * in the plan: callers broadcast this output as seed centroids, and
-    * the r19 broadcast-hint sweep certifies a hint by walking output
-    * cardinality — a raw-e inner join reads as corpus-scaled however
-    * small the id side, while an Aggregate over the ≤k cluster domain
-    * is the bound itself. The value-neutrality rests on e's vec_id
-    * UNIQUENESS (ADVICE r19): a duplicate vec_id would make `first`
-    * pick one arbitrary embedding per cluster instead of surfacing
-    * duplicate cluster rows downstream — if that contract ever
-    * loosens, dedupe on vec_id upstream (or assert count == 1 per
-    * cluster) before ranking; ExtSpec pins bit-identity on the
-    * harness corpus, where uniqueness holds.
+    * seeds), further slices feed [[semdedupPairsFrom]]'s extra tables.
+    * Scale shape: the rank window runs over SKINNY (vec_id) rows only
+    * — at formula-k that single task carries k·8 B of longs, not k
+    * wide embedding arrays — and the vectors attach afterwards by a
+    * broadcast id join (k ids ≈ 12 B each ≪ the k×dim centroid
+    * relation itself, so if this broadcast doesn't fit nothing about
+    * k-means at that k does). The closing groupBy(cluster) is
+    * value-neutral (cluster is unique by construction — one rank per
+    * id, vec_id unique in e, so `first` sees exactly one row) but
+    * makes the k-row bound VISIBLE in the plan: callers broadcast this
+    * output as seed centroids, and the r19 broadcast-hint sweep
+    * certifies a hint by walking output cardinality — a raw-e inner
+    * join reads as corpus-scaled however small the id side, while an
+    * Aggregate over the ≤k cluster domain is the bound itself. The
+    * value-neutrality rests on e's vec_id UNIQUENESS (ADVICE r19): a
+    * duplicate vec_id would make `first` pick one arbitrary embedding
+    * per cluster instead of surfacing duplicate cluster rows
+    * downstream — if that contract ever loosens, dedupe on vec_id
+    * upstream (or assert count == 1 per cluster) before ranking;
+    * ExtSpec pins bit-identity on the harness corpus, where uniqueness
+    * holds. Routing the contract rows through this slice instead of
+    * the `vec_id < K` filter measured +25% on `emb_kmeans_assign`, so
+    * the two seed recipes stay separate.
     */
-  private def seedCentsSlice(e: DataFrame, k: Int, table: Int): DataFrame = {
-    val ids = e.select(col("vec_id")).orderBy("vec_id").limit(k * (table + 1))
+  def seedSlice(e: DataFrame, k: Int, slice: Int): DataFrame = {
+    val ids = e.select(col("vec_id")).orderBy("vec_id").limit(k * (slice + 1))
       .select(col("vec_id"), (row_number().over(Window.orderBy("vec_id")) - 1).as("rn"))
-      .filter(col("rn") >= k * table)
-      .select(col("vec_id"), (col("rn") - k * table).cast("int").as("cluster"))
+      .filter(col("rn") >= k * slice)
+      .select(col("vec_id"), (col("rn") - k * slice).cast("int").as("cluster"))
     e.join(broadcast(ids), Seq("vec_id"))
       .groupBy("cluster")
       .agg(first(transform(col("embedding"), x => x.cast(DoubleType))).as("centroid"))
   }
 
-  /** [[trained]] generalized to a policy-sized k: seeds are the k
-    * smallest vec_ids ([[seedCentsSlice]] slice 0), numbered 0..k-1
-    * in id order — on the harness corpus (dense ids from 0) this is
-    * EXACTLY the `vec_id < K` oracle seeding, so `trainedK(e, K)` ≡
-    * `trained(e)` and the formula-k path at 1× publishes
-    * bit-identical pairs. One Lloyd round through the argmax-by-
-    * aggregation [[assignWith]] (the window [[assign]] would push the
-    * n·k training grid through a vec_id exchange at formula-k).
+  /** Policy-k assignment: (vec_id, embedding, cluster, csim) — one
+    * Lloyd round from the k smallest vec_ids ([[seedSlice]] slice 0),
+    * then the final assignment, both along the same route (the
+    * training assignment is the SAME n·k grid as the final one, so at
+    * formula-k it must route the same way). `route` defaults to
+    * [[Route.forK]]`(k)`. On the harness corpus (dense ids from 0) the
+    * seeds are EXACTLY the `vec_id < K` oracle seeding, so
+    * `assignK(e, K)` ≡ [[assignments]] row for row.
     */
-  def trainedK(e: DataFrame, k: Int): DataFrame =
-    recompute(assignWith(e, seedCentsSlice(e, k, 0)))
-
-  /** Nearest-centroid argmax over ANY centroid relation, by
-    * AGGREGATION, not by window: at k ∝ n the [[assign]] window
-    * formulation would push all n·k scored rows through a
-    * hashpartitioning(vec_id) exchange into the rank sort — ~n²/400
-    * rows on the wire under the k policy. max_by with map-side
-    * partials collapses the crossJoin output back to n rows BEFORE
-    * any exchange (the broadcast join leaves it corpus-partitioned,
-    * so every vec_id's k candidates co-reside in one partition and
-    * the partial agg finishes the argmax locally). Same 6-dp csim,
-    * same smaller-cluster tiebreak (max of (csim, −cluster) lex
-    * order), so the output is VALUE-identical to [[assign]] — ExtSpec
-    * pins it against the window form, and assignK(e, K) ≡
-    * assignments row-for-row. The one shape this does NOT fix is the
-    * broadcast of `cents` itself (k-sized): formula-k callers route
-    * through [[assignTwoLevel]], which never broadcasts more than
-    * ~√k centroids.
-    */
-  def assignWith(e: DataFrame, cents: DataFrame): DataFrame =
-    e.crossJoin(broadcast(cents))
-      .withColumn("csim",
-        roundPortable(graft.functions.CosineSimilarity(col("embedding"), col("centroid")), 6))
-      .groupBy("vec_id")
-      .agg(max_by(struct(col("cluster"), col("csim"), col("embedding")),
-        struct(col("csim"), (-col("cluster")).as("nc"))).as("best"))
-      .select(col("vec_id"), col("best.embedding").as("embedding"),
-        col("best.cluster").as("cluster"), col("best.csim").as("csim"))
-
-  /** Policy-k assignment: (vec_id, embedding, cluster, csim) —
-    * [[assignWith]] over the [[trainedK]] quantizer.
-    */
-  def assignK(e: DataFrame, k: Int): DataFrame =
-    assignWith(e, trainedK(e, k))
+  def assignK(e: DataFrame, k: Int, route: Option[Route] = None): DataFrame = {
+    val r = route.getOrElse(Route.forK(k))
+    assign(e, lloyd(e, seedSlice(e, k, 0), r), route = r)
+  }
 
   // ------------------------------------------------------------------
-  // TWO-LEVEL (IVF-style) assignment — the formula-k scale path.
+  // TWO-LEVEL (IVF-style) routing — the formula-k scale path.
   //
   // Flat assignment against a k ∝ n codebook is the next quadratic
   // wall after the pair grid was linearized (VERDICT r15): n·k
@@ -234,8 +290,8 @@ object KMeans {
   //
   // Plan shape, stage by stage (each one already battle-tested
   // elsewhere in the repo):
-  //   1. coarse codebook: one Lloyd round over the k centroid ROWS
-  //      (tiny — k ≪ n) via the same assignWith/recompute pair.
+  //   1. coarse codebook: one flat Lloyd round over the k centroid
+  //      ROWS (tiny — k ≪ n), seeded from the first ⌈√k⌉ of them.
   //   2. coarse routing: crossJoin(broadcast(coarse)) leaves the
   //      corpus partitioned as scanned, so the per-vector top-nProbe
   //      (a √k-bounded collect_list + sort + slice) completes in the
@@ -248,41 +304,23 @@ object KMeans {
   //      into one task. shuffle_hash-hinted: an SMJ would SORT the
   //      embedding-wide probe stream (the r14 >76 GB spill class),
   //      and the build side is the bounded fine-centroid relation.
-  //   4. the final argmax is the same max_by partial agg; a vector's
-  //      candidates span at most nProbe partitions, so the final
-  //      exchange carries ≤ n·nProbe partial states.
+  //   4. [[assign]]'s reduction (max_by or top-P) over the scored
+  //      candidates; a vector's candidates span at most nProbe
+  //      partitions, so the final exchange carries ≤ n·nProbe partial
+  //      states.
   //
   // Semantics: APPROXIMATE by design — a vector whose true nearest
   // fine centroid lives outside its probed coarse cells mis-assigns
   // (the standard IVF trade; nProbe is the dial). With nProbe ≥ the
   // coarse-cell count the routing is complete and the result is
-  // VALUE-IDENTICAL to assignK (ExtSpec pins it); planted-twin recall
-  // at the default nProbe = 2 is measured at 30×/100× by
-  // the Legs `semdedup` leg (BENCHNOTES r16).
+  // VALUE-IDENTICAL to flat (ExtSpec and PropertySpec pin it);
+  // planted-twin recall at the default nProbe = 2 is measured at
+  // 30×/100× by the Legs `semdedup` leg (BENCHNOTES r16).
   // ------------------------------------------------------------------
 
   /** Coarse cells for a k-centroid codebook: ⌈√k⌉. */
   def coarseCells(k: Int): Int = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
 
-  /** One Lloyd round over the CENTROID rows themselves: a √k-sized
-    * coarse codebook (cluster = coarse id, centroid = coarse mean).
-    * Seeds are the first `nCoarse` fine clusters — deterministic, and
-    * the input is k rows, so every stage here is trivially small.
-    */
-  def coarseCodebook(cents: DataFrame, nCoarse: Int): DataFrame = {
-    val asVec = cents.select(col("cluster").cast("long").as("vec_id"),
-      col("centroid").as("embedding"))
-    val init = asVec.filter(col("vec_id") < nCoarse)
-      .select(col("vec_id").cast("int").as("cluster"), col("embedding").as("centroid"))
-    recompute(assignWith(asVec, init))
-  }
-
-  /** The scored in-cell candidate relation — (vec_id, embedding,
-    * coarse, cluster, csim), one row per (vector, fine centroid of a
-    * probed coarse cell) — shared by [[assignTwoLevel]] (argmax) and
-    * [[assignTwoLevelTopP]] (bounded top-P), so the routing recipe
-    * cannot drift between the assignment and its recall-dial variant.
-    */
   /** Codebooks up to this many rows materialize as driver-LOCAL
     * relations in [[twoLevelCandidates]]: zero retained executor
     * storage (a localCheckpoint's k-row cached blocks live for the
@@ -308,9 +346,13 @@ object KMeans {
   val LocalCodebookMaxRows: Int =
     math.min(1L << 16, LocalCodebookMaxBytes / (Dim.toLong * 8 + 32)).toInt
 
-  private def twoLevelCandidates(e: DataFrame, cents: DataFrame, k: Int, nProbe: Int,
-      shards: Int): DataFrame = {
-    val nCoarse = coarseCells(k)
+  /** The scored in-cell candidate relation for [[Route.TwoLevel]] —
+    * (vec_id, embedding, coarse, cluster, csim), one row per (vector,
+    * fine centroid of a probed coarse cell) — that [[assign]] reduces
+    * (see the section comment for the full shape).
+    */
+  private def twoLevelCandidates(e: DataFrame, cents: DataFrame, k: Int,
+      nProbe: Int): DataFrame = {
     // `cents` is consumed TWICE below (coarse codebook + fine tagging)
     // and is usually itself a corpus-scale Lloyd plan — lazy
     // re-evaluation would run that corpus pass once per reference (the
@@ -323,12 +365,16 @@ object KMeans {
         spark.createDataFrame(
           java.util.Arrays.asList(cents.collect(): _*), cents.schema)
       } else cents.localCheckpoint()
-    val coarse = coarseCodebook(fine, nCoarse)
-    // each fine centroid's home cell — exact argmax, k·√k tiny work;
-    // carries the fine centroid through so no join back is needed
-    val fineTagged = assignWith(
-      fine.select(col("cluster").cast("long").as("vec_id"), col("centroid").as("embedding")),
-      coarse)
+    // the fine centroids as vectors: one Lloyd round over them, seeded
+    // from the first ⌈√k⌉, is the coarse codebook (k-row work); one
+    // assignment against it tags each fine centroid with its home cell
+    // (exact argmax, k·√k tiny work) and carries the centroid through,
+    // so no join back is needed
+    val asVec = fine.select(col("cluster").cast("long").as("vec_id"),
+      col("centroid").as("embedding"))
+    val coarse = lloyd(asVec, asVec.filter(col("vec_id") < coarseCells(k))
+      .select(col("vec_id").cast("int").as("cluster"), col("embedding").as("centroid")))
+    val fineTagged = assign(asVec, coarse)
       .select(col("vec_id").cast("int").as("cluster"), col("cluster").as("coarse"),
         col("embedding").as("centroid"))
     // top-nProbe coarse cells per corpus vector: map-side bounded
@@ -336,137 +382,19 @@ object KMeans {
     // after the partial agg carries n rows)
     val probes = e.crossJoin(broadcast(
         coarse.select(col("cluster").as("coarse"), col("centroid").as("ccent"))))
-      .withColumn("csim",
-        roundPortable(graft.functions.CosineSimilarity(col("embedding"), col("ccent")), 6))
+      .withColumn("csim", csim(col("embedding"), col("ccent")))
       .groupBy("vec_id")
       .agg(first(col("embedding")).as("embedding"),
         slice(array_sort(collect_list(struct((-col("csim")).as("nc"), col("coarse")))),
           1, nProbe).as("top"))
       .select(col("vec_id"), col("embedding"), explode(col("top.coarse")).as("coarse"))
-      .withColumn("shard", pmod(col("vec_id"), lit(shards)).cast("int"))
+      .withColumn("shard", pmod(col("vec_id"), lit(SemDedupShards)).cast("int"))
     val fineRep = fineTagged
-      .withColumn("shard", explode(sequence(lit(0), lit(shards - 1))))
+      .withColumn("shard", explode(sequence(lit(0), lit(SemDedupShards - 1))))
     probes.join(fineRep.hint("shuffle_hash"), Seq("coarse", "shard"))
-      .withColumn("csim",
-        roundPortable(graft.functions.CosineSimilarity(col("embedding"), col("centroid")), 6))
+      .withColumn("csim", csim(col("embedding"), col("centroid")))
       .select("vec_id", "embedding", "coarse", "cluster", "csim")
   }
-
-  /** Two-level assignment of `e` against the k-row codebook `cents`
-    * (see the section comment for the full shape): route via
-    * [[coarseCodebook]], refine within the probed cells. Output
-    * schema and tiebreak semantics match [[assignWith]] exactly.
-    */
-  def assignTwoLevel(e: DataFrame, cents: DataFrame, k: Int, nProbe: Int = 2,
-      shards: Int = SemDedupShards): DataFrame =
-    twoLevelCandidates(e, cents, k, nProbe, shards)
-      .groupBy("vec_id")
-      .agg(max_by(struct(col("cluster"), col("csim"), col("embedding")),
-        struct(col("csim"), (-col("cluster")).as("nc"))).as("best"))
-      .select(col("vec_id"), col("best.embedding").as("embedding"),
-        col("best.cluster").as("cluster"), col("best.csim").as("csim"))
-
-  /** The scale path COMPOSED with the winning recall dial: top-`probes`
-    * FINE clusters through coarse routing — what a formula-k
-    * production multi-probe run calls (flat [[assignTopP]] would
-    * broadcast the k-sized codebook). Top-P is taken in two bounded
-    * stages so no wire row ever carries more than `probes` structs: a
-    * per-(vector, coarse-cell) top-P completes map-side (all of a
-    * vector's in-cell candidates co-reside after the refine join),
-    * then the ≤ nProbe small lists merge per vector. With every
-    * coarse cell probed this is VALUE-identical to the flat
-    * [[assignTopP]] (ExtSpec pins it, probe_rank included).
-    */
-  def assignTwoLevelTopP(e: DataFrame, cents: DataFrame, k: Int, probes: Int,
-      nProbe: Int = 2, shards: Int = SemDedupShards): DataFrame = {
-    val nc = struct((-col("csim")).as("nc"), col("cluster"))
-    twoLevelCandidates(e, cents, k, nProbe, shards)
-      .groupBy("vec_id", "coarse")
-      .agg(first(col("embedding")).as("embedding"),
-        slice(array_sort(collect_list(nc)), 1, probes).as("top"))
-      .groupBy("vec_id")
-      .agg(first(col("embedding")).as("embedding"),
-        slice(array_sort(flatten(collect_list(col("top")))), 1, probes).as("top"))
-      .select(col("vec_id"), col("embedding"), posexplode(col("top")).as(Seq("probe_rank", "t")))
-      .select(col("vec_id"), col("embedding"), col("t.cluster").as("cluster"),
-        (-col("t.nc")).as("csim"), col("probe_rank"))
-  }
-
-  /** [[trainedK]] with the Lloyd round itself two-level: the training
-    * assignment against the k seed centroids is the SAME n·k grid as
-    * final assignment, so at formula-k it must route the same way.
-    */
-  def trainedKTwoLevel(e: DataFrame, k: Int, nProbe: Int = 2): DataFrame =
-    recompute(assignTwoLevel(e, seedCentsSlice(e, k, 0), k, nProbe))
-
-  /** The formula-k production assignment: two-level end to end
-    * (training round AND final assignment) — n·√k cosines total,
-    * coarse-sized broadcasts only. The [[semdedupParams]] scaladoc's
-    * production snippet calls this.
-    */
-  def assignKTwoLevel(e: DataFrame, k: Int, nProbe: Int = 2): DataFrame =
-    assignTwoLevel(e, trainedKTwoLevel(e, k, nProbe), k, nProbe)
-
-  /** Executable assignment-strategy policy (the incremental-gate
-    * pattern applied to the codebook): FLAT argmax while k is small
-    * enough that the codebook broadcast is cheap and the n·k grid
-    * undercuts two-level's stage constant; IVF two-level beyond. The
-    * threshold sits between the measured crossover points
-    * (BENCHNOTES r16: flat wins at k=154 — 4.5 vs 12.2 s; two-level
-    * wins at k=513 — 11.0 vs 27.7 s); k is a compile-visible input,
-    * so unlike the incremental batch gate no runtime measurement is
-    * needed. `semdedupParams` production callers use this.
-    */
-  val TwoLevelMinK = 300
-
-  def assignKAuto(e: DataFrame, k: Int, nProbe: Int = 2): DataFrame =
-    if (k < TwoLevelMinK) assignK(e, k) else assignKTwoLevel(e, k, nProbe)
-
-  /** MULTI-PROBE fine assignment — the cheaper recall dial candidate
-    * (VERDICT r15 ask #4): each vector lands in its top-`probes` fine
-    * clusters of ONE clustering, vs [[semdedupPairsMulti]]'s T
-    * independent clusterings. A Voronoi-boundary twin pair splits
-    * because the two twins argmax to different cells; probing both
-    * cells from one side re-co-locates the pair without paying a
-    * second Lloyd round. Trade: within-cluster membership doubles, so
-    * the pair grid's per-cluster mass grows ~(probes)² — the
-    * measurement (the Legs `semdedup` leg, mode "planted", BENCHNOTES r16)
-    * decides which dial wins. Output: one row per (vec, probed
-    * cluster), probe_rank 0-based; rank 0 restricted ≡ [[assignWith]]
-    * (ExtSpec pin).
-    */
-  def assignTopP(e: DataFrame, cents: DataFrame, probes: Int): DataFrame =
-    e.crossJoin(broadcast(cents))
-      .withColumn("csim",
-        roundPortable(graft.functions.CosineSimilarity(col("embedding"), col("centroid")), 6))
-      .groupBy("vec_id")
-      .agg(first(col("embedding")).as("embedding"),
-        slice(array_sort(collect_list(struct((-col("csim")).as("nc"), col("cluster")))),
-          1, probes).as("top"))
-      .select(col("vec_id"), col("embedding"), posexplode(col("top")).as(Seq("probe_rank", "t")))
-      .select(col("vec_id"), col("embedding"), col("t.cluster").as("cluster"),
-        (-col("t.nc")).as("csim"), col("probe_rank"))
-
-  /** SemDeDup pairs under multi-probe assignment: the pair grid over
-    * the (≤ probes)-way multi-assignment, deduped on the pair ids (a
-    * pair co-probed in two clusters must publish once).
-    */
-  def semdedupPairsProbe(e: DataFrame, k: Int, probes: Int = 2,
-      shards: Int = SemDedupShards): DataFrame =
-    pairGrid(assignTopP(e, trainedK(e, k), probes), shards)
-      .select("id_a", "id_b", "cos_sim")
-      .distinct().orderBy("id_a", "id_b")
-
-  /** [[semdedupPairsProbe]] with two-level routing end to end
-    * (training round, assignment, and the top-P dial all n·√k) — the
-    * formula-k production multi-probe; measured beside the flat forms
-    * by the Legs `semdedup` leg (tag `_2lmp2`).
-    */
-  def semdedupPairsProbeTwoLevel(e: DataFrame, k: Int, probes: Int = 2,
-      nProbe: Int = 2, shards: Int = SemDedupShards): DataFrame =
-    pairGrid(assignTwoLevelTopP(e, trainedKTwoLevel(e, k, nProbe), k, probes, nProbe), shards)
-      .select("id_a", "id_b", "cos_sim")
-      .distinct().orderBy("id_a", "id_b")
 
   /** The cosine-with-portable-rounding SQL fragment. */
   private[ext] def cosSql(a: String, b: String) =
@@ -485,27 +413,31 @@ object KMeans {
        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
        |), c0 AS (
        |  SELECT CAST(vec_id AS INTEGER) AS cluster, v AS centroid FROM e WHERE vec_id < $K
-       |), a1 AS (
-       |  SELECT vec_id, v, cluster, csim FROM (
-       |    SELECT e.vec_id, e.v, c.cluster, ${cosSql("e.v", "c.centroid")} AS csim,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY ${cosSql("e.v", "c.centroid")} DESC, c.cluster) AS rn
-       |    FROM e CROSS JOIN c0 c
-       |  ) WHERE rn = 1
-       |), c1 AS (
+       |), ${lloydCtes("c0", "")}""".stripMargin
+
+  /** The oracle's Lloyd round and final assignment from the seed CTE
+    * `seed` over `e`: `a1<sfx>` → `c1<sfx>` → `a2<sfx>(vec_id, v,
+    * cluster, csim)`, each assignment a `row_number` over the rounded
+    * cosine with cluster tiebreak.
+    */
+  private def lloydCtes(seed: String, sfx: String): String = {
+    def assignCte(name: String, cents: String) =
+      s"""$name AS (
+         |  SELECT vec_id, v, cluster, csim FROM (
+         |    SELECT e.vec_id, e.v, c.cluster, ${cosSql("e.v", "c.centroid")} AS csim,
+         |           row_number() OVER (PARTITION BY e.vec_id
+         |             ORDER BY ${cosSql("e.v", "c.centroid")} DESC, c.cluster) AS rn
+         |    FROM e CROSS JOIN $cents c
+         |  ) WHERE rn = 1
+         |)""".stripMargin
+    s"""${assignCte(s"a1$sfx", seed)}, c1$sfx AS (
        |  SELECT cluster, list(c ORDER BY i) AS centroid FROM (
        |    SELECT cluster, i, avg(v[i]) AS c
-       |    FROM a1, range(1, $Dim + 1) t(i)
+       |    FROM a1$sfx, range(1, $Dim + 1) t(i)
        |    GROUP BY cluster, i
        |  ) GROUP BY cluster
-       |), a2 AS (
-       |  SELECT vec_id, v, cluster, csim FROM (
-       |    SELECT e.vec_id, e.v, c.cluster, ${cosSql("e.v", "c.centroid")} AS csim,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY ${cosSql("e.v", "c.centroid")} DESC, c.cluster) AS rn
-       |    FROM e CROSS JOIN c1 c
-       |  ) WHERE rn = 1
-       |)""".stripMargin
+       |), ${assignCte(s"a2$sfx", s"c1$sfx")}""".stripMargin
+  }
 
   val kmeansAssign: Q = Q(
     (s, d) =>
@@ -562,65 +494,59 @@ object KMeans {
 
   /** The sharded within-cluster pair grid, unsorted — the shared core
     * of [[semdedupPairs]] (publish order added there) and
-    * [[semdedupPairsMulti]] (whose union + distinct would waste a
+    * [[semdedupPairsFrom]] (whose union + distinct would waste a
     * per-table sort).
     */
-  private def pairGrid(a: DataFrame, shards: Int): DataFrame = {
+  private def pairGrid(a: DataFrame): DataFrame = {
     val l = a.select(col("cluster"), col("vec_id").as("id_a"), col("embedding").as("va"))
-      .withColumn("shard", explode(sequence(lit(0), lit(shards - 1))))
+      .withColumn("shard", explode(sequence(lit(0), lit(SemDedupShards - 1))))
     val r = a.select(col("cluster"), col("vec_id").as("id_b"), col("embedding").as("vb"))
-      .withColumn("shard", pmod(col("id_b"), lit(shards)).cast("int"))
-    val sim = roundPortable(
-      graft.functions.CosineSimilarity(col("va"), col("vb")), 6)
+      .withColumn("shard", pmod(col("id_b"), lit(SemDedupShards)).cast("int"))
     l.join(r.hint("merge"), Seq("cluster", "shard"))
       .filter(col("id_a") < col("id_b"))
-      .select(col("cluster"), col("id_a"), col("id_b"), sim.as("cos_sim"))
+      .select(col("cluster"), col("id_a"), col("id_b"), csim(col("va"), col("vb")).as("cos_sim"))
       .filter(col("cos_sim") >= Dedup.CosTau)
   }
 
-  /** The sharded within-cluster pair scorer over any assignment
-    * relation (cluster, vec_id, embedding, …) — shared by the fixed-k
-    * registry row and the [[semdedupParams]] formula-k production
-    * path (the Legs `semdedup` leg measures both at 30×/100×).
+  /** The sharded within-cluster pair scorer over any materialized
+    * assignment relation (cluster, vec_id, embedding, …) — shared by
+    * the fixed-k registry row, the [[semdedupParams]] formula-k
+    * production path (the Legs `semdedup` leg measures both at
+    * 30×/100×) and the funnels that persist the assignment first.
     */
-  def semdedupPairs(a: DataFrame, shards: Int = SemDedupShards): DataFrame =
-    pairGrid(a, shards).orderBy("cluster", "id_a", "id_b")
+  def semdedupPairs(a: DataFrame): DataFrame =
+    pairGrid(a).orderBy("cluster", "id_a", "id_b")
 
-  /** [[trainedK]] with a seed SLICE: table `t` seeds from the ids
-    * ranked [t·k, (t+1)·k) — table 0 is exactly [[trainedK]], and
-    * each further table starts Lloyd from a disjoint seed set, so its
-    * one-round Voronoi partition draws DIFFERENT boundaries over the
-    * same corpus. k·(t+1) rows bound the seed window (≪ corpus).
+  /** SemDeDup pairs (id_a, id_b, cos_sim) from `tables` clusterings of
+    * `e` at k, each assigning every vector to its top `probes`
+    * clusters; `route` (default [[Route.forK]]`(k)`) serves both each
+    * table's Lloyd round and its assignment. Table t seeds from
+    * [[seedSlice]] slice t, so table 0 is [[assignK]]'s clustering.
+    * A pair is published once however many tables or probed clusters
+    * co-locate it (union, distinct on the pair, ordered by ids).
+    *
+    * Both knobs are recall dials for the planted-twin loss that one
+    * assignment suffers at ANY k (Voronoi-boundary twins argmax to
+    * different cells — ~0.17 of planted mass even at near-brute-force
+    * k = 5, because one clustering has exactly one boundary set):
+    *  - `tables` is LSH's L-tables treatment: disjoint seed slices draw
+    *    DIFFERENT boundaries, so recall ≈ 1−(1−p)^T for decorrelated
+    *    misses, at T × the single-table plan. Measured at T = 2 with
+    *    formula-k (BENCHNOTES r15): planted recall 0.705 → 0.929 at
+    *    30× and 0.646 → 0.864 at 100×, within 0.015 of 1−(1−p)².
+    *  - `probes` probes a twin's second cell from one side of one
+    *    clustering, without a second Lloyd round; within-cluster mass
+    *    grows ~probes². The r16 head-to-head (BENCHNOTES r16) measured
+    *    P = 2 at planted recall 0.955/0.938 vs T = 2's 0.929/0.864 at
+    *    lower wall.
     */
-  def trainedSeededK(e: DataFrame, k: Int, table: Int): DataFrame =
-    recompute(assignWith(e, seedCentsSlice(e, k, table)))
-
-  /** Multi-clustering SemDeDup — LSH's L-tables treatment transplanted
-    * to semantic blocking (the recall mitigation the r15 planted-twin
-    * measurement motivates: single-assignment blocking loses
-    * Voronoi-BOUNDARY twins at ANY k — ~0.17 of planted mass even at
-    * near-brute-force k = 5 — because one clustering has exactly one
-    * boundary set). Runs `tables` independent clusterings (disjoint
-    * seed slices via [[trainedSeededK]] → different boundaries), takes
-    * the union of their within-cluster verified pairs, and dedups on
-    * (id_a, id_b): a pair is recalled iff ANY table co-clusters it —
-    * recall ≈ 1−(1−p)^T for decorrelated boundary misses. Cost is
-    * T × the single-table plan (assignment AND pair grid), all stages
-    * staying map-side/sharded exactly as the core; the union's
-    * distinct is one exchange on the skinny pair ids. Measured at
-    * T = 2 with formula-k (BENCHNOTES r15): planted recall
-    * 0.705 → 0.929 at 30× and 0.646 → 0.864 at 100× — ABOVE the
-    * fixed-k=5 baseline (0.83) at ~2.8× less wall, and within 0.015
-    * of the decorrelated-boundary prediction 1−(1−p)² at both
-    * scales, so T is a genuine recall dial.
-    */
-  def semdedupPairsMulti(e: DataFrame, k: Int, tables: Int = 2,
-      shards: Int = SemDedupShards): DataFrame = {
-    val per = (0 until tables).map { t =>
-      pairGrid(assignWith(e, trainedSeededK(e, k, t)), shards)
+  def semdedupPairsFrom(e: DataFrame, k: Int, tables: Int = 1, probes: Int = 1,
+      route: Option[Route] = None): DataFrame = {
+    val r = route.getOrElse(Route.forK(k))
+    (0 until tables).map { t =>
+      pairGrid(assign(e, lloyd(e, seedSlice(e, k, t), r), probes, r))
         .select("id_a", "id_b", "cos_sim")
-    }
-    per.reduce(_.unionByName(_)).distinct().orderBy("id_a", "id_b")
+    }.reduce(_.unionByName(_)).distinct().orderBy("id_a", "id_b")
   }
 
   val semdedup: Q = Q(
@@ -720,8 +646,8 @@ object KMeans {
 
   /** The table-1 oracle chain — [[kmeansCtes]]' recipe re-run from
     * the SECOND seed slice (ids ranked [K, 2K), numbered 0..K−1 in
-    * rank order, exactly [[trainedSeededK]](e, K, 1)), ending in
-    * `a2b`. Appended after [[kmeansCtes]] (it references its `e`).
+    * rank order, exactly [[seedSlice]](e, K, 1)), ending in `a2b`.
+    * Appended after [[kmeansCtes]] (it references its `e`).
     */
   private[ext] def kmeansCtesTable1: String =
     s"""c0b AS (
@@ -729,27 +655,7 @@ object KMeans {
        |    SELECT v, row_number() OVER (ORDER BY vec_id) AS rn
        |    FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT $K OFFSET $K)
        |  )
-       |), a1b AS (
-       |  SELECT vec_id, v, cluster, csim FROM (
-       |    SELECT e.vec_id, e.v, c.cluster, ${cosSql("e.v", "c.centroid")} AS csim,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY ${cosSql("e.v", "c.centroid")} DESC, c.cluster) AS rn
-       |    FROM e CROSS JOIN c0b c
-       |  ) WHERE rn = 1
-       |), c1b AS (
-       |  SELECT cluster, list(c ORDER BY i) AS centroid FROM (
-       |    SELECT cluster, i, avg(v[i]) AS c
-       |    FROM a1b, range(1, $Dim + 1) t(i)
-       |    GROUP BY cluster, i
-       |  ) GROUP BY cluster
-       |), a2b AS (
-       |  SELECT vec_id, v, cluster, csim FROM (
-       |    SELECT e.vec_id, e.v, c.cluster, ${cosSql("e.v", "c.centroid")} AS csim,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |             ORDER BY ${cosSql("e.v", "c.centroid")} DESC, c.cluster) AS rn
-       |    FROM e CROSS JOIN c1b c
-       |  ) WHERE rn = 1
-       |)""".stripMargin
+       |), ${lloydCtes("c0b", "b")}""".stripMargin
 
   // ------------------------------------------------------------------
   // The T-table union as a DRIVER-VERIFIED registry row (T = 2 at the
@@ -761,7 +667,7 @@ object KMeans {
   // UNsharded join, mirroring the fixed-k row's oracle.
   // ------------------------------------------------------------------
   val semdedupMulti: Q = Q(
-    (s, d) => semdedupPairsMulti(emb(s, d), K, tables = 2),
+    (s, d) => semdedupPairsFrom(emb(s, d), K, tables = 2),
     Some {
       def pairsOf(rel: String) =
         s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -788,11 +694,11 @@ object KMeans {
   // (rn ≤ 2 in the very window the single-assignment oracle already
   // ranks), enumerates within-cluster pairs over the multi-
   // assignment, and dedups on the pair ids. The Spark side is
-  // [[semdedupPairsProbe]] — trainedK quantizer, assignTopP
-  // multi-assignment, the same sharded pair grid.
+  // [[semdedupPairsFrom]] at probes = 2 — the assignK quantizer, the
+  // top-P assignment, the same sharded pair grid.
   // ------------------------------------------------------------------
   val semdedupProbe: Q = Q(
-    (s, d) => semdedupPairsProbe(emb(s, d), K, probes = 2),
+    (s, d) => semdedupPairsFrom(emb(s, d), K, probes = 2),
     Some(
       s"""WITH $kmeansCtes, a2p AS (
          |  SELECT vec_id, v, cluster FROM (
@@ -818,8 +724,8 @@ object KMeans {
   // so the cluster-size distribution PREDICTS the pair stage's cost
   // and its straggler ceiling (the biggest cluster is the longest
   // task even under the shard grid) BEFORE any pair is scored. A
-  // production funnel gates on pair_mass ≈ n·targetCluster (the
-  // semdedupParams operating point): a degenerate clustering (one
+  // production funnel gates on pair_mass ≈ n·SemDedupTargetCluster
+  // (the semdedupParams operating point): a degenerate clustering (one
   // mega-cluster — the semantic analogue of a saturated LSH bucket)
   // publishes max_share → 1 and quadratic pair_mass instead of
   // silently serializing the grid. One k-group aggregate + a 1-row
@@ -853,11 +759,9 @@ object KMeans {
     * serializing the grid), then scores pairs from the cached
     * assignment, and unpersists.
     */
-  def semdedupFunnel(e: DataFrame, k: Int, nProbe: Int = 2,
-      shards: Int = SemDedupShards): Dedup.LshFunnel = {
-    val a = assignKAuto(e, k, nProbe)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Dedup.LshFunnel(a, clusterOccupancy(a), semdedupPairs(a, shards))
+  def semdedupFunnel(e: DataFrame, k: Int): Dedup.LshFunnel = {
+    val a = assignK(e, k).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Dedup.LshFunnel(a, clusterOccupancy(a), semdedupPairs(a))
   }
 
   val semdedupOccupancy: Q = Q(
@@ -877,11 +781,11 @@ object KMeans {
   // ------------------------------------------------------------------
   // The PRODUCTION ENTRY POINT as a driver-verified row: what the
   // semdedupParams scaladoc tells a deployment to call —
-  // k = semdedupParams(count) → assignKAuto (flat under the measured
-  // TwoLevelMinK crossover, IVF two-level beyond) → the sharded pair
-  // grid — wired end to end and hash-matched. At the harness corpus
-  // the formula lands on the contract floor k = K and assignKAuto
-  // takes the flat branch, so the published pairs are the oracle
+  // k = semdedupParams(count) → assignK along Route.forK(k) (flat
+  // under the measured TwoLevelMinK crossover, IVF two-level beyond) →
+  // the sharded pair grid — wired end to end and hash-matched. At the
+  // harness corpus the formula lands on the contract floor k = K and
+  // the route is flat, so the published pairs are the oracle
   // contract's exactly (the identity ExtSpec pins); a harness-data
   // change that moved k off the floor would fail THIS row loudly
   // rather than silently drifting the production path.
@@ -889,13 +793,13 @@ object KMeans {
   val semdedupAuto: Q = Q(
     (s, d) => {
       val e = emb(s, d)
-      semdedupPairs(assignKAuto(e, semdedupParams(e.count())))
+      semdedupPairs(assignK(e, semdedupParams(e.count())))
     },
     semdedup.oracle)
 
   // ------------------------------------------------------------------
-  // The TWO-LEVEL path itself, driver-verified (r17): assignKAuto
-  // takes the flat branch at the harness k, so until now the IVF
+  // The TWO-LEVEL path itself, hash-verified (r17): Route.forK
+  // picks flat at the harness k, so until now the IVF
   // two-level machinery — coarse codebook training, top-probe
   // routing, the sharded shuffle_hash refine, the local-relation
   // codebook materialization — was covered by specs but never by the
@@ -910,7 +814,7 @@ object KMeans {
   val semdedupTwoLevel: Q = Q(
     (s, d) => {
       val e = emb(s, d)
-      semdedupPairs(assignKTwoLevel(e, K, nProbe = coarseCells(K)))
+      semdedupPairs(assignK(e, K, Some(Route.TwoLevel(K, coarseCells(K)))))
     },
     semdedup.oracle)
 

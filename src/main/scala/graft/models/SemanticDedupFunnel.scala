@@ -22,7 +22,7 @@ import graft.ext.{Clusters, KMeans}
   * }}}
   *
   * Why this shape at 100 TB: the assignment is the corpus-scale stage
-  * (one or two scoring passes under [[KMeans.assignKAuto]]'s measured
+  * (one or two scoring passes along [[KMeans.Route.forK]]'s measured
   * flat/two-level crossover) and must run ONCE — materializing
   * `sem_assignments` means the occupancy gate AND the sharded pair
   * grid read its parquet instead of re-scoring the corpus, exactly
@@ -50,7 +50,7 @@ object SemanticDedupFunnel {
     Model("sem_assignments", Seq("embeddings"), Materialization.Table,
       tests = Seq(Unique("vec_id"), NotNull("cluster"))) { in =>
       val e = graft.queries.Inventory.rebalanced(in("embeddings"), "vec_id")
-      KMeans.assignKAuto(e, KMeans.semdedupParams(e.count()))
+      KMeans.assignK(e, KMeans.semdedupParams(e.count()))
     }
 
   val occupancy: Model =

@@ -151,7 +151,7 @@ object Streams {
       .dropDuplicatesWithinWatermark("canonical_url")
 
   /** Streaming SEMANTIC ROUTER — the online twin of the batch
-    * k-means assignment (`emb_kmeans_assign` / `KMeans.assignWith`):
+    * k-means assignment (`emb_kmeans_assign` / `KMeans.assign`):
     * arriving embeddings route to their nearest trained centroid AT
     * INGEST, the shape that shards a live embedding feed across IVF
     * cells / semdedup blocks before anything downstream runs. The
@@ -162,7 +162,7 @@ object Streams {
     * codebook of the two-level path). Identical determinism recipe as
     * batch (6-dp rounded cosine, smaller-cluster tiebreak) —
     * StreamingSpec audits the stream output row-identical to
-    * `assignWith` over the same rows.
+    * `KMeans.assign` over the same rows.
     */
   def semanticRouter(embs: DataFrame, cents: Seq[(Int, Seq[Double])]): DataFrame = {
     val scored = array(cents.map { case (c, v) =>

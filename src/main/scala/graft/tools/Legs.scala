@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.DoubleType
 
 import graft.engine.{Scratch, TableSink, Windows}
 import graft.ext.{Clusters, Dedup, KMeans, Similarity}
+import graft.ext.KMeans.Route
 import graft.obs
 
 /** The dev measurement legs behind SCALING.md and BENCHNOTES, one main:
@@ -511,7 +512,8 @@ object Legs {
 
     if (mode == "fixed" || mode == "formula" || mode == "both") {
       def run(tag: String, k: Int): obs.Span[Long] =
-        obs.span(s"semdedup $tag")(KMeans.semdedupPairs(KMeans.assignK(emb, k)).count())
+        obs.span(s"semdedup $tag")(
+          KMeans.semdedupPairs(KMeans.assignK(emb, k, Some(Route.Flat))).count())
       val fixed = if (mode != "formula") Some(run("semdedup_fixed_k5", KMeans.K)) else None
       fixed.foreach(s => emit("semdedup", "semdedup_fixed_k5", s,
         "rows" -> n, "k" -> KMeans.K, "pairs" -> s.value, "dir" -> dir))
@@ -529,13 +531,15 @@ object Legs {
       val nPlanted = twins.count()
       val kForm = KMeans.semdedupParams(nAll)
       val tagFilter = args.lift(2).getOrElse("")
+      val (flat, twoLevel) = (Some(Route.Flat), (k: Int) => Some(Route.TwoLevel(k, 2)))
       Seq[(String, Int, Int => DataFrame)](
           ("planted_fixed_k5", KMeans.K, k => KMeans.semdedupPairs(KMeans.assignK(all, k))),
-          ("planted_formula_k", kForm, k => KMeans.semdedupPairs(KMeans.assignK(all, k))),
-          ("planted_formula_k_2t", kForm, k => KMeans.semdedupPairsMulti(all, k, tables = 2)),
-          ("planted_formula_k_2l", kForm, k => KMeans.semdedupPairs(KMeans.assignKTwoLevel(all, k))),
-          ("planted_formula_k_mp2", kForm, k => KMeans.semdedupPairsProbe(all, k, probes = 2)),
-          ("planted_formula_k_2lmp2", kForm, k => KMeans.semdedupPairsProbeTwoLevel(all, k, probes = 2)))
+          ("planted_formula_k", kForm, k => KMeans.semdedupPairs(KMeans.assignK(all, k, flat))),
+          ("planted_formula_k_2t", kForm, k => KMeans.semdedupPairsFrom(all, k, tables = 2, route = flat)),
+          ("planted_formula_k_2l", kForm, k => KMeans.semdedupPairs(KMeans.assignK(all, k, twoLevel(k)))),
+          ("planted_formula_k_mp2", kForm, k => KMeans.semdedupPairsFrom(all, k, probes = 2, route = flat)),
+          ("planted_formula_k_2lmp2", kForm,
+            k => KMeans.semdedupPairsFrom(all, k, probes = 2, route = twoLevel(k))))
         .filter(_._1.contains(tagFilter)).foreach { case (tag, k, pairsOf) =>
         val s = obs.span(s"semdedup $tag") {
           val pairs = pairsOf(k).select(col("id_a"), col("id_b")).cache()
@@ -555,14 +559,14 @@ object Legs {
       def timed(tag: String)(body: => Unit): Unit =
         emit("semdedup", tag, obs.span(s"semdedup $tag")(body), "rows" -> n, "k" -> kFormula, "dir" -> dir)
       timed("standalone_gauge") {
-        noop(KMeans.clusterOccupancy(KMeans.assignKAuto(emb, kFormula)))
+        noop(KMeans.clusterOccupancy(KMeans.assignK(emb, kFormula)))
       }
       timed("standalone_pairs") {
-        noop(KMeans.semdedupPairs(KMeans.assignKAuto(emb, kFormula)))
+        noop(KMeans.semdedupPairs(KMeans.assignK(emb, kFormula)))
       }
       timed("standalone_keep") {
         val ids = emb.select(col("vec_id").as("doc_id"))
-        val pairs = KMeans.semdedupPairs(KMeans.assignKAuto(emb, kFormula))
+        val pairs = KMeans.semdedupPairs(KMeans.assignK(emb, kFormula))
           .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
         val docs = spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "n_chars")
         noop(Clusters.keepBest(Clusters.connectedComponents(ids, pairs), docs))

@@ -62,7 +62,7 @@ class AuditSpec extends SparkSpec {
     val semi = tinyAgg.join(docs.select("lang"), Seq("lang"), "left_semi")
     assert(sigs(nation.crossJoin(broadcast(semi))) == Seq("agg(lang):documents"))
     // and a collapse ABOVE the join certifies the whole subtree —
-    // the seedCentsSlice fix shape
+    // the KMeans.seedSlice fix shape
     val certified = laundered.groupBy("lang").agg(count(lit(1)).as("m"))
     assert(sigs(nation.crossJoin(broadcast(certified))) == Seq("agg(lang):documents"))
   }

@@ -370,7 +370,7 @@ class EngineSpec extends SparkSpec {
     assert(r("sem_keep_list").orderBy("cluster_id").collect().toSeq ===
       graft.ext.Clusters.semdedupKeep.build(spark, d).collect().toSeq)
     // consumers of the materialized assignment read the sink's
-    // parquet — the n·k centroid scoring (assignWith's
+    // parquet — the n·k centroid scoring (KMeans.assign's
     // BroadcastNestedLoopJoin grid) never survives into their plans;
     // the cosine that remains is the pair grid's own within-cluster
     // verify, which is its job

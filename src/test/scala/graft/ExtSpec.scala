@@ -970,8 +970,8 @@ class ExtSpec extends SparkSpec {
     // must reproduce the oracle-contract output exactly when the
     // formula lands on k = K — the identity that licenses quoting the
     // fixed-k driver row as the 1x baseline of the k-policy sweep
-    // (the Legs `semdedup` leg). assignK's argmax-by-aggregation and
-    // assign's argmax-by-window must agree on every row, including
+    // (the Legs `semdedup` leg). assignK's ranked-slice seeds and
+    // assignments' vec_id < K seeds must agree on every row, including
     // ties (6-dp csim grid, smaller-cluster tiebreak).
     val e = graft.queries.Inventory.rebalanced(
       spark.read.parquet(s"$d/embeddings.parquet"), "vec_id")
@@ -998,9 +998,9 @@ class ExtSpec extends SparkSpec {
       df.select("id_a", "id_b", "cos_sim").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val single = asSet(KMeans.semdedupPairs(KMeans.assignK(e, KMeans.K)))
-    val t1 = asSet(KMeans.semdedupPairsMulti(e, KMeans.K, tables = 1))
+    val t1 = asSet(KMeans.semdedupPairsFrom(e, KMeans.K, tables = 1))
     assert(t1 === single, "T=1 must reproduce the single-table pair set exactly")
-    val t2 = asSet(KMeans.semdedupPairsMulti(e, KMeans.K, tables = 2))
+    val t2 = asSet(KMeans.semdedupPairsFrom(e, KMeans.K, tables = 2))
     assert(single.subsetOf(t2), "a second table can only ADD pairs, never drop one")
     // every added pair is still a verified tau-pair (exact all-pairs check)
     val exact = Dedup.embeddingPairs.build(spark, d).collect()
@@ -1011,9 +1011,9 @@ class ExtSpec extends SparkSpec {
   }
 
   test("two-level assignment: full coarse probing ≡ flat assignK; partial probing is total and never over-scores") {
-    // the formula-k scale path (assignKTwoLevel) must DEGENERATE to
+    // the formula-k scale path (Route.TwoLevel) must DEGENERATE to
     // the flat argmax when every coarse cell is probed — routing that
-    // sees all fine centroids is just assignWith with extra steps, so
+    // sees all fine centroids is the flat assign with extra steps, so
     // any drift here is a bug in the two-level plumbing, not an IVF
     // approximation. At k = K = 5 the coarse codebook has ceil(√5)=3
     // cells, so nProbe = 3 is complete.
@@ -1024,11 +1024,12 @@ class ExtSpec extends SparkSpec {
       df.select("vec_id", "cluster", "csim").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).sortBy(_._1)
     val flat = rows(KMeans.assignK(e, KMeans.K))
-    assert(rows(KMeans.assignKTwoLevel(e, KMeans.K, nProbe = nCoarse)) === flat,
+    assert(rows(KMeans.assignK(e, KMeans.K, Some(KMeans.Route.TwoLevel(KMeans.K, nCoarse)))) === flat,
       "complete coarse probing must be value-identical to the flat argmax")
     // partial probing: still a total assignment over valid clusters,
     // and an argmax over a SUBSET can never beat the flat argmax
-    val partial = rows(KMeans.assignTwoLevel(e, KMeans.trainedK(e, KMeans.K), KMeans.K, nProbe = 1))
+    val partial = rows(KMeans.assign(e, KMeans.lloyd(e, KMeans.seedSlice(e, KMeans.K, 0)),
+      route = KMeans.Route.TwoLevel(KMeans.K, 1)))
     assert(partial.length === flat.length, "two-level dropped or duplicated vectors")
     val flatBy = flat.map(t => t._1 -> t._3).toMap
     partial.foreach { case (id, c, s) =>
@@ -1040,12 +1041,12 @@ class ExtSpec extends SparkSpec {
   test("multi-probe assignment: rank-0 slice is the flat argmax; probe pairs only add verified pairs") {
     val e = graft.queries.Inventory.rebalanced(
       spark.read.parquet(s"$d/embeddings.parquet"), "vec_id")
-    val cents = KMeans.trainedK(e, KMeans.K)
-    val top = KMeans.assignTopP(e, cents, probes = 2).cache()
+    val cents = KMeans.lloyd(e, KMeans.seedSlice(e, KMeans.K, 0))
+    val top = KMeans.assign(e, cents, probes = 2).cache()
     val rank0 = top.filter(col("probe_rank") === 0)
       .select("vec_id", "cluster", "csim").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).sortBy(_._1)
-    val flat = KMeans.assignWith(e, cents)
+    val flat = KMeans.assign(e, cents)
       .select("vec_id", "cluster", "csim").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).sortBy(_._1)
     assert(rank0 === flat, "probe rank 0 must be exactly the single-probe argmax")
@@ -1055,7 +1056,7 @@ class ExtSpec extends SparkSpec {
       df.select("id_a", "id_b", "cos_sim").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val single = asSet(KMeans.semdedupPairs(KMeans.assignK(e, KMeans.K)))
-    val probed = asSet(KMeans.semdedupPairsProbe(e, KMeans.K, probes = 2))
+    val probed = asSet(KMeans.semdedupPairsFrom(e, KMeans.K, probes = 2))
     assert(single.subsetOf(probed), "a second probe can only ADD pairs, never drop one")
     // the composed scale path: two-level top-P with every coarse cell
     // probed must reproduce flat top-P row-for-row, probe_rank included
@@ -1063,9 +1064,9 @@ class ExtSpec extends SparkSpec {
       df.select("vec_id", "probe_rank", "cluster", "csim").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
         .sortBy(t => (t._1, t._2))
-    assert(ranked(KMeans.assignTwoLevelTopP(e, cents, KMeans.K, probes = 2,
-        nProbe = KMeans.coarseCells(KMeans.K))) ===
-      ranked(KMeans.assignTopP(e, cents, probes = 2)),
+    assert(ranked(KMeans.assign(e, cents, probes = 2,
+        route = KMeans.Route.TwoLevel(KMeans.K, KMeans.coarseCells(KMeans.K)))) ===
+      ranked(KMeans.assign(e, cents, probes = 2)),
       "two-level top-P with complete probing must equal flat top-P")
     val exact = Dedup.embeddingPairs.build(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap

@@ -38,6 +38,21 @@ class LegsSpec extends SparkSpec {
     }
   }
 
+  test("semdedup planted prints one line per assignment variant") {
+    implicit val s: SparkSession = spark
+    val out = new java.io.ByteArrayOutputStream
+    try Console.withOut(out)(Legs.run("semdedup", Seq(sf(), "planted")))
+    finally spark.catalog.clearCache()
+    val mapper = new ObjectMapper()
+    val lines = out.toString("UTF-8").linesIterator.filter(_.startsWith("{")).map(mapper.readTree).toSeq
+    assert(lines.map(_.get("config").asText) === Seq("planted_fixed_k5", "planted_formula_k",
+      "planted_formula_k_2t", "planted_formula_k_2l", "planted_formula_k_mp2", "planted_formula_k_2lmp2"))
+    lines.foreach { j =>
+      assert(j.get("n_planted").asLong > 0 && j.get("n_hit").asLong <= j.get("n_planted").asLong,
+        j.toString)
+    }
+  }
+
   test("pairs: delta legs without batchFrom fail with a usage error") {
     // with no batch the "batch" would be the whole posting list, and
     // delta_direct would broadcast all of it

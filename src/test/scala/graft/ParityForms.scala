@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
+import graft.engine.Functions.roundPortable
 import graft.ext.Similarity
 
 /** Reference formulations the native library forms are pinned
@@ -56,4 +57,18 @@ object ParityForms {
       when(graft.functions.CosineSimilarity(v, typedLit(tablePlanes(b).toSeq)) > 0,
         lit(1L << b)).otherwise(lit(0L)))
       .reduce(_.bitwiseOR(_))
+
+  /** The window formulation of `KMeans.assign` (one probe, flat route):
+    * a `row_number` over (csim desc, cluster) per vector — the shape
+    * the DuckDB oracle runs, where the library reduces by `max_by`.
+    */
+  def assignWindow(e: DataFrame, cents: DataFrame): DataFrame = {
+    val w = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cluster"))
+    e.crossJoin(broadcast(cents))
+      .withColumn("csim",
+        roundPortable(graft.functions.CosineSimilarity(col("embedding"), col("centroid")), 6))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("vec_id"), col("embedding"), col("cluster"), col("csim"))
+  }
 }

@@ -137,9 +137,9 @@ class PlanSpec extends SparkSpec {
     val allowed: Map[String, Set[String]] = Map(
       // ---- ENTITY --------------------------------------------------
       "ann_hybrid_rrf" -> Set("q_id"),
-      "ann_ivf_kmeans_topk" -> Set("q_id", "vec_id"),
+      "ann_ivf_kmeans_topk" -> Set("q_id"),
       "ann_ivf_topk" -> Set("q_id"),
-      "ann_ivfpq_topk" -> Set("blk,vec_id", "q_id", "vec_id"),
+      "ann_ivfpq_topk" -> Set("blk,vec_id", "q_id"),
       "ann_mmr_rerank" -> Set("q_id"),
       "ann_pq_topk" -> Set("blk,vec_id"),
       "dedup_containment" -> Set("doc_id"),
@@ -152,12 +152,9 @@ class PlanSpec extends SparkSpec {
       "dedup_minhash_occupancy" -> Set("doc_id"),
       "dedup_ngram_novelty" -> Set("doc_id"),
       "dedup_recall_eval" -> Set("band,key", "doc_id"),
-      "dedup_semdedup" -> Set("vec_id"),
-      "dedup_semdedup_occupancy" -> Set("vec_id"),
       "dedup_shingle_profile" -> Set("doc_id"),
       "dedup_substring_clean" -> Set("doc_id"),
-      "emb_cluster_keywords" -> Set("cluster", "vec_id"), // cluster: vocab×k COLLAPSED
-      "emb_kmeans_assign" -> Set("vec_id"),
+      "emb_cluster_keywords" -> Set("cluster"), // vocab×k COLLAPSED
       "events_asof_nearest" -> Set("user_id"),
       "events_asof_tolerance" -> Set("user_id"),
       "events_attribution" -> Set("p_id,user_id"),
@@ -1550,8 +1547,8 @@ class PlanSpec extends SparkSpec {
   test("formula-k assignment paths: no n·k window exchange; two-level refines via shuffled hash") {
     val e = graft.queries.Inventory.rebalanced(
       spark.read.parquet(s"$d/embeddings.parquet"), "vec_id")
-    // assignWith (the argmax-by-aggregation shared by assignK and
-    // semdedupPairsMulti): the scored crossJoin collapses in a
+    // KMeans.assign (the argmax-by-aggregation behind assignK and
+    // semdedupPairsFrom): the scored crossJoin collapses in a
     // partial max_by BEFORE any exchange — a Window here would mean
     // the n·k rank sort the scaladoc warns against has crept back
     val pFlat = plan(graft.ext.KMeans.assignK(e, graft.ext.KMeans.K))
@@ -1569,7 +1566,8 @@ class PlanSpec extends SparkSpec {
     // (coarse, shard) — SMJ would sort the embedding-wide probe
     // stream (the r14 spill class), broadcast would carry the k-sized
     // fine relation the two-level shape exists to avoid
-    val p2 = plan(graft.ext.KMeans.assignKTwoLevel(e, graft.ext.KMeans.K))
+    val p2 = plan(graft.ext.KMeans.assignK(e, graft.ext.KMeans.K,
+      Some(graft.ext.KMeans.Route.TwoLevel(graft.ext.KMeans.K, 2))))
     assert(p2.contains("ShuffledHashJoin [coarse"),
       s"two-level refine join is not a shuffled hash join on coarse:\n$p2")
     assert(!p2.contains("SortMergeJoin"),

@@ -453,6 +453,64 @@ class PropertySpec extends SparkSpec {
     assert(overBudget.toSet === Set(true, false), "rounds must probe both over and under budget")
   }
 
+  test("KMeans.assign: flat and two-level, one and two probes, equal a plain-Scala nearest-centroid top-P") {
+    val spk = spark; import spk.implicits._
+    import graft.ext.KMeans
+    import KMeans.Route.{Flat, TwoLevel}
+    val r = new scala.util.Random(3141)
+    val g6 = (x: Double) => math.floor(x * 1e6 + 0.5) / 1e6
+    def cos(a: Seq[Double], b: Seq[Double]): Double = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+      dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+    // small-integer vectors: equal cosines recur, so csim ties on the
+    // 6-dp grid are common, and the last centroid copies the first, so
+    // every vector ties between those two clusters
+    def gridVec(): Seq[Double] = Iterator.continually(Seq.fill(4)(r.nextInt(5) - 2.0))
+      .find(_.exists(_ != 0.0)).get
+    val ties = Seq(3, 5, 10).map { k =>
+      val base = Seq.fill(k - 1)(gridVec())
+      val cents = (base :+ base.head).zipWithIndex.map(_.swap)
+      val vecs = (0 until 80).map(i => i.toLong -> gridVec())
+      val e = vecs.toDF("vec_id", "embedding")
+      val c = cents.toDF("cluster", "centroid")
+      // reference: candidates by (csim desc, cluster asc), csim at 6 dp
+      val ranked = vecs.map { case (id, v) =>
+        id -> cents.map { case (cl, cv) => (cl, g6(cos(v, cv))) }.sortBy { case (cl, s) => (-s, cl) }
+      }.toMap
+      def rows(df: org.apache.spark.sql.DataFrame, probes: Int): Map[(Long, Int), (Int, Double)] =
+        df.collect().map { x =>
+          val rank = if (probes == 1) 0 else x.getAs[Int]("probe_rank")
+          (x.getAs[Long]("vec_id"), rank) -> ((x.getAs[Int]("cluster"), x.getAs[Double]("csim")))
+        }.toMap
+      for (route <- Seq(Flat, TwoLevel(k, KMeans.coarseCells(k))); probes <- Seq(1, 2)) {
+        val got = KMeans.assign(e, c, probes, route)
+        val want = ranked.flatMap { case (id, cands) =>
+          cands.take(probes).zipWithIndex.map { case (cand, rank) => (id, rank) -> cand }
+        }
+        assert(got.count() === vecs.length * probes, s"k=$k, $route, probes=$probes: duplicate rows")
+        assert(rows(got, probes) === want, s"k=$k, $route, probes=$probes")
+      }
+      assert(rows(graft.ParityForms.assignWindow(e, c), 1) === rows(KMeans.assign(e, c), 1),
+        s"k=$k: window argmax differs from assign")
+      // one probed coarse cell: still one valid cluster per vector, and
+      // an argmax over a subset never beats the full one
+      val partial = rows(KMeans.assign(e, c, route = TwoLevel(k, 1)), 1)
+      assert(partial.keySet === vecs.map(_._1 -> 0).toSet, s"k=$k: TwoLevel(k, 1) is not total")
+      partial.foreach { case ((id, _), (cl, s)) =>
+        assert(cl >= 0 && cl < k && s <= ranked(id).head._2, s"k=$k: vec $id scored $s via $cl")
+      }
+      ranked.values.count(cands => cands(0)._2 == cands(1)._2)
+    }
+    assert(ties.forall(_ > 0), s"every round must plant csim ties: $ties")
+    Seq(1, 5, KMeans.TwoLevelMinK - 1, KMeans.TwoLevelMinK, KMeans.TwoLevelMinK + 1, 100000)
+      .foreach { k =>
+        val want = if (k >= KMeans.TwoLevelMinK) TwoLevel(k, 2) else Flat
+        assert(KMeans.Route.forK(k) === want, s"k=$k")
+      }
+  }
+
   test("rebandedParams: occupancy-targeting B, recall-satisfying L, monotone in n") {
     import graft.ext.Dedup.rebandedParams
     // the measured anchor points (BENCHNOTES r14): harness 2k -> the

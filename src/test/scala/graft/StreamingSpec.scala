@@ -159,7 +159,7 @@ class StreamingSpec extends SparkSpec {
     val centsDf = graft.ext.KMeans.trained(e)
     val cents = centsDf.collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
-    val batch = graft.ext.KMeans.assignWith(e, centsDf)
+    val batch = graft.ext.KMeans.assign(e, centsDf)
       .select("vec_id", "cluster", "csim").collect()
       .map(r => r.getLong(0) -> ((r.getInt(1), r.getDouble(2)))).toMap
     val mem = MemoryStream[(Long, Seq[Float])]
