@@ -27,7 +27,30 @@ trait Catalog {
   */
 final class ParquetCatalog(spark: SparkSession, dir: String) extends Catalog {
   override def table(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetCatalog.read(spark, s"$dir/$name.parquet")
+}
+
+object ParquetCatalog {
+
+  /** The one way the library reads a parquet source: the relation
+    * a plain `spark.read.parquet` builds, without the one-task Spark job
+    * that call runs to infer the schema. The schema comes from one
+    * footer read on the calling thread and converted by Spark's own
+    * code (`GraftParquetBridge.footerSchema`), so the schema, the
+    * discovered partition columns and the rows are the plain read's;
+    * when no footer can be read, or the session merges schemas, this
+    * is the plain read, so its error is Spark's. Nothing is cached:
+    * every call sees the path as it is. The path is listed twice, once
+    * for the footer and once by the read; a directory level with more
+    * than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * entries is listed by a Spark job each time, so there this read
+    * fires as many jobs as the plain one.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+      .footerSchema(spark, path)
+      .fold(spark.read)(schema => spark.read.schema(schema))
+      .parquet(path)
 }
 
 /** Fixed in-memory mapping — used for fixture-driven tests and for

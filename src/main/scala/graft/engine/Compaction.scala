@@ -49,7 +49,7 @@ object Compaction {
     val before = parquetFiles(fs, target)
     val bytes = before.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(path)
+    val df = ParquetCatalog.read(spark, path)
     val sized =
       if (nOut <= df.rdd.getNumPartitions) df.coalesce(nOut)
       else df.repartition(nOut)
@@ -58,7 +58,7 @@ object Compaction {
     // the rename swap mutates the path behind Spark's cache manager —
     // same hazard as ParquetUpsert, same fix
     spark.catalog.refreshByPath(path)
-    val after = spark.read.parquet(path)
+    val after = ParquetCatalog.read(spark, path)
     Report(before.length, parquetFiles(fs, target).length, bytes, after.count())
   }
 }

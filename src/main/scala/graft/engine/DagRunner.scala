@@ -31,11 +31,15 @@ final case class RunResult(
   *   4. Each model's tests run right after materialization; a failed
   *      test marks all transitive descendants skipped.
   *
-  * Scale note: the runner never calls an action on view models, and
-  * table models incur exactly one job each (the write). Independent
-  * subtrees could be submitted from separate threads for concurrent
-  * Spark scheduling; at 100 TB the write itself dominates, so we keep
-  * scheduling sequential-and-simple here.
+  * Scale note: view models are never materialized, but every data
+  * test is its own Spark action ([[DataTest.passes]]), and a test on a
+  * view re-runs the view's plan from its sources. A trends build runs
+  * 68 test actions, 30 of them on the four staging views. A table
+  * model costs its write plus the sink's read-back, and a write is
+  * several jobs: in a traced trends build (`e2ebench --trace 1`) the
+  * three marts' `TableSink.Parquet` writes fired 13 jobs. With
+  * `maxParallelism > 1`, independent models of a wave are submitted
+  * from separate threads; at 100 TB the writes dominate.
   */
 final class DagRunner(
     catalog: Catalog,

@@ -140,7 +140,7 @@ object TableSink {
         else w
       if (partCols.nonEmpty) w2.partitionBy(partCols: _*).parquet(path)
       else w2.parquet(path)
-      df.sparkSession.read.parquet(path)
+      ParquetCatalog.read(df.sparkSession, path)
     }
   }
 
@@ -203,7 +203,7 @@ object TableSink {
       (buckets.get(name), partitions.get(name)) match {
         case (None, None) =>
           df.write.mode("overwrite").parquet(s"$dir/$name")
-          df.sparkSession.read.parquet(s"$dir/$name")
+          ParquetCatalog.read(df.sparkSession, s"$dir/$name")
         case (None, Some(pcols)) =>
           // partition-only layout needs no catalog entry: partition
           // DISCOVERY carries the pruning metadata in the directory
@@ -248,7 +248,7 @@ object TableSink {
               pmod(hash(saltSrc: _*), lit(writersPerPartition)): _*)
           clustered
             .write.mode("overwrite").partitionBy(pcols: _*).parquet(s"$dir/$name")
-          df.sparkSession.read.parquet(s"$dir/$name")
+          ParquetCatalog.read(df.sparkSession, s"$dir/$name")
         case (Some((n, cols)), p) =>
           val spark = df.sparkSession
           val tbl = catalogPrefix + name
@@ -295,7 +295,7 @@ object TableSink {
         df.write.mode("overwrite").parquet(path)
       } else {
         val keyCols = key.map(org.apache.spark.sql.functions.col)
-        val merged = spark.read.parquet(path)
+        val merged = ParquetCatalog.read(spark, path)
           .join(df.select(keyCols: _*).distinct(), key, "left_anti")
           .unionByName(df)
         merged.write.mode("overwrite").parquet(path + "__staging")
@@ -311,7 +311,7 @@ object TableSink {
       // the same plan. Invalidate them all before handing out the
       // post-swap relation.
       spark.catalog.refreshByPath(path)
-      spark.read.parquet(path)
+      ParquetCatalog.read(spark, path)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.ParquetCatalog
 import graft.queries.Inventory.Q
 
 /** Connected components over the near-dup pair graph — the step that
@@ -354,7 +355,7 @@ object Clusters {
 
   val dedupComponents: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet").select("doc_id")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet").select("doc_id")
       val pairs = Dedup.jaccardPairs.build(s, d).select("doc_a", "doc_b")
       componentReport(connectedComponents(docs, pairs))
     },
@@ -440,7 +441,7 @@ object Clusters {
 
   val dedupKeepBest: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet").select("doc_id", "n_chars")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet").select("doc_id", "n_chars")
       val pairs = Dedup.jaccardPairs.build(s, d).select("doc_a", "doc_b")
       keepBest(connectedComponents(docs.select("doc_id"), pairs), docs)
     },
@@ -500,10 +501,10 @@ object Clusters {
   // ------------------------------------------------------------------
   val semdedupKeep: Q = Q(
     (s, d) => {
-      val ids = s.read.parquet(s"$d/embeddings.parquet").select(col("vec_id").as("doc_id"))
+      val ids = ParquetCatalog.read(s, s"$d/embeddings.parquet").select(col("vec_id").as("doc_id"))
       val pairs = KMeans.semdedup.build(s, d)
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-      val docs = s.read.parquet(s"$d/documents.parquet").select("doc_id", "n_chars")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet").select("doc_id", "n_chars")
       keepBest(connectedComponents(ids, pairs), docs)
     },
     Some(s"""WITH RECURSIVE ${KMeans.kmeansCtes}, spairs AS (
@@ -542,7 +543,7 @@ object Clusters {
   // ------------------------------------------------------------------
   val dedupComponentsStar: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet").select("doc_id")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet").select("doc_id")
       val pairs = Dedup.jaccardPairs.build(s, d).select("doc_a", "doc_b")
       componentReport(connectedComponentsStar(docs, pairs))
     },

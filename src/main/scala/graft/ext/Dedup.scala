@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 import graft.engine.Functions.roundPortable
+import graft.engine.ParquetCatalog
 import graft.queries.Inventory.Q
 import graft.ext.TextAnalysis.tokens
 
@@ -75,7 +76,7 @@ object Dedup {
     */
   def shinglePosts(s: SparkSession, d: String,
       shingleHash: Column => Column = xxhash64(_)): DataFrame =
-    shinglePostsDf(s.read.parquet(s"$d/documents.parquet"), shingleHash)
+    shinglePostsDf(ParquetCatalog.read(s, s"$d/documents.parquet"), shingleHash)
 
   /** DataFrame-level variant for DAG models ([[graft.models.DedupFunnel]])
     * and any caller that already holds the documents relation.
@@ -116,7 +117,7 @@ object Dedup {
   // ------------------------------------------------------------------
   val exact: Q = Q(
     (s, d) =>
-      s.read.parquet(s"$d/documents.parquet")
+      ParquetCatalog.read(s, s"$d/documents.parquet")
         .groupBy(md5(encode(col("text"), "UTF-8")).as("text_hash"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("copies"))
         .orderBy("text_hash"),
@@ -169,7 +170,7 @@ object Dedup {
   }
 
   val jaccardPairs: Q = Q(
-    (s, d) => jaccardPairsDf(s.read.parquet(s"$d/documents.parquet")),
+    (s, d) => jaccardPairsDf(ParquetCatalog.read(s, s"$d/documents.parquet")),
     Some("""WITH s AS (
            |  SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
            |           i -> array_to_string(toks[i:i+2], ' '))) AS sh
@@ -772,7 +773,7 @@ object Dedup {
 
   val simhashFingerprints: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
       val cols = Seq(col("doc_id"), col("simhash")) ++ (0 until SimBands).map(b =>
         shiftright(col("simhash"), b * SimBandBits)
@@ -835,7 +836,7 @@ object Dedup {
 
   val embeddingPairs: Q = Q(
     (s, d) => {
-      val e = s.read.parquet(s"$d/embeddings.parquet")
+      val e = ParquetCatalog.read(s, s"$d/embeddings.parquet")
         .filter(col("vec_id") < VerifyBlockCap)
       val a = e.select(col("vec_id").as("id_a"), col("embedding").as("va"))
       val b = e.select(col("vec_id").as("id_b"), col("embedding").as("vb"))
@@ -1028,7 +1029,7 @@ object Dedup {
     (s, d) =>
       embeddingLshPairs(
         graft.queries.Inventory.rebalanced(
-          s.read.parquet(s"$d/embeddings.parquet"), "vec_id"), CosTau, embPlanes),
+          ParquetCatalog.read(s, s"$d/embeddings.parquet"), "vec_id"), CosTau, embPlanes),
     // Full oracle: seed-43 planes inlined as literals, same block
     // generation (sign of the dot — norms positive), bucket-size
     // guard, candidate join, and exact cosine verify — the bucketed
@@ -1097,7 +1098,7 @@ object Dedup {
   val lshOccupancy: Q = Q(
     (s, d) =>
       lshOccupancyOf(graft.queries.Inventory.rebalanced(
-        s.read.parquet(s"$d/embeddings.parquet"), "vec_id"), embPlanes),
+        ParquetCatalog.read(s, s"$d/embeddings.parquet"), "vec_id"), embPlanes),
     Some(
       s"""WITH $embBucketCtes, bs AS (
          |  SELECT tbl, bucket, count(*) AS bucket_n FROM buckets GROUP BY 1, 2
@@ -1194,7 +1195,7 @@ object Dedup {
 
   val containment: Q = Q(
     (s, d) => {
-      val posts = shinglePostsDf(s.read.parquet(s"$d/documents.parquet"))
+      val posts = shinglePostsDf(ParquetCatalog.read(s, s"$d/documents.parquet"))
       val a = posts.select(col("hs"), col("doc_id").as("inner_doc"), col("sz").as("sz_a"))
       val b = posts.select(col("hs"), col("doc_id").as("outer_doc"), col("sz").as("sz_b"))
       val contain = col("overlap").cast(DoubleType) / col("sz_a")
@@ -1318,7 +1319,7 @@ object Dedup {
 
   val incremental: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val posts = shinglePostsDf(docs)
       val corpus = posts.filter(col("doc_id") % 2 === 0)
         .select(col("hs"), col("doc_id").as("corpus_doc"), col("sz").as("sz_c"))
@@ -1342,7 +1343,7 @@ object Dedup {
       val fits = gate.getLong(0) <= IncrementalBroadcastMaxChars &&
         gate.getLong(1) <= IncrementalBroadcastMaxPostings
       val matches = incrementalMatches(corpus, batch, fits)
-      s.read.parquet(s"$d/documents.parquet")
+      ParquetCatalog.read(s, s"$d/documents.parquet")
         .filter(col("doc_id") % 2 === 1).select(col("doc_id"))
         .join(matches, col("doc_id") === col("batch_doc"), "left")
         .select(col("doc_id"),
@@ -1589,7 +1590,7 @@ object Dedup {
 
   val substringSpans: Q = Q(
     (s, d) => spanDupReport(
-      spanWins(s.read.parquet(s"$d/documents.parquet"), SpanTokens)
+      spanWins(ParquetCatalog.read(s, s"$d/documents.parquet"), SpanTokens)
         .select("doc_id", "hs")),
     Some(s"""WITH sp AS (
             |  SELECT doc_id,
@@ -1635,7 +1636,7 @@ object Dedup {
 
   val substringSpansLong: Q = Q(
     (s, d) => spanDupReport(
-      spanWins(s.read.parquet(s"$d/documents.parquet"))
+      spanWins(ParquetCatalog.read(s, s"$d/documents.parquet"))
         .select("doc_id", "hs")),
     Some(s"""WITH sp AS (
             |  SELECT doc_id,
@@ -1862,7 +1863,7 @@ object Dedup {
   }
 
   val substringClean: Q = Q(
-    (s, d) => substringCleanDf(s.read.parquet(s"$d/documents.parquet")),
+    (s, d) => substringCleanDf(ParquetCatalog.read(s, s"$d/documents.parquet")),
     Some(s"""WITH sp AS (
             |  SELECT doc_id, i - 1 AS pos,
             |    ('0x' || substr(md5(array_to_string(toks[i:i+${SpanTokensLong - 1}], ' ')), 1, 15))::BIGINT AS hs
@@ -1908,7 +1909,7 @@ object Dedup {
   // while still pinning every byte of every cleaned document.
   // ------------------------------------------------------------------
   val substringCleaned: Q = Q(
-    (s, d) => substringCleanedDf(s.read.parquet(s"$d/documents.parquet"))
+    (s, d) => substringCleanedDf(ParquetCatalog.read(s, s"$d/documents.parquet"))
       .select(col("doc_id"), col("n_kept_tokens"),
         md5(col("cleaned_text")).as("cleaned_md5")),
     Some(s"""WITH tk AS (
@@ -2038,7 +2039,7 @@ object Dedup {
       // window would serialize into one task (VERDICT r16 window
       // family). count/min collapse map-side; the join-back build is
       // one row per URL and AQE skew-splits the probe.
-      val canon = s.read.parquet(s"$d/documents.parquet")
+      val canon = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("doc_id"), canonicalUrl(url).as("canonical_url"))
       val groups = canon.groupBy("canonical_url")
         .agg(count(lit(1)).as("group_size"), min(col("doc_id")).as("rep"))
@@ -2134,7 +2135,7 @@ object Dedup {
 
   val bloomPrefilter: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val corpus = docs.filter(col("doc_id") % 2 === 0).select(col("text"))
       val batch = docs.filter(col("doc_id") % 2 === 1).select(col("doc_id"), col("text"))
       val bf = corpus.agg(
@@ -2225,7 +2226,7 @@ object Dedup {
     */
   def snmCandidates(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val keyed = s.read.parquet(s"$d/documents.parquet")
+    val keyed = ParquetCatalog.read(s, s"$d/documents.parquet")
       .select(col("doc_id"), snmKey(col("text")).as("k"))
     val ranked = graft.engine.Windows.globalRowNumber(
       keyed, Seq(col("k"), col("doc_id")), keepPid = true)
@@ -2354,7 +2355,7 @@ object Dedup {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("doc_id").orderBy("pos")
       val sps = graft.queries.Inventory.rebalanced(
-        s.read.parquet(s"$d/documents.parquet"), "doc_id")
+        ParquetCatalog.read(s, s"$d/documents.parquet"), "doc_id")
         .select(col("doc_id"), col("source"),
           posexplode(graft.ext.TextAnalysis.tokens(col("text"))).as(Seq("pos", "t")))
         .withColumn("t1", lead("t", 1).over(w))

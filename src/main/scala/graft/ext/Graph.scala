@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 import graft.engine.Functions.roundPortable
+import graft.engine.ParquetCatalog
 import graft.queries.Inventory
 import graft.queries.Inventory.Q
 
@@ -197,7 +198,7 @@ object Graph {
   val textrankKeywords: Q = Q(
     (s, d) => {
       val w = Window.partitionBy("doc_id").orderBy("pos")
-      val adj = s.read.parquet(s"$d/documents.parquet")
+      val adj = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("doc_id"), col("lang"),
           posexplode(TextAnalysis.tokens(col("text"))).as(Seq("pos", "t")))
         .withColumn("t1", lead("t", 1).over(w))
@@ -311,7 +312,7 @@ object Graph {
   val linkPrediction: Q = Q(
     (s, d) => {
       val w = Window.partitionBy("doc_id").orderBy("pos")
-      val und = s.read.parquet(s"$d/documents.parquet")
+      val und = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("doc_id"), col("lang"),
           posexplode(TextAnalysis.tokens(col("text"))).as(Seq("pos", "t")))
         .withColumn("t1", lead("t", 1).over(w))
@@ -481,7 +482,7 @@ object Graph {
     (s, d) => {
       val w = Window.partitionBy("doc_id").orderBy("pos")
       val rankW = Window.partitionBy("lang").orderBy(col("n").desc, col("a"), col("b"))
-      val edges = s.read.parquet(s"$d/documents.parquet")
+      val edges = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("doc_id"), col("lang"),
           posexplode(TextAnalysis.tokens(col("text"))).as(Seq("pos", "t")))
         .withColumn("t1", lead("t", 1).over(w))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 import graft.engine.Functions.roundPortable
+import graft.engine.ParquetCatalog
 import graft.queries.Inventory.Q
 
 /** Spherical k-means over the embedding corpus — the clustering stage
@@ -56,7 +57,7 @@ object KMeans {
   val Dim = 64
 
   private def emb(s: SparkSession, d: String): DataFrame =
-    graft.queries.Inventory.rebalanced(s.read.parquet(s"$d/embeddings.parquet"), "vec_id")
+    graft.queries.Inventory.rebalanced(ParquetCatalog.read(s, s"$d/embeddings.parquet"), "vec_id")
 
   /** The 6-dp rounded cosine every score in this module is keyed on. */
   private def csim(a: Column, b: Column): Column =
@@ -598,7 +599,7 @@ object KMeans {
       // 10× corpus. Joining the compact per-doc relations keeps the
       // estimates honest; at corpus scale this is a doc_id equi-join
       // of two corpus-sized relations (shuffle, co-partitionable).
-      val joined = s.read.parquet(s"$d/documents.parquet")
+      val joined = ParquetCatalog.read(s, s"$d/documents.parquet")
         .join(asg, Seq("doc_id"))
         .select(col("cluster"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
       val tfc = joined.groupBy("cluster", "tok").agg(count(lit(1)).as("tf"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Functions.roundPortable
+import graft.engine.ParquetCatalog
 import graft.queries.Inventory.Q
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary`
@@ -74,7 +75,7 @@ object Multimodal {
     val txt =
       if (asciiOnly) regexp_replace(col("text"), "[^\\x00-\\x7F]", "")
       else col("text")
-    s.read.parquet(s"$dir/documents.parquet")
+    ParquetCatalog.read(s, s"$dir/documents.parquet")
       .select(
         col("doc_id").as("media_id"),
         element_at(typedLit(Seq("image", "audio", "video")),
@@ -246,7 +247,7 @@ object Multimodal {
   def syntheticMedia(s: SparkSession, dir: String): Dataset[MediaItem] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[MediaItem]
     implicit val encL = org.apache.spark.sql.Encoders.scalaLong
-    s.read.parquet(s"$dir/documents.parquet")
+    ParquetCatalog.read(s, s"$dir/documents.parquet")
       .select(col("doc_id")).as[Long]
       .map { id =>
         if (id % 2 == 0) {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.engine.Functions.{avgExact, roundPortable}
+import graft.engine.ParquetCatalog
 import graft.ext.Dedup.hash60
 import graft.ext.TextAnalysis
 import graft.queries.Inventory.Q
@@ -29,7 +30,7 @@ object Pipelines {
     */
   val stratifiedSplit: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val bucket = hash60(col("text")) % 100
       docs
         .select(col("doc_id"), col("lang"), bucket.as("bucket"))
@@ -61,7 +62,7 @@ object Pipelines {
     */
   val cleanCorpus: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val qc = TextAnalysis.qualityCols(col("text"))
       docs
         .select(col("doc_id"), col("lang"), col("text"),
@@ -202,7 +203,7 @@ object Pipelines {
       // quality scoring (three tokenizations per doc) parallelizes off
       // a narrow scan; no-op on a wide one
       val docs = graft.queries.Inventory.rebalanced(
-        s.read.parquet(s"$d/documents.parquet"), "doc_id")
+        ParquetCatalog.read(s, s"$d/documents.parquet"), "doc_id")
       val qc = TextAnalysis.qualityCols(col("text"))
       val q6 = roundPortable(qc.score, 6)
       docs.select(col("doc_id"), col("lang"), q6.as("q"))
@@ -260,7 +261,7 @@ object Pipelines {
 
   val packSequences: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       graft.engine.Windows.groupedPrefixSum(
         docs.select(col("doc_id"), col("lang"),
           size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens")),
@@ -308,7 +309,7 @@ object Pipelines {
   val langMix: Q = Q(
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val perLang = docs
         .select(col("lang"), size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
         .groupBy("lang")
@@ -353,7 +354,7 @@ object Pipelines {
 
   val blocklistScrub: Q = Q(
     (s, d) =>
-      s.read.parquet(s"$d/documents.parquet")
+      ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("doc_id"),
           regexp_count(col("text"), lit(BlockPattern)).cast("long").as("n_hits"),
           md5(encode(regexp_replace(col("text"), BlockPattern, MaskToken), "UTF-8")).as("clean_hash"))
@@ -391,7 +392,7 @@ object Pipelines {
       val rate = when(col("lang") === "en", lit(SampleRates("en")))
         .otherwise(lit(SampleRates("other")))
       val kept = (hash60(col("text")) % 100) < rate
-      s.read.parquet(s"$d/documents.parquet")
+      ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("doc_id"), col("lang"), kept.cast("long").as("keep"))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum(col("keep")).as("n_kept"),
@@ -434,7 +435,7 @@ object Pipelines {
   val mixtureKl: Q = Q(
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val perLang = docs
         .select(col("lang"), size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
         .groupBy("lang")
@@ -544,7 +545,7 @@ object Pipelines {
 
   val tokenBudget: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val qc = TextAnalysis.qualityCols(col("text"))
       val base = docs.select(col("doc_id"),
         size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"),
@@ -606,7 +607,7 @@ object Pipelines {
 
   val weightedSample: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       docs
         .select(col("doc_id"), col("lang"), col("n_chars"),
           (hash60(col("text")) % PriorityMod).cast(DoubleType).as("u"))
@@ -644,7 +645,7 @@ object Pipelines {
   // ------------------------------------------------------------------
   val datasetCard: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val l1 = docs
         .groupBy(col("lang"), md5(encode(col("text"), "UTF-8")).as("h"))
         .agg(count(lit(1)).as("n"),
@@ -698,7 +699,7 @@ object Pipelines {
 
   val chunkDocuments: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       docs
         .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
         .select(col("doc_id"), col("toks"),
@@ -765,7 +766,7 @@ object Pipelines {
             regexp_replace(col("t2"), EmailRe, "<EMAIL>"),
             PhoneRe, "<PHONE>"),
           Ipv4Re, "<IP>")
-      s.read.parquet(s"$d/documents.parquet")
+      ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("doc_id"), planted.as("t2"))
         .select(col("doc_id"),
           size(regexp_extract_all(col("t2"), lit(EmailRe), lit(0))).cast("long").as("n_emails"),
@@ -856,7 +857,7 @@ object Pipelines {
 
   val qualityResample: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("doc_id"), col("lang"), col("text"))
       val (scored, th) = pplScored(docs)
       val bucket = when(col("perplexity") <= col("p33"), "head")
@@ -934,7 +935,7 @@ object Pipelines {
       // case), this is a no-op and adds no shuffle. Shared policy
       // lives in Inventory.rebalanced (keyed on doc_id so the exchange
       // is reusable, narrow-plan-only probe).
-      val raw = s.read.parquet(s"$d/documents.parquet")
+      val raw = ParquetCatalog.read(s, s"$d/documents.parquet")
       val docs = graft.queries.Inventory.rebalanced(raw, "doc_id")
       val qc = TextAnalysis.qualityCols(col("text"))
       def buckets(src: DataFrame): DataFrame = src
@@ -1044,7 +1045,7 @@ object Pipelines {
 
   val curriculum: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val (w, sn, syl) = TextAnalysis.fleschParts(col("text"))
       val base = docs.select(col("doc_id"), col("lang"),
         TextAnalysis.flesch2dp(w, sn, syl).as("flesch"),
@@ -1172,7 +1173,7 @@ object Pipelines {
   val qualityClassifier: Q = Q(
     (s, d) => {
       val docs = graft.queries.Inventory.rebalanced(
-        s.read.parquet(s"$d/documents.parquet"), "doc_id")
+        ParquetCatalog.read(s, s"$d/documents.parquet"), "doc_id")
       val feats = nbFeats(nbLabeled(docs))
       val model = broadcast(nbQualityModel(feats))
       feats.join(model, Seq("feat"))
@@ -1246,7 +1247,7 @@ object Pipelines {
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy()
-      s.read.parquet(s"$d/customer.parquet")
+      ParquetCatalog.read(s, s"$d/customer.parquet")
         .groupBy("c_nationkey", "c_mktsegment")
         .agg(count(lit(1)).as("n_members"))
         .withColumn("k_anonymous", col("n_members") >= KAnonK)
@@ -1286,7 +1287,7 @@ object Pipelines {
       val w = Window.partitionBy()
       val shard = pmod(hash60(concat(lit("shard:"), col("doc_id").cast("string"))),
         lit(NumShards.toLong)).as("shard")
-      val g = s.read.parquet(s"$d/documents.parquet")
+      val g = ParquetCatalog.read(s, s"$d/documents.parquet")
         .groupBy(shard)
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
       val total = sum(col("n_docs")).over(w).cast(DoubleType)
@@ -1341,7 +1342,7 @@ object Pipelines {
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy()
-      s.read.parquet(s"$d/customer.parquet")
+      ParquetCatalog.read(s, s"$d/customer.parquet")
         .groupBy("c_nationkey")
         .agg(count(lit(1)).as("n_members"),
           countDistinct(col("c_mktsegment")).as("n_sensitive_values"))
@@ -1449,7 +1450,7 @@ object Pipelines {
     */
   def nbHeldoutScored(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
     nbHeldoutScoredDf(graft.queries.Inventory.rebalanced(
-      s.read.parquet(s"$d/documents.parquet"), "doc_id"))
+      ParquetCatalog.read(s, s"$d/documents.parquet"), "doc_id"))
 
   /** DataFrame-level variant over an already-resolved documents
     * relation — what [[graft.models.EvalPipeline]] materializes.
@@ -1693,7 +1694,7 @@ object Pipelines {
       val w = Window.partitionBy()
       val wClass = Window.partitionBy("c_nationkey")
       val wSeg = Window.partitionBy("c_mktsegment")
-      val g = s.read.parquet(s"$d/customer.parquet")
+      val g = ParquetCatalog.read(s, s"$d/customer.parquet")
         .groupBy("c_nationkey", "c_mktsegment")
         .agg(count(lit(1)).as("n"))
         .withColumn("n_class", sum(col("n")).over(wClass))
@@ -1710,7 +1711,7 @@ object Pipelines {
         .groupBy("c_nationkey", "n_class")
         .agg(sum(abs(col("p6") - col("q6"))).as("tv_present"),
           sum(col("q6")).as("q_present"))
-      val qTotal = s.read.parquet(s"$d/customer.parquet")
+      val qTotal = ParquetCatalog.read(s, s"$d/customer.parquet")
         .groupBy("c_mktsegment").agg(count(lit(1)).as("n_seg"))
         .withColumn("n_total", sum(col("n_seg")).over(w))
         .agg(sum(floor(col("n_seg").cast(DoubleType) / col("n_total").cast(DoubleType) * 1e6 + lit(0.5)).cast("long")).as("q_all"))
@@ -1762,7 +1763,7 @@ object Pipelines {
   val cleanedDocs: Q = Q(
     (s, d) => {
       val docs = graft.queries.Inventory.rebalanced(
-        s.read.parquet(s"$d/documents.parquet"), "doc_id")
+        ParquetCatalog.read(s, s"$d/documents.parquet"), "doc_id")
       graft.models.CorpusPipeline.cleaned.transform(Map("documents" -> docs))
         .select(col("doc_id"), col("lang"), col("source"),
           md5(encode(col("text"), "UTF-8")).as("text_md5"),

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import scala.util.Random
 
 import graft.engine.Functions.roundPortable
+import graft.engine.ParquetCatalog
 import graft.queries.Inventory.Q
 
 /** Similarity search over the `embeddings` table (`Array[Float]`,
@@ -39,7 +40,7 @@ object Similarity {
     graft.functions.CosineSimilarity(a, b)
 
   private def emb(s: SparkSession, d: String): DataFrame =
-    graft.queries.Inventory.rebalanced(s.read.parquet(s"$d/embeddings.parquet"), "vec_id")
+    graft.queries.Inventory.rebalanced(ParquetCatalog.read(s, s"$d/embeddings.parquet"), "vec_id")
 
   val TopK = 5
   val NumQueries = 10
@@ -1473,7 +1474,7 @@ object Similarity {
   val hybridRrf: Q = Q(
     (s, d) => {
       import graft.ext.TextAnalysis.tokens
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("doc_id"), tokens(col("text")).as("toks"))
         .select(col("doc_id"), col("toks"), size(col("toks")).cast("long").as("dl"))
       // ---- lexical side: more-like-this BM25 against each query doc

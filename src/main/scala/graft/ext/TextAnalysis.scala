@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.engine.Functions.roundPortable
+import graft.engine.ParquetCatalog
 import graft.queries.Inventory.Q
 
 /** Text-analysis operators for a training-data pipeline over the
@@ -59,7 +60,7 @@ object TextAnalysis {
   // ------------------------------------------------------------------
   val tokenStats: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val toks = tokens(col("text"))
       docs.select(
         col("doc_id"),
@@ -85,7 +86,7 @@ object TextAnalysis {
   // ------------------------------------------------------------------
   val quality: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val qc = qualityCols(col("text"))
       docs.select(
         col("doc_id"),
@@ -123,7 +124,7 @@ object TextAnalysis {
   // ------------------------------------------------------------------
   val langId: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val toks = tokens(col("text"))
       val (en, es, fr, de) =
         (hits(toks, StopEn), hits(toks, StopEs), hits(toks, StopFr), hits(toks, StopDe))
@@ -161,7 +162,7 @@ object TextAnalysis {
   // ------------------------------------------------------------------
   val fingerprint: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val canon = trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " "))
       docs.select(col("doc_id"), md5(encode(canon, "UTF-8")).as("fingerprint"))
         .orderBy("doc_id")
@@ -178,7 +179,7 @@ object TextAnalysis {
   // ------------------------------------------------------------------
   val bpeTokens: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val ws = size(tokens(col("text")))
       val bpe = size(regexp_extract_all(lower(col("text")), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0)))
       docs.select(
@@ -208,7 +209,7 @@ object TextAnalysis {
   // ------------------------------------------------------------------
   val lengthQuantiles: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val n = size(tokens(col("text")))
       docs.select(col("lang"), n.as("n_tokens"))
         .groupBy("lang")
@@ -257,7 +258,7 @@ object TextAnalysis {
 
   val lengthQuantilesApprox: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val n = size(tokens(col("text")))
       def within(approx: Column, exact: Column): Column =
         abs(approx.cast(DoubleType) - exact) <= lit(ApproxQuantileTol) * abs(exact)
@@ -306,7 +307,7 @@ object TextAnalysis {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("doc_id").orderBy("pos")
       val wRank = Window.partitionBy("lang").orderBy(col("n").desc, col("bigram"))
-      s.read.parquet(s"$d/documents.parquet")
+      ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("doc_id"), col("lang"), posexplode(tokens(col("text"))).as(Seq("pos", "t")))
         .withColumn("t1", lead("t", 1).over(w))
         .filter(col("t1").isNotNull)
@@ -349,7 +350,7 @@ object TextAnalysis {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("doc_id").orderBy("pos")
       val winnow = w.rowsBetween(0, WinnowWindow - 1)
-      s.read.parquet(s"$d/documents.parquet")
+      ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "t")))
         .withColumn("t1", lead("t", 1).over(w))
         .withColumn("t2", lead("t", 2).over(w))
@@ -394,7 +395,7 @@ object TextAnalysis {
   val tfidfTopTerms: Q = Q(
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val tf = docs.select(col("doc_id"), explode(tokens(col("text"))).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
@@ -447,7 +448,7 @@ object TextAnalysis {
   val repetition: Q = Q(
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val toks = docs.select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "t")))
       val w = Window.partitionBy("doc_id").orderBy("pos")
       val bigrams = toks.withColumn("t1", lead("t", 1).over(w))
@@ -521,7 +522,7 @@ object TextAnalysis {
 
   val bm25TopK: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("doc_id"), tokens(col("text")).as("toks"))
         .select(col("doc_id"), col("toks"), size(col("toks")).cast("long").as("dl"))
       val stats = docs.agg(count(lit(1)).as("n_docs"),
@@ -581,7 +582,7 @@ object TextAnalysis {
 
   val outliersMad: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("lang"), size(tokens(col("text"))).cast("long").as("n_tokens"))
       val med = docs.groupBy("lang")
         .agg(roundPortable(percentile(col("n_tokens"), lit(0.5)), 4).as("median_tokens"))
@@ -633,7 +634,7 @@ object TextAnalysis {
 
   val lengthHistogram: Q = Q(
     (s, d) =>
-      s.read.parquet(s"$d/documents.parquet")
+      ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("lang"), size(tokens(col("text"))).cast("long").as("n_tokens"))
         .select(col("lang"),
           least(floor(col("n_tokens") / HistBucketWidth), lit(HistMaxBucket.toLong))
@@ -698,7 +699,7 @@ object TextAnalysis {
 
   val gopherRules: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val gc = gopherCols(col("text"))
       docs.select(
         col("doc_id"),
@@ -754,7 +755,7 @@ object TextAnalysis {
   val zipfSlope: Q = Q(
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val tf = docs.select(col("lang"), explode(tokens(col("text"))).as("t"))
         .groupBy("lang", "t").agg(count(lit(1)).as("c"))
       val w = Window.partitionBy("lang").orderBy(col("c").desc, col("t").asc)
@@ -809,7 +810,7 @@ object TextAnalysis {
     * and `Pipelines.qualityResample` (thresholds on it).
     */
   def perDocNll(s: SparkSession, d: String): DataFrame =
-    perDocNllOf(s.read.parquet(s"$d/documents.parquet"))
+    perDocNllOf(ParquetCatalog.read(s, s"$d/documents.parquet"))
 
   /** [[perDocNll]] over an arbitrary (doc_id, text, …) relation — the
     * LM trains on exactly the given corpus slice (used by
@@ -918,7 +919,7 @@ object TextAnalysis {
   val termDrift: Q = Q(
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val counts = docs
         .select(col("lang"), (col("doc_id") % 2).as("slice"), explode(tokens(col("text"))).as("t"))
         .groupBy("lang", "t")
@@ -996,7 +997,7 @@ object TextAnalysis {
   val heavyHitters: Q = Q(
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val tok = s.read.parquet(s"$d/documents.parquet")
+      val tok = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(explode(tokens(col("text"))).as("term"))
       // sketch pass: 2k candidates, fixed memory, one 1-row aggregate
       val cand = tok
@@ -1054,7 +1055,7 @@ object TextAnalysis {
 
   val readability: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val (w, sn, syl) = fleschParts(col("text"))
       val flesch = flesch2dp(w, sn, syl)
       docs.select(
@@ -1101,7 +1102,7 @@ object TextAnalysis {
   // ------------------------------------------------------------------
   val tokenEntropy: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val tf = docs
         .select(col("doc_id"), explode(tokens(col("text"))).as("t"))
         .groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
@@ -1158,7 +1159,7 @@ object TextAnalysis {
 
   val bpeMerges: Q = Q(
     (s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val words = docs.select(explode(tokens(col("text"))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("freq"))
       words.filter(length(col("w")) >= 2)
@@ -1248,7 +1249,7 @@ object TextAnalysis {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("doc_id").orderBy("pos")
       val wl = Window.partitionBy("lang").rowsBetween(Long.MinValue, Long.MaxValue)
-      val toks = s.read.parquet(s"$d/documents.parquet")
+      val toks = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("doc_id"), col("lang"), posexplode(tokens(col("text"))).as(Seq("pos", "t")))
       val uni = toks.groupBy("lang", "t").agg(count(lit(1)).as("cnt"))
         .withColumn("nu", sum("cnt").over(wl))
@@ -1331,7 +1332,7 @@ object TextAnalysis {
 
   val mtld: Q = Q(
     (s, d) => {
-      val out = s.read.parquet(s"$d/documents.parquet")
+      val out = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("doc_id"), graft.functions.MtldFold(tokens(col("text"))).as("f"))
         .select(col("doc_id"), col("f.n_tokens").as("n_tokens"),
           col("f.fcf").as("fcf"), col("f.fcb").as("fcb"))
@@ -1416,7 +1417,7 @@ object TextAnalysis {
   val heapsLaw: Q = Q(
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = ParquetCatalog.read(s, s"$d/documents.parquet")
       val maxRow = docs.agg(max(col("doc_id")).as("max_id"))
       val tok = docs.crossJoin(broadcast(maxRow))
         .select(least(lit(HeapsBuckets - 1),
@@ -1502,7 +1503,7 @@ object TextAnalysis {
   val countminHitters: Q = Q(
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val toks = s.read.parquet(s"$d/documents.parquet")
+      val toks = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(explode(tokens(col("text"))).as("t"))
       val cells = toks
         .select(explode(sequence(lit(0), lit(CmDepth - 1))).as("dep"), col("t"))
@@ -1628,7 +1629,7 @@ object TextAnalysis {
       val letters = length(t) - length(regexp_replace(t, "[A-Za-z]", ""))
       val digits = length(t) - length(regexp_replace(t, "[0-9]", ""))
       val spaces = length(t) - length(regexp_replace(t, "[ \\t\\n\\r]", ""))
-      val g = s.read.parquet(s"$d/documents.parquet")
+      val g = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("lang"), length(t).as("nc"),
           letters.as("nl"), digits.as("nd"), spaces.as("ns"))
         .groupBy("lang")
@@ -1686,7 +1687,7 @@ object TextAnalysis {
 
   val vocabCoverage: Q = Q(
     (s, d) => {
-      val counts = s.read.parquet(s"$d/documents.parquet")
+      val counts = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(explode(tokens(col("text"))).as("t"))
         .groupBy("t").agg(count(lit(1)).as("c"))
       // frequency rank via the two-phase globalRowNumber (a 10^9-type
@@ -1772,7 +1773,7 @@ object TextAnalysis {
       val stop = Seq("the", "of", "and", "to", "in", "is", "it", "a")
       val wDoc = Window.partitionBy("doc_id").orderBy("pos")
       val marked = graft.queries.Inventory.rebalanced(
-        s.read.parquet(s"$d/documents.parquet"), "doc_id")
+        ParquetCatalog.read(s, s"$d/documents.parquet"), "doc_id")
         .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "t")))
         .withColumn("stopf", when(col("t").isInCollection(stop), 1L).otherwise(0L))
         .withColumn("pid", sum(col("stopf")).over(wDoc))
@@ -1870,7 +1871,7 @@ object TextAnalysis {
   val jsdSources: Q = Q(
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val tok = s.read.parquet(s"$d/documents.parquet")
+      val tok = ParquetCatalog.read(s, s"$d/documents.parquet")
         .select(col("source"), explode(tokens(col("text"))).as("t"))
       val srcTok = tok.groupBy("source", "t").agg(count(lit(1)).as("c"))
         .withColumn("ns", sum(col("c")).over(Window.partitionBy("source")))

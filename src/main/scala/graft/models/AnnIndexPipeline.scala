@@ -143,8 +143,8 @@ object AnnIndexPipeline {
     val sink = new TableSink.ParquetUpsert(warehouse, Map(
       "ann_cells" -> Seq("vec_id"),
       "ann_pq_codes" -> Seq("vec_id", "blk")))
-    val cents = spark.read.parquet(s"$warehouse/ann_centroids")
-    val cb = spark.read.parquet(s"$warehouse/ann_pq_codebook")
+    val cents = ParquetCatalog.read(spark, s"$warehouse/ann_centroids")
+    val cb = ParquetCatalog.read(spark, s"$warehouse/ann_pq_codebook")
     val assigned = KMeans.assign(batch, cents).select("vec_id", "cluster")
     sink.write("ann_cells", assigned)
     // codes are cell-major: stamp the batch's fresh assignments on its
@@ -186,7 +186,7 @@ object AnnIndexPipeline {
         val r = run(s, d, cellMajorSink(wh.toString, pfx))
         require(r.allTestsPassed && r.skipped.isEmpty,
           s"index build gated: ${r.tests.filterNot(_.passed).mkString(", ")}")
-        val out = search(s.read.parquet(s"$d/embeddings.parquet"), r(_))
+        val out = search(ParquetCatalog.read(s, s"$d/embeddings.parquet"), r(_))
         // The result is bounded (NumQueries × TopK rows): materialize
         // it eagerly so the temp warehouse can be deleted HERE instead
         // of leaking one directory (and two catalog entries) per run —

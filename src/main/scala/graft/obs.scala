@@ -121,7 +121,7 @@ object obs {
     * private[spark] in source but public in bytecode — reflection keeps
     * this a dev-metrics concern with zero library-API footprint.
     */
-  private def drainListenerBus(sc: SparkContext): Unit =
+  private[graft] def drainListenerBus(sc: SparkContext): Unit =
     try {
       val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get.invoke(sc)
       bus.getClass.getMethods

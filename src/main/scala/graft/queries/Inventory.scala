@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, DecimalType, DoubleType, StringType}
 
 import graft.engine.Functions._
+import graft.engine.ParquetCatalog
 
 /** One verification query per operator of SURVEY.md §2, expressed over
   * the driver's harness tables (TESTDATA.md) with a DuckDB-runnable
@@ -26,7 +27,7 @@ object Inventory {
   final case class Q(build: (SparkSession, String) => DataFrame, oracle: Option[String])
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    ParquetCatalog.read(s, s"$dir/$name.parquet")
 
   /** The harness `events.ts` has shipped in three physical encodings so
     * far (ns-precision INT64 read as long under

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.engine.{Scratch, TableSink, Windows}
+import graft.engine.{ParquetCatalog, Scratch, TableSink, Windows}
 import graft.ext.{Clusters, Dedup, KMeans, Similarity}
 import graft.ext.KMeans.Route
 import graft.obs
@@ -336,12 +336,12 @@ object Legs {
     val scratch = java.nio.file.Files.createTempDirectory("graft-pairs")
     try {
       val b = obs.span("pairs postings_build") {
-        Dedup.shinglePostsDf(spark.read.parquet(s"$dir/documents.parquet"))
+        Dedup.shinglePostsDf(ParquetCatalog.read(spark, s"$dir/documents.parquet"))
           .write.mode("overwrite").parquet(s"$scratch/posts")
       }
       emit("pairs", "postings_build", b, "dir" -> dir,
         "shuffle_partitions" -> spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      val posts = spark.read.parquet(s"$scratch/posts")
+      val posts = ParquetCatalog.read(spark, s"$scratch/posts")
       def pick(sq: Double, n: Long) = Dedup.measuredRoute(sq, n).toString.toLowerCase
       if (legs("probe")) {
         val p = obs.span("pairs probe")(Dedup.pairSkewProbe(posts))
@@ -420,7 +420,7 @@ object Legs {
     val dir = args(0)
     val configs: Seq[(Int, Int)] = args(1).split("[;:]").toSeq
       .map { s => val Array(b, l) = s.split(","); (b.toInt, l.toInt) }
-    val raw = spark.read.parquet(s"$dir/embeddings.parquet")
+    val raw = ParquetCatalog.read(spark, s"$dir/embeddings.parquet")
     val n = raw.count()
     val c = obs.span("reband contract")(candidateCount(raw, Dedup.embPlanes))
     emit("reband", "contract_B4_L16_tau0.4", c, "rows" -> n, "candidates" -> c.value,
@@ -506,7 +506,7 @@ object Legs {
     val dir = args(0)
     val mode = args.lift(1).getOrElse("both")
     val emb = graft.queries.Inventory.rebalanced(
-      spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id")
+      ParquetCatalog.read(spark, s"$dir/embeddings.parquet"), "vec_id")
     val n = emb.count()
     val kFormula = KMeans.semdedupParams(n)
 
@@ -568,7 +568,7 @@ object Legs {
         val ids = emb.select(col("vec_id").as("doc_id"))
         val pairs = KMeans.semdedupPairs(KMeans.assignK(emb, kFormula))
           .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-        val docs = spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "n_chars")
+        val docs = ParquetCatalog.read(spark, s"$dir/documents.parquet").select("doc_id", "n_chars")
         noop(Clusters.keepBest(Clusters.connectedComponents(ids, pairs), docs))
       }
       val wh = java.nio.file.Files.createTempDirectory("graft-semdag")
@@ -594,7 +594,7 @@ object Legs {
   def funnel(args: Seq[String])(implicit spark: SparkSession): Unit = {
     val dir = args(0)
     val e = graft.queries.Inventory.rebalanced(
-      spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id")
+      ParquetCatalog.read(spark, s"$dir/embeddings.parquet"), "vec_id")
     val n = e.count()
     val tau = 0.85
     val planes = Dedup.rebandedPlanes(n, tau)
@@ -661,7 +661,7 @@ object Legs {
     */
   def substring(args: Seq[String])(implicit spark: SparkSession): Unit = {
     val dir = args(0)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = ParquetCatalog.read(spark, s"$dir/documents.parquet")
     // codegen warmup on a sliver of the same corpus
     val warm = docs.limit(1000)
     noop(Dedup.substringCleanDf(warm))
@@ -693,7 +693,7 @@ object Legs {
     val dir = args(0)
     val (rep, cells) = (16, 5)
     val e = graft.queries.Inventory.rebalanced(
-      spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id")
+      ParquetCatalog.read(spark, s"$dir/embeddings.parquet"), "vec_id")
     val codes = (0 until rep).map { r =>
       e.select((col("vec_id") + lit(r * 10000000L)).as("vec_id"), col("embedding"))
     }.reduce(_.unionByName(_))

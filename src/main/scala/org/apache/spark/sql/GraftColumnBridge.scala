@@ -6,8 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * library's custom Catalyst expressions (Spark 4 moved the public
   * `Column(expr)` constructor behind the Connect-compatible ColumnNode
   * layer; `classic.ExpressionUtils` is the sanctioned classic-mode
-  * path but is package-private). This object is the single place the
-  * library steps inside Spark's namespace.
+  * path but is package-private). This object and
+  * `execution.datasources.parquet.GraftParquetBridge` (footer schema
+  * reads for `graft.engine.ParquetCatalog.read`) are the only places
+  * the library steps inside Spark's namespace.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
